@@ -3,16 +3,7 @@ import org.apache.spark.sql.SparkSession
 object Bench {
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config("spark.sql.extensions", "graft.functions.GraftExtensions")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = session()
     // Warm every query's code path at the smallest scale factor before
     // timing: whole-stage-codegen class compilation and JIT of the
     // interpreted lambda evaluators are per-plan-shape session costs, not
@@ -42,215 +33,37 @@ object Bench {
           .limit(1000).groupBy("l_returnflag").count().count()
         spark.read.parquet(s"$sfDir/documents.parquet").limit(10).count()
       } catch { case _: Throwable => }
-    // Optional skip list (comma-separated names) for scaled stages where
-    // a deliberately-uncapped CONTROL query is known-quadratic (e.g. the
-    // 100x text stage): the driver's own runs leave this unset and time
-    // everything. Skips are RECORDED in the artifact — a silent cap
-    // would read as "covered everything".
-    val skip = sys.env.get("SPARK_GRAFT_BENCH_SKIP")
-      .map(_.split(",").map(_.trim).filter(_.nonEmpty).toSet)
-      .getOrElse(Set.empty[String])
-    // SPARK_GRAFT_BENCH_TRACE=1 — opt-in per-query stage timelines and
-    // in-flight thread dumps for slow queries (flaky-cliff forensics at
-    // the scaled stages); the driver's contract runs take the untraced
-    // path (no env, hooks no-op).
-    graft.tools.BenchTrace.install(spark)
     // Queries whose pass threw (exception swallowed so one bad query
     // doesn't kill the whole bench) — RECORDED in the artifact: an r15
-    // campaign session had a storage OOM kill the SparkContext at query
-    // 60/166, and the remaining 106 "measurements" were 5 ms dead-
-    // context no-ops that read as a fast clean pass ("breaches 0").
-    // A failed list in the artifact makes that session shape
-    // unmistakable; a stopped context aborts the bench outright below.
+    // session had a storage OOM kill the SparkContext at query 60/166,
+    // and the remaining 106 "measurements" were 5 ms dead-context no-ops
+    // that read as a fast clean pass. A failed list in the artifact makes
+    // that session shape unmistakable; a stopped context aborts the bench
+    // outright below.
     val failedQueries = scala.collection.mutable.LinkedHashSet.empty[String]
-    def runPass(): Seq[(String, Double)] = SparkEntry.queries.toSeq.sortBy(_._1)
-      .filter { case (name, _) => !skip.contains(name) }
-      .map { case (name, fn) =>
-        graft.tools.BenchTrace.begin(name)
-        val t0 = System.nanoTime()
-        // kept for the tracer's breach capture: the post-run executed
-        // plan (AQE-final) is the first thing the r12 hunt needed and
-        // the one thing a timeline alone cannot show
-        var df: org.apache.spark.sql.DataFrame = null
-        try { df = fn(spark, sfDir); df.count() }
-        catch { case _: Throwable => failedQueries += name }
-        val secs = (System.nanoTime() - t0) / 1e9
-        graft.tools.BenchTrace.end(name, secs, () =>
-          if (df == null) "<query failed before planning>"
-          else df.queryExecution.executedPlan.toString)
-        // Memory-sink hygiene OUTSIDE the timed window: this query's
-        // result is consumed (count above), so its driver-resident sink
-        // table is dead weight from here on. Retiring per stream query
-        // bounds live sink tables to ≤1 instead of ~15 families' worth
-        // — the standing residue behind the same-JVM streaming drift
-        // (r13 combo100 isolation probes; r15 campaign s05 pass 2).
-        if (name.startsWith("q_stream_"))
-          graft.streaming.Streaming.retireAll(spark)
-        if (spark.sparkContext.isStopped) {
-          // A dead context cannot run the remaining queries — every
-          // further number would be a no-op masquerading as a
-          // measurement. Fail LOUDLY: no artifact, nonzero exit, so a
-          // campaign script can never fold this session into a
-          // baseline.
-          System.err.println(
-            s"GRAFT-BENCH FATAL: SparkContext stopped during $name — aborting")
-          sys.exit(3)
-        }
-        name -> secs
+    val results = SparkEntry.queries.toSeq.sortBy(_._1).map { case (name, fn) =>
+      val t0 = System.nanoTime()
+      try fn(spark, sfDir).count()
+      catch { case _: Throwable => failedQueries += name }
+      val secs = (System.nanoTime() - t0) / 1e9
+      // Memory-sink hygiene OUTSIDE the timed window: this query's
+      // result is consumed (count above), so its driver-resident sink
+      // table is dead weight from here on. Retiring per stream query
+      // bounds live sink tables to ≤1 instead of ~15 families' worth —
+      // the standing residue behind the same-JVM streaming drift (r13
+      // combo100 isolation probes; r15 campaign s05 pass 2).
+      if (name.startsWith("q_stream_"))
+        graft.streaming.Streaming.retireAll(spark)
+      if (spark.sparkContext.isStopped) {
+        // A dead context cannot run the remaining queries — every
+        // further number would be a no-op masquerading as a
+        // measurement. Fail LOUDLY: no artifact, nonzero exit.
+        System.err.println(
+          s"GRAFT-BENCH FATAL: SparkContext stopped during $name — aborting")
+        sys.exit(3)
       }
-    // SPARK_GRAFT_BENCH_REPEAT=N (default 1, the driver's contract):
-    // run the timed loop N times in THIS JVM and record every pass in
-    // the artifact — the per-query spread between same-session passes
-    // is the bench's noise floor, the only baseline against which a
-    // round-over-round delta with no code change can be adjudicated
-    // (r6→r7 totals moved 1.14× on a byte-identical tree). The printed
-    // one-line summary and the compat `queries` map stay pass 1.
-    val repeat = sys.env.get("SPARK_GRAFT_BENCH_REPEAT")
-      .map(_.toInt).filter(_ >= 1).getOrElse(1)
-    // Host-state tripwire (r15 verdict #6): a fixed-work single-thread
-    // CPU spin and an fsync-latency probe (4 KB + force on /tmp, where
-    // spark.local.dir and the streaming landing zone live), run before
-    // and after the timed passes and recorded in the artifact. Both are
-    // code-independent, so a judge can adjudicate environmental
-    // inflation mechanically: the r15 official artifact read 1.6× the
-    // tree's own noise floor and took a night of SCALE.md
-    // cross-referencing to clear the code; the campaign-night episode
-    // probed fsync at 1.26 ms/call vs ~0.05 quiet.
-    // Each probe is individually guarded (r16 ADVICE): an IO failure in
-    // the POST-pass fsync probe (/tmp full, unwritable) must not throw
-    // away an ~18-minute session's timed measurements for a probe-only
-    // problem. A failed probe records the sentinel -1 in the artifact —
-    // still self-documenting (a judge reads "probe unavailable", not a
-    // fake quiet value).
-    def hostProbe(): (Double, Double) = {
-      val spin = try {
-        var x = 0x9E3779B97F4A7C15L
-        var i = 0L
-        val t0 = System.nanoTime()
-        while (i < (1L << 28)) {
-          x = java.lang.Long.rotateLeft(x * 0xBF58476D1CE4E5B9L, 31) ^ i
-          i += 1
-        }
-        val s = (System.nanoTime() - t0) / 1e9
-        if (x == 42L) System.err.println("") // keep the loop live
-        s
-      } catch { case _: Throwable => -1.0 }
-      val fsyncMs = try {
-        val f = java.io.File.createTempFile("graft_probe", ".bin",
-          new java.io.File("/tmp"))
-        try {
-          val ch = java.nio.channels.FileChannel.open(f.toPath,
-            java.nio.file.StandardOpenOption.WRITE)
-          try {
-            val buf = java.nio.ByteBuffer.allocate(4096)
-            val n = 50
-            val t1 = System.nanoTime()
-            var j = 0
-            while (j < n) {
-              buf.rewind(); ch.write(buf, 0); ch.force(true); j += 1
-            }
-            (System.nanoTime() - t1) / 1e6 / n
-          } finally ch.close()
-        } finally f.delete()
-      } catch { case _: Throwable => -1.0 }
-      (spin, fsyncMs)
+      name -> secs
     }
-    val (preSpin, preFsync) = hostProbe()
-    val allPasses = (1 to repeat).map(_ => runPass())
-    val (postSpin, postFsync) = hostProbe()
-    // Self-stamp (r16 verdict #1): downstream comparisons auto-exclude
-    // drifted artifacts instead of adjudicating them from prose. Quiet
-    // on this box reads fsync ~0.05 ms; every recorded drift episode
-    // probed fsync ≥0.23 ms — fsync is the discriminating signal. The
-    // spin's baseline is ~0.48 s (the r16 campaign's 20 artifacts read
-    // 0.46-0.65 across quiet AND io-drifted windows — the "~1.2 s
-    // quiet" once quoted in SCALE.md was itself a steal reading, as
-    // were the 1.27-2.06 s spins in the r15/r16 official captures), so
-    // the 0.65 default means "any spin above the campaign range is
-    // real CPU steal". Thresholds env-overridable for other hosts; a
-    // FAILED probe (-1 sentinel) stamps drifted — an unlabeled window
-    // must never read as quiet.
-    val quietFsyncMs = sys.env.get("SPARK_GRAFT_QUIET_FSYNC_MS")
-      .flatMap(_.toDoubleOption).getOrElse(0.15)
-    val quietSpinS = sys.env.get("SPARK_GRAFT_QUIET_SPIN_S")
-      .flatMap(_.toDoubleOption).getOrElse(0.65)
-    // Tri-state refinement (r17 verdict #2): ambient fsync on this host
-    // is 0.14-0.35 ms and never clears the 0.15 quiet gate, so the
-    // boolean stamped EVERY r17 capture drifted — including the one
-    // that set the floor — and auto-exclusion stopped discriminating.
-    // `host_state` separates ambient churn (valid capture, normal for
-    // this box) from real drift (steal/IO episodes); `drifted` keeps
-    // its exact old meaning (NOT quiet) for existing consumers.
-    val ambientFsyncMs = sys.env.get("SPARK_GRAFT_AMBIENT_FSYNC_MS")
-      .flatMap(_.toDoubleOption).getOrElse(0.5)
-    def state(spin: Double, fsync: Double): String = graft.tools.HostState
-      .classify(spin, fsync, quietFsyncMs, ambientFsyncMs, quietSpinS)
-    val hostState = graft.tools.HostState
-      .worst(state(preSpin, preFsync), state(postSpin, postFsync))
-    val drifted = hostState != "quiet"
-    def cmdOut(cmd: String*): Option[String] = try {
-      val p = new ProcessBuilder(cmd: _*).redirectErrorStream(true).start()
-      val out = new String(p.getInputStream.readAllBytes(),
-        java.nio.charset.StandardCharsets.UTF_8)
-      if (p.waitFor() == 0) Some(out) else None
-    } catch { case _: Throwable => None }
-    // Tree provenance for the floor min-merge (tools/floor_merge.py):
-    // the noise floor is the per-query min over every valid SAME-TREE
-    // capture, so each artifact records the git head it ran on and the
-    // merge tool refuses a mismatch. Benches routinely run with
-    // uncommitted timed-path edits (r17 ADVICE), which would stamp the
-    // PARENT commit of code that isn't the parent's — a "-dirty"
-    // suffix marks those so the merge tool can refuse them too. The
-    // dirty check is scoped to the timed path (src/main + build.sbt):
-    // the bench itself writes artifacts into the work tree, so an
-    // unscoped check would read dirty on every run by construction.
-    // Outside the timed windows; guarded like the probes — a missing
-    // git never costs the artifact.
-    val gitHead: String = {
-      val head = cmdOut("git", "rev-parse", "--short", "HEAD")
-        .map(_.trim).filter(h => h.nonEmpty && !h.contains("\n"))
-      val dirty = cmdOut("git", "status", "--porcelain",
-        "--", "src/main", "build.sbt").map(_.trim.nonEmpty)
-      (head, dirty) match {
-        case (Some(h), Some(true))  => s"$h-dirty"
-        case (Some(h), Some(false)) => h
-        case _                      => "unknown"
-      }
-    }
-    // The stronger same-tree invariant: a content hash of the timed
-    // path itself (every file under src/main plus build.sbt, walked in
-    // sorted path order, path + bytes). Two captures with equal
-    // `timed_path_sha` ran byte-identical query/bench code whatever
-    // their commit heads say — this is what "same tree" MEANS for a
-    // noise floor. Kills both provenance holes the r17 verdict/ADVICE
-    // flagged at once: docs-only commits move git_head every round
-    // (forcing cross-tree adjudication for code that didn't change),
-    // and dirty work trees stamp a head whose code they don't run.
-    // floor_merge.py matches on this when both sides carry it.
-    val timedPathSha: String = try {
-      val md = java.security.MessageDigest.getInstance("SHA-256")
-      val root = java.nio.file.Paths.get(".").toAbsolutePath.normalize
-      val files = {
-        import scala.jdk.CollectionConverters._
-        val src = java.nio.file.Paths.get("src/main")
-        val walked =
-          if (java.nio.file.Files.isDirectory(src))
-            java.nio.file.Files.walk(src).iterator().asScala
-              .filter(java.nio.file.Files.isRegularFile(_)).toSeq
-          else Seq.empty
-        (walked :+ java.nio.file.Paths.get("build.sbt"))
-          .filter(java.nio.file.Files.isRegularFile(_))
-          .sortBy(p => root.relativize(p.toAbsolutePath.normalize).toString)
-      }
-      files.foreach { p =>
-        md.update(root.relativize(p.toAbsolutePath.normalize).toString
-          .getBytes(java.nio.charset.StandardCharsets.UTF_8))
-        md.update(0.toByte)
-        md.update(java.nio.file.Files.readAllBytes(p))
-      }
-      md.digest().take(6).map("%02x".format(_)).mkString
-    } catch { case _: Throwable => "unknown" }
-    val results = allPasses.head
     // The harness keeps only the last ~2000 chars of the sbt output (and
     // sbt's own "[success] …" epilogue eats ~80 of them), so the JSON line
     // must stay under ~1.9 KB or it is truncated mid-line and never parses
@@ -342,70 +155,38 @@ object Bench {
     // set. Named per scale dir (BENCH_FULL_<dir>.json) so one bench run
     // at another stage can never clobber the sf0.1 trend file; the bare
     // BENCH_FULL.json stays as the sf0.1 copy for diff continuity.
-    val full = results.sortBy(_._1)
+    val full = results
       .map { case (k, v) => s"""  "$k": ${f3(v)}""" }
       .mkString("{\n", ",\n", "\n}")
-    val skipped = skip.toSeq.sorted.map("\"" + _ + "\"").mkString("[", ",", "]")
     val failed = failedQueries.toSeq.map("\"" + _ + "\"").mkString("[", ",", "]")
     val dirName = new java.io.File(sfDir).getName
-    // extra passes (repeat > 1): full per-pass maps, so the committed
-    // noise-floor artifact carries every query's same-session spread
-    val passesJson =
-      if (repeat <= 1) ""
-      else allPasses.zipWithIndex.drop(1).map { case (p, i) =>
-        val m = p.sortBy(_._1)
-          .map { case (k, v) => s"""  "$k": ${f3(v)}""" }
-          .mkString("{\n", ",\n", "\n}")
-        s""","total_pass${i + 1}":${f3(p.map(_._2).sum)},"queries_pass${i + 1}":$m"""
-      }.mkString
-    // Per-query drift normalization (r16 verdict #7): alongside each
-    // absolute, emit its ratio to the committed same-tree noise floor.
-    // BOTH sides are per-query minima across their artifact's passes —
-    // steady state vs steady state. Pass-1-vs-floor-min was tried
-    // first and produced false movers: warm-state queries (q_bpe_apply
-    // memoizes its merge table: p1 4.2 s, p2/p3 0.4-0.6 s, same shape
-    // in the floor) read 12x on pass 1 while their steady-state ratio
-    // sat at 1.2, inside the drift band. Mover tables then self-label
-    // — a uniform 1.3× band reads as drift, a lone 5× as a real mover
-    // — instead of needing adjudication prose. Floor path overridable;
-    // ratios only for the matching scale dir (a floor captured at
-    // sf0.1 says nothing about an ev100 stage). Guarded: a missing/
-    // malformed floor yields no block, never a lost artifact.
-    val floorPath = sys.env.getOrElse("SPARK_GRAFT_BENCH_FLOOR",
-      if (dirName == "sf0.1") "BENCH_NOISE.json" else "")
-    val floorJson: String = try {
-      if (floorPath.isEmpty || !new java.io.File(floorPath).isFile) ""
-      else {
-        val bytes = java.nio.file.Files
-          .readAllBytes(java.nio.file.Paths.get(floorPath))
-        val text = new String(bytes, java.nio.charset.StandardCharsets.UTF_8)
-        // sha of the floor FILE the ratios divide by: the gate merges
-        // each capture into the floor right after the artifact is
-        // written, so without this the committed artifact/floor pair
-        // silently disagrees (r17 ADVICE — the committed official read
-        // 0.979 vs a floor that post-merge gave 1.024)
-        val floorSha = java.security.MessageDigest.getInstance("SHA-256")
-          .digest(bytes).take(6).map("%02x".format(_)).mkString
-        val bestByQuery = allPasses.flatten.groupBy(_._1)
-          .map { case (k, vs) => k -> vs.map(_._2).min }.toSeq
-        graft.tools.BenchFloor
-          .block(floorPath, text, bestByQuery, bestByQuery.map(_._2).sum,
-            repeat, floorSha)
-          .getOrElse("")
-      }
-    } catch { case _: Throwable => "" }
     def writeArtifact(path: String): Unit = {
       val out = new java.io.PrintWriter(path)
       try out.println(
         s"""{"metric":"total","value":${f3(total)},"unit":"sec","sf":"$sfDir",
-           |"skipped":$skipped,"failed":$failed,
-           |"probe":{"pre_spin_s":${f3(preSpin)},"pre_fsync_ms":${f3(preFsync)},"post_spin_s":${f3(postSpin)},"post_fsync_ms":${f3(postFsync)}},
-           |"drifted":$drifted,"host_state":"$hostState","git_head":"$gitHead","timed_path_sha":"$timedPathSha",
-           |"queries":$full$passesJson$floorJson}""".stripMargin)
+           |"failed":$failed,
+           |"queries":$full}""".stripMargin)
       finally out.close()
     }
     writeArtifact(s"BENCH_FULL_$dirName.json")
     if (dirName == "sf0.1") writeArtifact("BENCH_FULL.json")
     spark.stop()
+  }
+
+  /** The one production session: Bench, Verify and every tool main build
+    * it here, so what they measure or dump is the optimizer the gate runs.
+    * `SPARK_GRAFT_CPUS` sets the core count and the shuffle partitions. */
+  def session(): SparkSession = {
+    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
+    val spark = SparkSession.builder()
+      .master(s"local[$cpus]")
+      .config("spark.sql.shuffle.partitions", cpus)
+      .config("spark.sql.session.timeZone", "UTC")
+      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
+      .config("spark.sql.extensions", "graft.functions.GraftExtensions")
+      .config("spark.ui.enabled", "false")
+      .getOrCreate()
+    spark.sparkContext.setLogLevel("WARN")
+    spark
   }
 }

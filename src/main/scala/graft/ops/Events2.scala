@@ -29,13 +29,13 @@ object Events2 {
     * join and their own 1-row count, so the planner re-runs each
     * stage's scan+aggregate per consumer (five events scans for three
     * stage filters in the executed plan) — but those re-scans are
-    * filtered, column-pruned reads of per-type slices, and the
-    * `FunnelAb` same-session A/B showed eager checkpoints LOSING at
-    * sf0.1 (0.63 vs 0.81 s) and a wash at the 100×-events stage
-    * (115 MB: 1.9 vs 2.0 s) — the three materialization jobs cost more
-    * than the recompute they avoid. The lazy shape stays the default;
-    * the flag stays so the probe (and a future genuinely scan-bound
-    * deployment) can flip it.
+    * filtered, column-pruned reads of per-type slices, and a
+    * same-session A/B (OPTIMIZATION_r19.md) showed eager checkpoints
+    * LOSING at sf0.1 (0.63 vs 0.81 s) and a wash at the 100×-events
+    * stage (115 MB: 1.9 vs 2.0 s) — the three materialization jobs cost
+    * more than the recompute they avoid. The lazy shape stays the
+    * default; the flag stays so a future genuinely scan-bound
+    * deployment can flip it.
     */
   def funnelOf(events: DataFrame, stages: Seq[String],
     checkpointStages: Boolean = false): DataFrame = {

@@ -42,7 +42,7 @@ object Graph {
     * edges, 32 concurrent unrolling tasks) that sat close enough to
     * the 32 g heap that scheduling noise tipped one session into a
     * storage-unroll OOM which killed the whole SparkContext
-    * (forensics/campaign_r15_aborted, s01). The cache keeps the same
+    * (SCALE.md §the bounded-shape cliff campaign, round 15). The cache keeps the same
     * replan-avoidance (Catalyst swaps in InMemoryRelation) with a
     * bounded 10 k-row unroll per batch.
     *
@@ -120,7 +120,7 @@ object Graph {
   }
 
   /** The gate query's LAZY plan (plan-inspectable — `PlanSpec` and
-    * `ExplainDump` read this; the gate entry materializes it): numeric
+    * `PlanDump` read this; the gate entry materializes it): numeric
     * node keys END-TO-END. A node is `partkey*2` (parts) or
     * `suppkey*2+1` (suppliers) — 8-byte join/agg keys through all three
     * iterations and a far smaller edge pin, decoded to the oracle's

@@ -108,7 +108,7 @@ object Relational4 {
     *
     * r14: the pinned repartition is ACTIVATION-BOUNDED — `parts ×
     * [[activationWaves]]` instead of `parts`. The 12-session r14 cliff
-    * campaign (SCALE.md §round-14, forensics/campaign_r14/) closed this
+    * campaign (SCALE.md §round-14) closed this
     * query's intermittent 48–207 s stalls: JIT **activation-level tier
     * starvation** — the fused aggregate loop is entered once per task,
     * a running activation can only upgrade via OSR entry, and after a
@@ -140,7 +140,7 @@ object Relational4 {
     // built against it. Knob: `spark.graft.resample.fastMapOff`
     // (flows in via -Dspark.graft.resample.fastMapOff=… like any
     // spark.* property). Adjudicated by the r16 alternating-arm ev100
-    // campaign (SCALE.md §round-16, forensics/campaign_r16/): default
+    // campaign (SCALE.md §round-16): default
     // stays FALSE — cluster executors (few cores per JVM, file-split-
     // bounded activations) never hit the starvation precondition and
     // keep the fast map's ~2.1× win on this aggregate; single-JVM
@@ -189,7 +189,7 @@ object Relational4 {
   /** Memoized child session carrying the shared-map flip for
     * [[qEventResample]] (one per parent session, r16 ADVICE — a fresh
     * `newSession()` per call builds a new SessionState/catalog each
-    * time, which accumulates under `SPARK_GRAFT_BENCH_REPEAT` or
+    * time, which accumulates over repeated passes in one JVM or
     * repeated interactive calls). Weak keys: the cache must not pin a
     * stopped parent session.
     *

@@ -301,7 +301,8 @@ object Robust {
   /** [[qWinsorize]] over any frame: clamp `value` to the group's
     * [pLo, pHi] percentiles (whole-percent ranks, exact). Both shapes
     * (see [[SingleScanBytes]]) produce identical rows — `RobustSpec`
-    * and the `RobustAb` probe pin the equality.
+    * pins the equality (the A/B of the two shapes is recorded in
+    * OPTIMIZATION_r19.md).
     */
   def winsorize(df: DataFrame, group: Column, value: Column,
     pLo: Int, pHi: Int, singleScan: Boolean = true): DataFrame = {

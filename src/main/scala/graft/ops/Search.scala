@@ -329,8 +329,8 @@ object Search {
     * partition keeps only its k best rows per source BEFORE the
     * exchange, so the shuffle carries O(partitions·k) rows per stratum
     * and no task ever sorts a whole source, even with few sources at
-    * 100 TB. Plan-pinned in `AggregatorSpec`; `graft.tools.TopKProbe`
-    * measures it flat 1×→500× on a single hot stratum, matching the
+    * 100 TB. Plan-pinned in `AggregatorSpec`; measured flat 1×→500× on
+    * a single hot stratum (SCALE.md §per-group top-k audit), matching the
     * hand-built bounded Aggregator within noise — the declarative form
     * wins because the optimizer already implements the bounded-heap
     * shape without the typed-encoding cost (1.7 s vs 3.3 s at the 100×

@@ -75,9 +75,10 @@ object Skew {
     saltedJoin(spark, dir, "shuffle_hash")
 
   /** [[qSaltedJoin]]'s body, parameterized on the dim-side join hint so
-    * diagnostics (`JoinDiag`) measure the SAME query the gate runs under
-    * alternative strategies instead of re-implementing it inline (ADVICE
-    * r11) — the gate shape is the `shuffle_hash` instantiation above.
+    * a strategy comparison measures the SAME query the gate runs instead
+    * of re-implementing it inline (the r11 diagnosis is in SCALE.md
+    * §q_salted_join's pass-1 tail) — the gate shape is the
+    * `shuffle_hash` instantiation above.
     */
   def saltedJoin(spark: SparkSession, dir: String, hint: String): DataFrame = {
     val o = Tables.orders(spark, dir)

@@ -216,7 +216,8 @@ object Text {
     * candidate bigrams per lang before the exchange, so a language's
     * whole bigram vocabulary (billions of types at corpus scale) is
     * never sorted in one task — plan-pinned in `AggregatorSpec`,
-    * measured flat under stratum replication by `graft.tools.TopKProbe`.
+    * measured flat under stratum replication (SCALE.md §per-group top-k
+    * audit).
     */
   def qNgramTop(spark: SparkSession, dir: String): DataFrame = {
     import org.apache.spark.sql.expressions.Window
@@ -268,8 +269,8 @@ object Text {
     * HashedRelation built single-threaded on the driver, with the df
     * probe side coalesced to one partition, so the join AND the per-doc
     * window run in a single task. Measured at the combined 100× stage:
-    * 7.7 s normal vs 29–41 s flipped (intermittent, ~half of runs);
-    * plan captured via `PerfProbe` GRAFT_PERF_PLANS. Same class as the
+    * 7.7 s normal vs 29–41 s flipped (intermittent, ~half of runs;
+    * SCALE.md §the combined 100× stage, round 12). Same class as the
     * salted join's r11 fix (`ops/Skew.scala`). shuffle_hash builds the
     * vocab side per partition — the shape that also holds when real
     * vocabularies outgrow any broadcast budget. `TextPlanSpec` pins it.

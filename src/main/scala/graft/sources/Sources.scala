@@ -276,8 +276,8 @@ object Sources {
     * the exchange-free join it demonstrates. Now both tables go through
     * the same content-fingerprinted publish-once mechanism as the
     * z-order/IVF layouts ([[stagedBucketedTable]]): the first run per
-    * data fingerprint pays the layout (a self-labeling staging pass —
-    * `BenchTrace` demotes its SLO breach), every later run measures the
+    * data fingerprint pays the layout (a one-time staging pass; SCALE.md
+    * §round 15 records one at 7.8 s), every later run measures the
     * bucket-to-bucket join itself.
     */
   def qBucketedJoin(spark: SparkSession, dir: String): DataFrame = {
@@ -434,21 +434,6 @@ object Sources {
       .getOrElse(src.length)
   }
 
-  /** Count of layout stagings this JVM actually PERFORMED (the write
-    * ran; a `_SUCCESS`-satisfied probe or a sibling awaiting another
-    * caller's write does not count), plus the last staged output path.
-    * `BenchTrace` snapshots the counter around each timed query: a pass
-    * that paid a staging write is first-pass cost by construction (a
-    * fresh content fingerprint always stages exactly once), so its SLO
-    * breach is demoted to an annotated staging notice instead of a
-    * cliff — r14 verdict directive 3 (the campaign's s01 printed
-    * `q_zorder_scan@1 = 7.8 s` under a fresh fingerprinted layout path
-    * as a cliff-SLO breach).
-    */
-  private[graft] val stagingsPerformed =
-    new java.util.concurrent.atomic.AtomicLong(0)
-  @volatile private[graft] var lastStagedOut: String = ""
-
   private def publishLayoutOnce(out: String)(write: String => Unit): Unit = {
     import java.nio.file.{Files, Paths, StandardCopyOption, StandardOpenOption}
     val outPath = Paths.get(out)
@@ -456,11 +441,6 @@ object Sources {
     if (complete) return
     val tmp = out + ".stage-" + java.util.UUID.randomUUID().toString.take(8)
     write(tmp)
-    // this JVM paid the staging write (even if another JVM wins the
-    // publish race below) — record it for BenchTrace's staging-pass
-    // demotion of SLO breaches
-    stagingsPerformed.incrementAndGet()
-    lastStagedOut = out
     val ch = java.nio.channels.FileChannel.open(Paths.get(out + ".lock"),
       StandardOpenOption.CREATE, StandardOpenOption.WRITE)
     try {
@@ -493,7 +473,8 @@ object Sources {
     * outside the box rectangle — is pinned by `ZOrderSpec` on BOTH this
     * gate query's own leaf metrics (rows actually produced by the scan)
     * and a round-robin control layout (~10× more rows read), and the
-    * plan's `PushedFilters` line is in PLANS.md.
+    * plan's `PushedFilters` line shows in `graft.tools.PlanDump`'s
+    * formatted plan.
     */
   def qZOrderScan(spark: SparkSession, dir: String): DataFrame = {
     import org.apache.spark.sql.types.DecimalType

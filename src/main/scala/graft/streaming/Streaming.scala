@@ -207,7 +207,7 @@ object Streaming {
     // (Complete/Update sinks, immediate-emit dedup/inner-join), so the
     // engine's watermark-advance no-data batch does zero useful work —
     // yet it re-commits EVERY state store (measured on the sf0.1
-    // full-join via ProgressProbe: batches 1 and 3 carry 0 input rows
+    // full-join, OPTIMIZATION_r18.md: batches 1 and 3 carry 0 input rows
     // and 5.7 s / 3.4 s of trigger time, ~40% of the query — pure
     // store-commit overhead, and it grows with the state partition
     // count at the scaled stages). Timers and evictions fire in ANY
@@ -312,11 +312,11 @@ object Streaming {
     lastMemTable.clear()
   }
 
-  /** When non-null (set only by `graft.tools.ExplainDump`), every
+  /** When non-null (set only by `graft.tools.PlanDump`), every
     * streaming runner deposits its query's LAST EXECUTED micro-batch
     * physical plan here (keyed by the memory-sink query name) just
     * before handing back the result — the hook that gets streaming
-    * plans into PLANS.md. A streaming frame has no `queryExecution`
+    * plans into the plan dump. A streaming frame has no `queryExecution`
     * until a micro-batch actually plans it (watermarks and stateful
     * operators only materialize inside `IncrementalExecution`), so the
     * dump has to ride an actual run; gate/bench runs leave this null
@@ -324,22 +324,6 @@ object Streaming {
     */
   @volatile private[graft] var planSink:
     java.util.concurrent.ConcurrentHashMap[String, String] = null
-
-  /** Like [[planSink]] but for the engine's own per-batch metrics
-    * (`StreamingQueryProgress.json`: durationMs breakdown, state
-    * operator update/commit/removal times, rows/s) — the instrument
-    * that turns "this lane is slow at 100×" into "THIS phase of it is"
-    * (set by `graft.tools.ProgressProbe`; null in gate/bench runs).
-    */
-  @volatile private[graft] var progressSink:
-    java.util.concurrent.ConcurrentHashMap[String, Seq[String]] = null
-
-  private[graft] def recordProgress(
-    q: org.apache.spark.sql.streaming.StreamingQuery): Unit = {
-    val sink = progressSink
-    if (sink != null)
-      sink.put(q.name, q.recentProgress.toSeq.map(_.json))
-  }
 
   /** Capture `q`'s last micro-batch plan into [[planSink]] via the
     * public `StreamingQuery.explain` (prints the FORMATTED physical
@@ -349,7 +333,6 @@ object Streaming {
     */
   private[graft] def recordPlan(
     q: org.apache.spark.sql.streaming.StreamingQuery): Unit = {
-    recordProgress(q)
     val sink = planSink
     if (sink != null) {
       val buf = new java.io.ByteArrayOutputStream()

@@ -1,7 +1,5 @@
 package graft.tools
 
-import org.apache.spark.sql.SparkSession
-
 /** Prints [[graft.plans.JoinPinAudit]]'s findings for every batch gate
   * query — the human-readable form of what `JoinPinAuditSpec` asserts.
   * Usage: runMain graft.tools.PinAuditReport [sfDir]
@@ -9,14 +7,7 @@ import org.apache.spark.sql.SparkSession
 object PinAuditReport {
   def main(args: Array[String]): Unit = {
     val dir = args.headOption.getOrElse("/root/testdata/sf0.001")
-    val spark = SparkSession.builder()
-      .master("local[4]")
-      .config("spark.sql.shuffle.partitions", "4")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config("spark.sql.extensions", "graft.functions.GraftExtensions")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
+    val spark = graft.Bench.session()
     spark.sparkContext.setLogLevel("ERROR")
     val all = graft.plans.JoinPinAudit.auditAll(spark, dir)
     all.toSeq.sortBy(_._1).foreach { case (_, fs) =>

@@ -1,7 +1,5 @@
 package graft.tools
 
-import org.apache.spark.sql.SparkSession
-
 /** Head-to-head throughput on the reference's OWN corpora (read-only at
   * /root/reference): word count and grep over the 8-file integration
   * corpus (~32 KB) and word count over the 4-file large corpus
@@ -18,12 +16,7 @@ import org.apache.spark.sql.SparkSession
 object RefBench {
   def main(args: Array[String]): Unit = {
     val refData = args.headOption.getOrElse("/root/reference/tests/testdata")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
+    val spark = graft.Bench.session()
     spark.sparkContext.setLogLevel("ERROR")
 
     def time(tag: String, budget: String)(f: => Long): Unit = {

@@ -1,6 +1,6 @@
 package graft.tools
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 
 /** Scaling-behavior probe for the dedup pipelines: union the documents
@@ -16,23 +16,15 @@ import org.apache.spark.sql.functions._
 object ScaleProbe {
   def main(args: Array[String]): Unit = {
     val sfDir = args.headOption.getOrElse("/root/testdata/sf0.1")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config("spark.sql.extensions", "graft.functions.GraftExtensions")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = graft.Bench.session()
+    val cpus = spark.sparkContext.defaultParallelism
 
     def scaled(k: Int): DataFrame = {
       val base = graft.Tables.documents(spark, sfDir)
       val n = base.count()
       (0 until k).map { i =>
         base.withColumn("doc_id", col("doc_id") + lit(i * n))
-      }.reduce(_ union _).repartition(cpus.toInt)
+      }.reduce(_ union _).repartition(cpus)
     }
 
     // same pipeline bodies as Dedup.{qDedupMinhash,qDedupSimhash,
@@ -115,7 +107,7 @@ object ScaleProbe {
       val n = base.count()
       (0 until k).map { i =>
         base.withColumn("vec_id", col("vec_id") + lit(i * n))
-      }.reduce(_ union _).repartition(cpus.toInt)
+      }.reduce(_ union _).repartition(cpus)
     }
     graft.functions.GraftFunctions.ensureRegistered(spark)
     Seq(1, 4, 10).foreach { k =>
@@ -174,7 +166,7 @@ object ScaleProbe {
         base.withColumn("vec_id", col("vec_id") + lit(i * n))
           .withColumn("embedding", expr(
             s"transform(embedding, (x, p) -> CAST(x + 0.03 * (pmod(vec_id * 31 + $i * 17 + p * 7, 13) - 6) AS FLOAT))"))
-      }.reduce(_ union _).repartition(cpus.toInt)
+      }.reduce(_ union _).repartition(cpus)
     }
     def candCount(e: DataFrame, tables: Int, bits: Int): Long = {
       val v = graft.ops.Sim.withBuckets(e, tables, bits)
@@ -212,7 +204,7 @@ object ScaleProbe {
       (0 until k).map { i =>
         base.withColumn("vec_id", col("vec_id") + lit(i * stride))
           .withColumn("label", col("label") + lit(i * 10))
-      }.reduce(_ union _).repartition(cpus.toInt)
+      }.reduce(_ union _).repartition(cpus)
     }
     val nBaseEmb2 = graft.Tables.embeddings(spark, sfDir).count()
     Seq(1, 4, 10).foreach { k =>
@@ -250,7 +242,7 @@ object ScaleProbe {
           substring(md5(concat(col("w"), lit(s"-$i-0"))), 1, 7), lit("z"))
           .as("name"))
       }.reduce(_ union _)
-      n.union(planted).repartition(cpus.toInt)
+      n.union(planted).repartition(cpus)
     }
     Seq(1, 4, 10).foreach { k =>
       val nm = fuzzyNames(k).cache()
@@ -335,7 +327,7 @@ object ScaleProbe {
     Seq(1, 4, 10).foreach { k =>
       val toks = (0 until k)
         .map(_ => graft.ops.HeavyHitters.corpusTokens(spark, sfDir))
-        .reduce(_ union _).repartition(cpus.toInt).cache()
+        .reduce(_ union _).repartition(cpus).cache()
       toks.count()
       var rows = -1L
       time(s"heavy hitters ${k}x") {

@@ -50,8 +50,8 @@ class AggregatorSpec extends SparkTestBase {
     // partial WindowGroupLimit keeps <= k candidates per map partition
     // per group before the exchange, so no task ever sorts a whole
     // stratum — the property a hand-built bounded Aggregator would buy,
-    // without its typed-encoding cost (measured: graft.tools.TopKProbe,
-    // flat 1x->500x on a single hot stratum). If an operator change or
+    // without its typed-encoding cost (measured flat 1x->500x on a
+    // single hot stratum; SCALE.md §per-group top-k audit). If an operator change or
     // a Spark upgrade ever drops the pushdown, this pin fails and the
     // query must move to the TopKAggregator shape.
     for (q <- Seq("q_sample_weighted", "q_ngram_top")) {
