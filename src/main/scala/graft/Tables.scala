@@ -40,7 +40,7 @@ object Tables {
 
   def load(spark: SparkSession, dir: String, name: String): DataFrame = {
     tune(spark)
-    spark.read.parquet(s"$dir/$name.parquet")
+    graft.sources.Sources.readParquet(spark, s"$dir/$name.parquet")
   }
 
   def lineitem(spark: SparkSession, dir: String): DataFrame = load(spark, dir, "lineitem")

@@ -64,15 +64,15 @@ object Bpe {
     * SHIPS alongside the corpus — training happens once, application is
     * the only corpus-scale pass. Memoizing here makes the two gate
     * queries honor that contract: `q_bpe_merges` trains, `q_bpe_apply`
-    * consumes the same table instead of re-running the loop.
+    * consumes the same table instead of re-running the loop. The memo
+    * is `Sources.stageOnceInJvm`'s, so the training runs outside any
+    * map-bin lock and a failed training is not memoized.
     */
-  private val trainedMemo =
-    new java.util.concurrent.ConcurrentHashMap[String, Array[(Long, String, String, Long)]]()
-
   private def trainedMerges(spark: SparkSession, dir: String): Array[(Long, String, String, Long)] =
-    trainedMemo.computeIfAbsent(dir, _ =>
+    graft.sources.Sources.stageOnceInJvm(s"bpe-merges:$dir") {
       bpeMergesOf(Tables.documentsSpread(spark, dir), BpeIterations).collect()
-        .map(r => (r.getLong(0), r.getString(1), r.getString(2), r.getLong(3))))
+        .map(r => (r.getLong(0), r.getString(1), r.getString(2), r.getLong(3)))
+    }
 
   def qBpeMerges(spark: SparkSession, dir: String): DataFrame = {
     import spark.implicits._

@@ -147,9 +147,6 @@ object Relational7 {
       .orderBy("l_returnflag")
   }
 
-  private val partStaged =
-    java.util.concurrent.ConcurrentHashMap.newKeySet[String]()
-
   /** Partition pruning end-to-end: write documents partitioned by lang
     * (the at-rest layout), read back with a partition-column filter —
     * the scan lists only the lang=en directory (PartitionFilters in the
@@ -159,10 +156,11 @@ object Relational7 {
   def qPartitionPruning(spark: SparkSession, dir: String): DataFrame = {
     val out = new java.io.File(sys.props("java.io.tmpdir"),
       "graft_part_docs_" + dir.replaceAll("[^a-zA-Z0-9]", "_")).getAbsolutePath
-    if (partStaged.add(out))
+    graft.sources.Sources.stageOnceInJvm(s"$dir->$out") {
       Tables.documents(spark, dir)
         .write.mode("overwrite").partitionBy("lang").parquet(out)
-    spark.read.parquet(out)
+    }
+    graft.sources.Sources.readParquet(spark, out)
       .filter(col("lang") === "en")
       .groupBy(col("source"))
       .agg(count(lit(1)).as("n_docs"),

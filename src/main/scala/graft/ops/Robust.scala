@@ -44,8 +44,9 @@ object Robust {
     */
   val SingleScanBytes: Long = 64L << 20
 
-  private def singleScanFor(dir: String, table: String): Boolean =
-    graft.sources.Sources.sourceFileBytes(dir, table) >= SingleScanBytes
+  private def singleScanFor(spark: SparkSession, dir: String,
+    table: String): Boolean =
+    graft.sources.Sources.sourceFileBytes(spark, dir, table) >= SingleScanBytes
 
   /** Per-event-type z-score outlier counts over the events stream:
     * flags rows with `|value − μ| > 2σ` (population σ).
@@ -61,7 +62,7 @@ object Robust {
     */
   def qEventZscore(spark: SparkSession, dir: String): DataFrame =
     zscoreOutliers(Tables.events(spark, dir), col("event_type"),
-      col("value"), singleScan = singleScanFor(dir, "events.parquet"))
+      col("value"), singleScan = singleScanFor(spark, dir, "events.parquet"))
 
   /** [[qEventZscore]] over any frame: group column + 2-decimal value.
     *
@@ -164,7 +165,7 @@ object Robust {
   def qWinsorize(spark: SparkSession, dir: String): DataFrame =
     winsorize(Tables.lineitem(spark, dir), col("l_returnflag"),
       col("l_extendedprice"), 1, 99,
-      singleScan = singleScanFor(dir, "lineitem.parquet"))
+      singleScan = singleScanFor(spark, dir, "lineitem.parquet"))
 
   /** Exact per-group cumulative counts over the distinct values of a
     * 2-decimal column, as a DISTRIBUTED two-level prefix sum: a plain
@@ -370,7 +371,7 @@ object Robust {
   def qFeatureBinning(spark: SparkSession, dir: String): DataFrame =
     featureBins(Tables.lineitem(spark, dir), col("l_returnflag"),
       col("l_extendedprice"),
-      singleScan = singleScanFor(dir, "lineitem.parquet"))
+      singleScan = singleScanFor(spark, dir, "lineitem.parquet"))
 
   /** [[qFeatureBinning]] over any frame: per-group decile audit. Both
     * shapes (see [[SingleScanBytes]]) produce identical rows.

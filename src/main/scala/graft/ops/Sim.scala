@@ -258,7 +258,7 @@ object Sim {
       .collect().map(_.getLong(0)).toSeq
     val qdf = broadcast(e.filter(col("vec_id") === 0)
       .select(col("embedding").as("q_emb")))
-    spark.read.parquet(out)
+    graft.sources.Sources.readParquet(spark, out)
       .filter(col("assigned").isin(probes: _*) && col("vec_id") =!= 0)
       .crossJoin(qdf)
       .select(col("vec_id"),

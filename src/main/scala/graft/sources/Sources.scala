@@ -101,12 +101,9 @@ object Sources {
     */
   def compactParquet(spark: SparkSession, inDir: String, outDir: String,
     targetFileBytes: Long): Int = {
-    val path = new org.apache.hadoop.fs.Path(inDir)
-    val fs = path.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    val total = fs.listStatus(path)
-      .filter(_.getPath.getName.endsWith(".parquet")).map(_.getLen).sum
+    val total = dataFiles(spark, inDir).map(_.getLen).sum
     val n = math.max(1, math.ceil(total.toDouble / targetFileBytes).toInt)
-    spark.read.parquet(inDir).repartition(n)
+    readParquet(spark, inDir).repartition(n)
       .write.mode(SaveMode.Overwrite).parquet(outDir)
     n
   }
@@ -302,10 +299,11 @@ object Sources {
       .orderBy("o_orderpriority")
   }
 
-  private val zOrderStaged = new java.util.concurrent.ConcurrentHashMap[
-    String, java.util.concurrent.CompletableFuture[Unit]]()
+  private val stagedKeys = new java.util.concurrent.ConcurrentHashMap[
+    String, java.util.concurrent.CompletableFuture[Any]]()
 
-  /** Same-JVM staging memo: the first caller for a key installs a
+  /** Same-JVM staging memo, shared by every staged layout and landing
+    * zone: the first caller for a key installs a
     * future via `putIfAbsent` and runs the (multi-minute) layout write
     * OUTSIDE the map's bin lock; siblings — including callers for
     * unrelated keys that happen to hash to the same bin, who would have
@@ -317,26 +315,29 @@ object Sources {
     * through `putIfAbsent` and retry — exactly as a `computeIfAbsent`
     * waiter would have re-entered the mapping function (r13 ADVICE fix;
     * previously waiters fail-fasted with a wrapped CompletionException).
+    * The staging's result is memoized with it (a staged zone's `max(ts)`
+    * is a property of the staged files), so every caller gets the
+    * value the one successful staging computed.
     */
-  private[sources] def stageOnceInJvm(key: String)(stage: => Unit): Unit = {
-    while (true) {
-      val fut = new java.util.concurrent.CompletableFuture[Unit]()
-      val prior = zOrderStaged.putIfAbsent(key, fut)
-      if (prior == null) {
-        try { stage; fut.complete(()) }
-        catch { case e: Throwable =>
-          zOrderStaged.remove(key, fut)
-          fut.completeExceptionally(e)
-          throw e
-        }
-        return
-      } else
-        try { prior.join(); return }
-        catch { case _: java.util.concurrent.CompletionException =>
-          // the staging we awaited failed; its owner already removed
-          // the memo entry, so retry — we may become the new owner
-        }
-    }
+  private[graft] def stageOnceInJvm[T](key: String)(stage: => T): T = {
+    val fut = new java.util.concurrent.CompletableFuture[Any]()
+    val prior = stagedKeys.putIfAbsent(key, fut)
+    if (prior == null) {
+      val v = try stage
+      catch { case e: Throwable =>
+        stagedKeys.remove(key, fut)
+        fut.completeExceptionally(e)
+        throw e
+      }
+      fut.complete(v)
+      v
+    } else
+      try prior.join().asInstanceOf[T]
+      catch { case _: java.util.concurrent.CompletionException =>
+        // the staging we awaited failed; its owner already removed
+        // the memo entry, so retry — we may become the new owner
+        stageOnceInJvm(key)(stage)
+      }
   }
 
   /** Publish a derived at-rest layout at `out` exactly once, safely
@@ -418,8 +419,11 @@ object Sources {
     } catch { case _: java.io.IOException => 0 }
   }
 
-  /** Summed on-disk bytes of `dir/table` (a parquet file or a directory
-    * of part files) — the deterministic input for
+  /** Summed bytes of the data files under `dir/table` (a parquet file
+    * or a directory of part files, listed as [[readParquet]] lists
+    * them, through the Hadoop `FileSystem` so `hdfs://` and `s3://`
+    * paths size correctly; 0 for a missing path) — the deterministic
+    * input for
     * [[graft.ops.Relational4.activationWaves]] (r15 ADVICE: the
     * previous input, `optimizedPlan.stats.sizeInBytes`, shifts with
     * session conf such as `fileCompressionFactor` and falls back to a
@@ -427,11 +431,92 @@ object Sources {
     * 8-wave cap — correctness-neutral but environment-dependent plan
     * shape). File bytes are a pure function of the staged data.
     */
-  def sourceFileBytes(dir: String, table: String): Long = {
-    val src = new java.io.File(dir, table)
-    Option(src.listFiles())
-      .map(_.filter(_.isFile).map(_.length).sum)
-      .getOrElse(src.length)
+  def sourceFileBytes(spark: SparkSession, dir: String, table: String): Long =
+    try dataFiles(spark, s"$dir/$table").map(_.getLen).sum
+    catch { case _: java.io.FileNotFoundException => 0L }
+
+  /** The files Spark's file index lists under a parquet `path`, sorted
+    * by path: the path itself if it is a file, else every file below
+    * it, skipping `_`- and `.`-prefixed names except `k=v` partition
+    * directories and the `_metadata` / `_common_metadata` summaries
+    * (`HadoopFSUtils.shouldFilterOutPathName`'s rule). Listed through
+    * the Hadoop `FileSystem`, so it works on any filesystem Spark
+    * reads; a missing path throws `FileNotFoundException`.
+    */
+  private def leafFiles(spark: SparkSession, path: String)
+    : Seq[org.apache.hadoop.fs.FileStatus] = {
+    import org.apache.hadoop.fs.{FileStatus, Path}
+    val root = new Path(path)
+    val fs = root.getFileSystem(spark.sparkContext.hadoopConfiguration)
+    def listed(name: String) =
+      !((name.startsWith("_") && !name.contains("=")) || name.startsWith(".") ||
+        name.endsWith("._COPYING_")) ||
+        name.startsWith("_common_metadata") || name.startsWith("_metadata")
+    def walk(st: FileStatus): Seq[FileStatus] =
+      if (!st.isDirectory) Seq(st)
+      else fs.listStatus(st.getPath).toSeq
+        .filter(c => listed(c.getPath.getName)).flatMap(walk)
+    walk(fs.getFileStatus(root)).sortBy(_.getPath.toString)
+  }
+
+  private val summaryFiles = Set("_common_metadata", "_metadata")
+
+  private def dataFiles(spark: SparkSession, path: String) =
+    leafFiles(spark, path).filterNot(f => summaryFiles(f.getPath.getName))
+
+  /** Read a parquet path, taking its schema from one footer read on the
+    * driver. `spark.read.parquet(path)` infers the schema with a
+    * one-task Spark job (`mergeSchemasInParallel`) even with schema
+    * merging off, when a single footer decides it: one job per table
+    * read, inside every query builder. This reads the footer that
+    * inference would pick (`_common_metadata`, else `_metadata`, else
+    * the first data file in path order — `ParquetUtils.inferSchema`'s
+    * rule), without its row groups, and takes the schema Spark would
+    * take from it: the Spark row-metadata JSON when present, else the
+    * parquet schema converted under the session's `binaryAsString`,
+    * `int96AsTimestamp`, `nanosAsLong` and `inferTimestampNTZ`
+    * settings. Spark still lists the files and infers partition
+    * columns from `k=v` directories, so the relation and its plans
+    * are unchanged and no job runs. Falls back to plain
+    * `spark.read.parquet` when schema merging is on or no footer can be
+    * read (missing path, empty directory, corrupt file), so Spark's own
+    * behaviour and errors surface unchanged.
+    */
+  def readParquet(spark: SparkSession, path: String): DataFrame =
+    footerSchema(spark, path) match {
+      case Some(schema) => spark.read.schema(schema).parquet(path)
+      case None => spark.read.parquet(path)
+    }
+
+  private def footerSchema(spark: SparkSession, path: String)
+    : Option[org.apache.spark.sql.types.StructType] = spark match {
+    case s: org.apache.spark.sql.classic.SparkSession
+        if !s.sessionState.conf.isParquetSchemaMergingEnabled =>
+      import org.apache.parquet.format.converter.ParquetMetadataConverter
+      import org.apache.parquet.hadoop.util.HadoopInputFile
+      import org.apache.spark.sql.execution.datasources.parquet.{ParquetFooterReader, ParquetToSparkSchemaConverter}
+      import org.apache.spark.sql.types.{DataType, StructType}
+      try {
+        val leaves = leafFiles(spark, path)
+        def named(n: String) = leaves.find(_.getPath.getName == n)
+        named("_common_metadata").orElse(named("_metadata"))
+          .orElse(leaves.find(f => !summaryFiles(f.getPath.getName)))
+          .flatMap { f =>
+            val meta = ParquetFooterReader.readFooter(
+              HadoopInputFile.fromStatus(f, spark.sparkContext.hadoopConfiguration),
+              ParquetMetadataConverter.SKIP_ROW_GROUPS).getFileMetaData
+            Option(meta.getKeyValueMetaData.get(
+                "org.apache.spark.sql.parquet.row.metadata")) match {
+              // a row-metadata string that is not JSON takes Spark's
+              // legacy-format parser: leave it to the fallback
+              case Some(json) => scala.util.Try(
+                DataType.fromJson(json).asInstanceOf[StructType]).toOption
+              case None => Some(new ParquetToSparkSchemaConverter(
+                s.sessionState.conf).convert(meta.getSchema))
+            }
+          }
+      } catch { case scala.util.control.NonFatal(_) => None }
+    case _ => None
   }
 
   private def publishLayoutOnce(out: String)(write: String => Unit): Unit = {
@@ -488,7 +573,7 @@ object Sources {
     }
     val r = base.agg(max("l_partkey"), max("l_suppkey")).head()
     val (maxP, maxS) = (r.getLong(0), r.getLong(1))
-    spark.read.parquet(out)
+    readParquet(spark, out)
       .filter(col("l_partkey") <= maxP / 10 && col("l_suppkey") <= maxS / 10)
       .groupBy(col("l_suppkey"))
       .agg(count(lit(1)).as("n_rows"),

@@ -218,17 +218,17 @@ object StateV2 {
   }
 
   /** Stage ONLY the live slice (event_id % 3 != 0) as the landing zone
-    * for the bootstrapped query; once per (dir) per JVM.
+    * for the bootstrapped query; once per (dir) per JVM, through
+    * `Sources.stageOnceInJvm`.
     */
-  private val bootStaged =
-    java.util.concurrent.ConcurrentHashMap.newKeySet[String]()
   def stageLiveSlice(spark: SparkSession, dir: String): String = {
     val stage = new java.io.File(sys.props("java.io.tmpdir"),
       "graft_stream_live_" + dir.replaceAll("[^a-zA-Z0-9]", "_"))
       .getAbsolutePath
-    if (bootStaged.add(stage))
+    graft.sources.Sources.stageOnceInJvm(s"$dir->$stage") {
       graft.Tables.events(spark, dir).where(col("event_id") % 3 =!= 0)
         .write.mode("overwrite").parquet(stage)
+    }
     stage
   }
 

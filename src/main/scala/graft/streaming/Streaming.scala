@@ -5,6 +5,8 @@ import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.{GroupState, GroupStateTimeout, OutputMode, Trigger}
 import org.apache.spark.sql.types._
 
+import graft.sources.Sources.{readParquet, stageOnceInJvm}
+
 /** Structured Streaming twins of the batch event-time operators
   * (graft.ops.Events): file-source stream → watermarked windowed aggs →
   * sink, plus custom session state via mapGroupsWithState.
@@ -29,18 +31,19 @@ object Streaming {
     StructField("value", DoubleType),
     StructField("props", StringType)))
 
-  private val stagedDirs =
-    java.util.concurrent.ConcurrentHashMap.newKeySet[String]()
-
   /** Stage the batch events table as a parquet directory a file-source
     * stream can consume (simulates the landing zone a real feed writes).
-    * Staged once per (source, target) per JVM — both streaming gate
-    * queries share the same landing zone, so the second call is free.
+    * Staged once per (source, target) per JVM through
+    * `Sources.stageOnceInJvm` — both streaming gate queries share the
+    * same landing zone, so the second call is free, and a staging that
+    * failed is retried instead of leaving later calls reading a missing
+    * or half-written zone.
     */
   def stageStreamInput(spark: SparkSession, dir: String, stageDir: String): Unit =
-    if (stagedDirs.add(s"$dir->$stageDir"))
+    stageOnceInJvm(s"$dir->$stageDir") {
       graft.Tables.events(spark, dir)
         .write.mode("overwrite").parquet(stageDir)
+    }
 
   /** Tumbling 1-hour windowed counts with a 2-hour watermark: the
     * canonical late-data-tolerant streaming aggregate. One shuffle per
@@ -483,38 +486,28 @@ object Streaming {
     * `(ts, event_id)` sort makes the file's row order deterministic
     * rather than inheriting whatever order the shuffle delivers.
     * Returns (stagePath, maxRealTs).
+    *
+    * maxRealTs is memoized with the zone itself (the staging memo
+    * returns it): the value is a property of the staged files
+    * (sentinel 1, already written into the zone, is derived from it),
+    * yet the old shape re-ran the max(ts) aggregation job on EVERY
+    * invocation of every sentinel-flushed lane (r19 census: one
+    * accidental Spark job per run on left_join / full_join /
+    * session_window). A fresh JVM restages and recomputes together.
     */
-  /** max(ts) of each staged sentinel zone, memoized with the zone
-    * itself: the value is a property of the staged files (sentinel 1,
-    * already written into the zone, is derived from it), yet the old
-    * shape re-ran the max(ts) aggregation job on EVERY invocation of
-    * every sentinel-flushed lane (r19 census: one accidental Spark job
-    * per run on left_join / full_join / session_window). Same per-JVM
-    * staging-metadata contract as [[stagedDirs]]; a fresh JVM restages
-    * and recomputes together. computeIfAbsent holds the map bin while
-    * the (seconds-long) staging write runs — acceptable here because
-    * the gate stages at most one zone per dir and callers are
-    * sequential (contrast `Sources.stagePublishedLayout`, which must
-    * not block unrelated keys for multi-minute layout writes).
-    */
-  private val stagedMaxTs =
-    new java.util.concurrent.ConcurrentHashMap[String, java.sql.Timestamp]()
-
   private[streaming] def sentinelStage(spark: SparkSession, dir: String)
     : (String, java.sql.Timestamp) = {
     val stage = new java.io.File(sys.props("java.io.tmpdir"),
       "graft_stream_sn_" + dir.replaceAll("[^a-zA-Z0-9]", "_"))
       .getAbsolutePath
-    val maxTs = stagedMaxTs.computeIfAbsent(s"$dir->$stage", _ => {
+    val maxTs = stageOnceInJvm(s"$dir->$stage") {
       val ev = graft.Tables.events(spark, dir)
       val m = ev.agg(max(col("ts"))).head().getTimestamp(0)
-      if (stagedDirs.add(s"$dir->$stage")) {
-        ev.repartition(1).sortWithinPartitions("ts", "event_id")
-          .write.mode("overwrite").parquet(stage)
-        sentinelRow(spark, m, 1).write.mode("append").parquet(stage)
-      }
+      ev.repartition(1).sortWithinPartitions("ts", "event_id")
+        .write.mode("overwrite").parquet(stage)
+      sentinelRow(spark, m, 1).write.mode("append").parquet(stage)
       m
-    })
+    }
     (stage, maxTs)
   }
 
@@ -677,7 +670,7 @@ object Streaming {
     val stage = new java.io.File(sys.props("java.io.tmpdir"),
       "graft_stream_dup_" + dir.replaceAll("[^a-zA-Z0-9]", "_"))
       .getAbsolutePath
-    if (stagedDirs.add(s"$dir->$stage")) {
+    stageOnceInJvm(s"$dir->$stage") {
       val ev = graft.Tables.events(spark, dir)
       ev.write.mode("overwrite").parquet(stage)
       ev.write.mode("append").parquet(stage) // the duplicate delivery
@@ -709,9 +702,10 @@ object Streaming {
     val stage = new java.io.File(sys.props("java.io.tmpdir"),
       "graft_stream_ups_" + dir.replaceAll("[^a-zA-Z0-9]", "_"))
       .getAbsolutePath
-    if (stagedDirs.add(s"$dir->$stage"))
+    stageOnceInJvm(s"$dir->$stage") {
       graft.Tables.events(spark, dir).repartition(4)
         .write.mode("overwrite").parquet(stage)
+    }
     // Store/checkpoint paths carry a per-JVM tag: the run counter alone
     // restarts at 0 in every new process, and a FRESH query resuming a
     // PREVIOUS process's checkpoint replays a WAL whose file list points
@@ -759,7 +753,7 @@ object Streaming {
           col("value"))).as("last"))
     val merged =
       if (batchId == 0L) latest
-      else spark.read.parquet(s"$target/v${batchId - 1}").as("c")
+      else readParquet(spark, s"$target/v${batchId - 1}").as("c")
         .join(latest.as("n"), Seq("user_id"), "full_outer")
         .select(col("user_id"),
           (coalesce(col("c.n_events"), lit(0L))
@@ -774,7 +768,7 @@ object Streaming {
   /** The materialized store after batch `lastBatch`, in gate shape. */
   def readUpsertStore(spark: SparkSession, target: String,
     lastBatch: Long): DataFrame =
-    spark.read.parquet(s"$target/v$lastBatch")
+    readParquet(spark, s"$target/v$lastBatch")
       .select(col("user_id"), col("n_events"),
         col("last.event_type").as("last_type"),
         col("last.value").as("last_value"))

@@ -10,6 +10,28 @@ trait SparkTestBase extends AnyFunSuite {
 
   def resourcePath(p: String): String =
     new java.io.File(getClass.getResource(p).toURI).getPath
+
+  /** Number of Spark jobs `body` starts: jobs are tagged through a
+    * local property (inherited by the SQL execution threads a query
+    * spawns), and the count is read once a marker job submitted after
+    * `body` has reached the listener, so every earlier job has too.
+    */
+  def jobsRunBy(body: => Any): Int = {
+    val sc = spark.sparkContext
+    val jobs = SparkTestBase.jobTags
+    val tag = s"jobs-${SparkTestBase.tagSeq.incrementAndGet()}"
+    def tagged(t: String)(f: => Any): Unit = {
+      sc.setLocalProperty(SparkTestBase.TagKey, t)
+      try f finally sc.setLocalProperty(SparkTestBase.TagKey, null)
+    }
+    tagged(tag)(body)
+    tagged(s"$tag-end")(sc.parallelize(Seq(1), 1).count())
+    val deadline = System.nanoTime() + 60L * 1000 * 1000 * 1000
+    while (!jobs.containsKey(s"$tag-end") && System.nanoTime() < deadline)
+      Thread.sleep(2)
+    assert(jobs.containsKey(s"$tag-end"), "listener bus did not drain in 60 s")
+    Option(jobs.get(tag)).map(_.get).getOrElse(0)
+  }
 }
 
 object SparkTestBase {
@@ -28,5 +50,24 @@ object SparkTestBase {
       .getOrCreate()
     s.sparkContext.setLogLevel("WARN")
     s
+  }
+
+  private val TagKey = "graft.test.jobTag"
+  private val tagSeq = new java.util.concurrent.atomic.AtomicLong()
+
+  /** Jobs started per [[TagKey]] value, fed by one listener on the
+    * shared session. */
+  private lazy val jobTags = {
+    val counts = new java.util.concurrent.ConcurrentHashMap[String,
+      java.util.concurrent.atomic.AtomicInteger]()
+    session.sparkContext.addSparkListener(
+      new org.apache.spark.scheduler.SparkListener {
+        override def onJobStart(
+            e: org.apache.spark.scheduler.SparkListenerJobStart): Unit =
+          Option(e.properties).flatMap(p => Option(p.getProperty(TagKey)))
+            .foreach(t => counts.computeIfAbsent(t,
+              _ => new java.util.concurrent.atomic.AtomicInteger()).incrementAndGet())
+      })
+    counts
   }
 }

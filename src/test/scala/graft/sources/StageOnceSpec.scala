@@ -2,7 +2,10 @@ package graft.sources
 
 import java.util.concurrent.atomic.AtomicInteger
 
-import org.scalatest.funsuite.AnyFunSuite
+import org.apache.spark.sql.functions._
+import org.apache.spark.sql.streaming.OutputMode
+
+import graft.streaming.Streaming
 
 /** Pins [[Sources.stageOnceInJvm]]'s memo contract (the r12 ADVICE fix
   * that moved the multi-minute layout write out of the staging map's
@@ -10,9 +13,11 @@ import org.scalatest.funsuite.AnyFunSuite
   * siblings observe completion, and — the path no other spec covered —
   * a FAILED staging is forgotten, so the next caller retries instead of
   * inheriting a poisoned memo (matching `computeIfAbsent`'s
-  * exception-not-recorded semantics).
+  * exception-not-recorded semantics). The streaming landing zones
+  * stage through the same memo, so a zone whose write failed is
+  * staged again rather than read half-written.
   */
-class StageOnceSpec extends AnyFunSuite {
+class StageOnceSpec extends graft.SparkTestBase {
 
   test("concurrent callers for one key run the staging exactly once") {
     val runs = new AtomicInteger(0)
@@ -93,5 +98,27 @@ class StageOnceSpec extends AnyFunSuite {
       "every waiter must eventually return from a successful staging")
     assert(attempts.get() === 2,
       "exactly one retry owner re-runs the body after the failure")
+  }
+
+  test("a stream zone whose first staging write throws is staged on the next call") {
+    val base = java.nio.file.Files.createTempDirectory("graft-stage-once")
+    // a regular file where the zone's parent directory must go makes
+    // the first write fail
+    val blocker = java.nio.file.Files.createFile(base.resolve("zones"))
+    val zone = blocker.resolve("events").toString
+    intercept[Exception](Streaming.stageStreamInput(spark, sfDir, zone))
+    java.nio.file.Files.delete(blocker)
+    Streaming.stageStreamInput(spark, sfDir, zone)
+    assert(new java.io.File(zone, "_SUCCESS").exists, "zone was not restaged")
+
+    def byKey(df: org.apache.spark.sql.DataFrame) =
+      df.collect().map(r => (r.getTimestamp(0).toString, r.getString(1)) ->
+        r.getLong(2)).toMap
+    val got = byKey(Streaming.runToMemory(Streaming.hourlyCounts(spark, zone),
+      "stage_once_hourly", OutputMode.Complete()))
+    val want = byKey(graft.Tables.events(spark, sfDir)
+      .groupBy(date_trunc("hour", col("ts")), col("event_type"))
+      .agg(count(lit(1))))
+    assert(got.nonEmpty && got == want)
   }
 }
