@@ -22,37 +22,22 @@ object Events2 {
   def qEventFunnel(spark: SparkSession, dir: String): DataFrame =
     funnelOf(Tables.events(spark, dir), Seq("signup", "view", "purchase"))
 
-  /** 3-stage funnel over any (user_id, event_type, ts) frame.
-    *
-    * `checkpointStages` records an r19 experiment that was MEASURED
-    * AND REJECTED for the gate: s/v/p each fan out to the next stage's
-    * join and their own 1-row count, so the planner re-runs each
-    * stage's scan+aggregate per consumer (five events scans for three
-    * stage filters in the executed plan) — but those re-scans are
-    * filtered, column-pruned reads of per-type slices, and a
-    * same-session A/B (OPTIMIZATION_r19.md) showed eager checkpoints
-    * LOSING at sf0.1 (0.63 vs 0.81 s) and a wash at the 100×-events
-    * stage (115 MB: 1.9 vs 2.0 s) — the three materialization jobs cost
-    * more than the recompute they avoid. The lazy shape stays the
-    * default; the flag stays so a future genuinely scan-bound
-    * deployment can flip it.
+  /** 3-stage funnel over any (user_id, event_type, ts) frame. Stages stay
+    * lazy: eager stage checkpoints were measured slower (OPTIMIZATION_r19.md).
     */
-  def funnelOf(events: DataFrame, stages: Seq[String],
-    checkpointStages: Boolean = false): DataFrame = {
+  def funnelOf(events: DataFrame, stages: Seq[String]): DataFrame = {
     require(stages.length == 3, "funnelOf is the 3-stage form")
-    def stagePin(df: DataFrame): DataFrame =
-      if (checkpointStages) df.localCheckpoint(true) else df
     val ev = events
       .select(col("user_id"), col("event_type"),
         unix_timestamp(col("ts")).as("sec"))
-    val s = stagePin(ev.filter(col("event_type") === stages(0))
-      .groupBy("user_id").agg(min(col("sec")).as("s_sec")))
-    val v = stagePin(ev.filter(col("event_type") === stages(1))
+    val s = ev.filter(col("event_type") === stages(0))
+      .groupBy("user_id").agg(min(col("sec")).as("s_sec"))
+    val v = ev.filter(col("event_type") === stages(1))
       .join(s, "user_id").filter(col("sec") >= col("s_sec"))
-      .groupBy("user_id").agg(min(col("sec")).as("v_sec")))
-    val p = stagePin(ev.filter(col("event_type") === stages(2))
+      .groupBy("user_id").agg(min(col("sec")).as("v_sec"))
+    val p = ev.filter(col("event_type") === stages(2))
       .join(v, "user_id").filter(col("sec") >= col("v_sec"))
-      .groupBy("user_id").agg(min(col("sec")).as("p_sec")))
+      .groupBy("user_id").agg(min(col("sec")).as("p_sec"))
     s.agg(count(lit(1)).as("n_signup"))
       .crossJoin(v.agg(count(lit(1)).as("n_viewed")))
       .crossJoin(p.agg(count(lit(1)).as("n_converted")))

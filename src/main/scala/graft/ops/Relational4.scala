@@ -158,7 +158,7 @@ object Relational4 {
     // yields the 8-wave cap when stats fall back to the huge default —
     // file bytes make the plan shape a pure function of the staged data
     val waves = activationWaves(
-      BigInt(graft.sources.Sources.sourceFileBytes(spark, dir, "events.parquet")),
+      BigInt(graft.sources.Sources.sourceFileBytes(spark, s"$dir/events.parquet")),
       parts)
     val e = Tables.events(s, dir)
       .withColumn("minute", expr("unix_timestamp(ts) div 60"))

@@ -154,8 +154,7 @@ object Relational7 {
     * against the same aggregate over the unpartitioned table.
     */
   def qPartitionPruning(spark: SparkSession, dir: String): DataFrame = {
-    val out = new java.io.File(sys.props("java.io.tmpdir"),
-      "graft_part_docs_" + dir.replaceAll("[^a-zA-Z0-9]", "_")).getAbsolutePath
+    val out = graft.sources.Sources.stagedPath("graft_part_docs_", dir)
     graft.sources.Sources.stageOnceInJvm(s"$dir->$out") {
       Tables.documents(spark, dir)
         .write.mode("overwrite").partitionBy("lang").parquet(out)

@@ -46,7 +46,7 @@ object Robust {
 
   private def singleScanFor(spark: SparkSession, dir: String,
     table: String): Boolean =
-    graft.sources.Sources.sourceFileBytes(spark, dir, table) >= SingleScanBytes
+    graft.sources.Sources.sourceFileBytes(spark, s"$dir/$table") >= SingleScanBytes
 
   /** Per-event-type z-score outlier counts over the events stream:
     * flags rows with `|value − μ| > 2σ` (population σ).

@@ -187,8 +187,7 @@ object Sources {
     */
   def qSinkRoundtrip(spark: SparkSession, dir: String): DataFrame = {
     import org.apache.spark.sql.types.DecimalType
-    val out = new java.io.File(sys.props("java.io.tmpdir"),
-      "graft_sink_csv_" + dir.replaceAll("[^a-zA-Z0-9]", "_")).getAbsolutePath
+    val out = stagedPath("graft_sink_csv_", dir)
     graft.Tables.lineitem(spark, dir)
       .groupBy(col("l_returnflag"), col("l_linestatus"))
       .agg(count(lit(1)).as("n_rows"),
@@ -392,10 +391,21 @@ object Sources {
       .map(f => s"${f.getName}:${f.length}:${f.lastModified}:${edgeHash(f)}")
       .mkString("|")
     val fp = f"${scala.util.hashing.MurmurHash3.stringHash(manifest) & 0xffffffffL}%08x"
-    val suffix = dir.replaceAll("[^a-zA-Z0-9]", "_")
-    new java.io.File(sys.props("java.io.tmpdir"),
-      s"${prefix}_${suffix}_$fp").getAbsolutePath
+    stagedPath(s"${prefix}_", dir) + s"_$fp"
   }
+
+  /** Absolute path of `name` under the JVM's temp directory: where every
+    * staged landing zone, layout, sink output and stream store lives.
+    */
+  def tmpPath(name: String): String =
+    new java.io.File(sys.props("java.io.tmpdir"), name).getAbsolutePath
+
+  /** [[tmpPath]] of `prefix` followed by the source directory `dir` with
+    * every non-alphanumeric character replaced by `_`: one staging path
+    * per (purpose, source) pair.
+    */
+  def stagedPath(prefix: String, dir: String): String =
+    tmpPath(prefix + dir.replaceAll("[^a-zA-Z0-9]", "_"))
 
   /** Cheap content component for [[layoutDir]]'s manifest: murmur3 over
     * the first and last 4 KB of a regular file (0 for directories or
@@ -419,11 +429,12 @@ object Sources {
     } catch { case _: java.io.IOException => 0 }
   }
 
-  /** Summed bytes of the data files under `dir/table` (a parquet file
-    * or a directory of part files, listed as [[readParquet]] lists
-    * them, through the Hadoop `FileSystem` so `hdfs://` and `s3://`
-    * paths size correctly; 0 for a missing path) — the deterministic
-    * input for
+  /** Summed bytes of the data files under `path` (a parquet file or a
+    * directory of part files, listed as [[readParquet]] lists them,
+    * through the Hadoop `FileSystem` so `hdfs://` and `s3://` paths
+    * size correctly; 0 for a missing path) — the one size probe behind
+    * [[graft.streaming.Streaming.adaptiveStateParts]],
+    * [[graft.ops.Robust]]'s single-scan switch and
     * [[graft.ops.Relational4.activationWaves]] (r15 ADVICE: the
     * previous input, `optimizedPlan.stats.sizeInBytes`, shifts with
     * session conf such as `fileCompressionFactor` and falls back to a
@@ -431,8 +442,8 @@ object Sources {
     * 8-wave cap — correctness-neutral but environment-dependent plan
     * shape). File bytes are a pure function of the staged data.
     */
-  def sourceFileBytes(spark: SparkSession, dir: String, table: String): Long =
-    try dataFiles(spark, s"$dir/$table").map(_.getLen).sum
+  def sourceFileBytes(spark: SparkSession, path: String): Long =
+    try dataFiles(spark, path).map(_.getLen).sum
     catch { case _: java.io.FileNotFoundException => 0L }
 
   /** The files Spark's file index lists under a parquet `path`, sorted

@@ -4,7 +4,7 @@ import org.apache.spark.sql.{DataFrame, Encoders, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.{ExpiredTimerInfo, ListState, MapState,
   OutputMode, StatefulProcessor, StatefulProcessorWithInitialState, TimeMode,
-  TimerValues, TTLConfig, ValueState}
+  TimerValues, Trigger, TTLConfig, ValueState}
 
 /** Arbitrary streaming state on the State API v2 (`transformWithState`,
   * SPARK-49070) — the successor to [[Streaming.sessionize]]'s
@@ -130,13 +130,9 @@ object StateV2 {
     * constraint (not a tuning choice) of the v2 state machinery.
     * Hash-checked against the batch `MIN(sec) GROUP BY user, type`.
     */
-  def qStreamFirstTouch(spark: SparkSession, dir: String): DataFrame = {
-    val stage = new java.io.File(sys.props("java.io.tmpdir"),
-      "graft_stream_stage_" + dir.replaceAll("[^a-zA-Z0-9]", "_"))
-      .getAbsolutePath
-    Streaming.stageStreamInput(spark, dir, stage)
-    firstTouchOver(spark, stage, maxFilesPerTrigger = None)
-  }
+  def qStreamFirstTouch(spark: SparkSession, dir: String): DataFrame =
+    firstTouchOver(spark, Streaming.stagedEvents(spark, dir),
+      maxFilesPerTrigger = None)
 
   /** The first-touch pipeline over an already-staged landing zone;
     * `maxFilesPerTrigger` throttles the file source so a spec can force
@@ -153,10 +149,7 @@ object StateV2 {
   private def typedStream(spark: SparkSession, stage: String,
       maxFilesPerTrigger: Option[Int]) = {
     import spark.implicits._
-    val reader = spark.readStream.schema(Streaming.eventSchema)
-    maxFilesPerTrigger.foreach(n =>
-      reader.option("maxFilesPerTrigger", n.toString))
-    reader.parquet(stage)
+    Streaming.eventStream(spark, stage, maxFilesPerTrigger)
       .withWatermark("ts", "2 hours")
       .select(col("user_id").as[Long], col("event_type").as[String],
         expr("CAST(floor(unix_timestamp(ts)) AS BIGINT)").as[Long])
@@ -182,7 +175,7 @@ object StateV2 {
     }
     withRocksDb(spark) {
       Streaming.runToMemory(touches.toDF(),
-        s"graft_stream_first_touch_${StateV2.runSeq.incrementAndGet()}",
+        s"graft_stream_first_touch_${Streaming.runSeq.incrementAndGet()}",
         OutputMode.Update(), Streaming.adaptiveStateParts(spark, stage))
     }
   }
@@ -222,9 +215,7 @@ object StateV2 {
     * `Sources.stageOnceInJvm`.
     */
   def stageLiveSlice(spark: SparkSession, dir: String): String = {
-    val stage = new java.io.File(sys.props("java.io.tmpdir"),
-      "graft_stream_live_" + dir.replaceAll("[^a-zA-Z0-9]", "_"))
-      .getAbsolutePath
+    val stage = graft.sources.Sources.stagedPath("graft_stream_live_", dir)
     graft.sources.Sources.stageOnceInJvm(s"$dir->$stage") {
       graft.Tables.events(spark, dir).where(col("event_id") % 3 =!= 0)
         .write.mode("overwrite").parquet(stage)
@@ -253,31 +244,25 @@ object StateV2 {
       .unionByName(emissions.select("user_id", "event_type", "first_sec")))
   }
 
-  private val runSeq = new java.util.concurrent.atomic.AtomicInteger(0)
-
   /** Run the cold-start first-touch stream to completion against a
     * PINNED checkpoint (the gate uses throwaway checkpoints; a pinned
     * one is what the state reader below inspects — and what a real
-    * deployment restarts from).
+    * deployment restarts from). Unlike the gate runners it keeps the
+    * session's partition count and no-data batches, so eviction timers
+    * fire in the trailing no-data batch.
     */
   def runFirstTouchCheckpointed(spark: SparkSession, stage: String,
       ckpt: String): Unit = {
-    import org.apache.spark.sql.streaming.Trigger
     val touches = typedStream(spark, stage, maxFilesPerTrigger = None)
       .groupByKey(_._1)(Encoders.scalaLong)
       .transformWithState(new FirstTouchProcessor,
         TimeMode.EventTime(), OutputMode.Update())(
         Encoders.product[FirstTouch])
     withRocksDb(spark) {
-      val name = s"graft_first_touch_ckpt_${runSeq.incrementAndGet()}"
-      Streaming.retirePrevious(spark, name)
-      val q = touches.toDF().writeStream.format("memory")
-        .queryName(name)
-        .outputMode(OutputMode.Update())
-        .option("checkpointLocation", ckpt)
-        .trigger(Trigger.AvailableNow()).start()
-      q.awaitTermination()
-      Streaming.recordPlan(q)
+      Streaming.toMemory(touches.toDF(),
+        s"graft_first_touch_ckpt_${Streaming.runSeq.incrementAndGet()}",
+        OutputMode.Update(), Trigger.AvailableNow(), Some(ckpt))(
+        _.awaitTermination())
     }
   }
 
@@ -310,21 +295,12 @@ object StateV2 {
     * background maintenance — the documented production setting for
     * large state.
     */
-  def withRocksDb[T](spark: SparkSession)(body: => T): T = {
-    val key = "spark.sql.streaming.stateStore.providerClass"
-    val clKey = "spark.sql.streaming.stateStore.rocksdb." +
-      "changelogCheckpointing.enabled"
-    val prev = spark.conf.getOption(key)
-    val prevCl = spark.conf.getOption(clKey)
-    spark.conf.set(key, "org.apache.spark.sql.execution.streaming." +
-      "state.RocksDBStateStoreProvider")
-    spark.conf.set(clKey, "true")
-    def restore(k: String, v: Option[String]): Unit = v match {
-      case Some(s) => spark.conf.set(k, s)
-      case None => spark.conf.unset(k)
-    }
-    try body finally { restore(key, prev); restore(clKey, prevCl) }
-  }
+  def withRocksDb[T](spark: SparkSession)(body: => T): T =
+    Streaming.withConfs(spark, Seq(
+      "spark.sql.streaming.stateStore.providerClass" ->
+        "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider",
+      "spark.sql.streaming.stateStore.rocksdb.changelogCheckpointing.enabled" ->
+        "true"))(body)
 
   final case class SessionRec(user_id: Long, start_sec: Long, end_sec: Long,
     n_events: Long)
@@ -415,14 +391,6 @@ object StateV2 {
     }
   }
 
-  /** Streaming session records as a gate query: sentinel-staged zone →
-    * ListState buffering → timer-driven finalization → the exact batch
-    * `session_window` answer (oracle shared verbatim). The sentinel
-    * machinery is [[Streaming.runWithSentinelFlush]]'s: the second
-    * far-future arrival gives the final watermark advance a batch to
-    * fire the eviction timers into; sentinel-user rows drop from the
-    * projection.
-    */
   /** The ListState session pipeline over any sentinel-staged landing
     * zone (public so the scale probe can drive it on replicated feeds):
     * runs to completion with the two-sentinel flush and returns the raw
@@ -432,7 +400,7 @@ object StateV2 {
   def sessionRecordsOver(spark: SparkSession, stage: String,
       maxTs: java.sql.Timestamp): DataFrame = {
     import spark.implicits._
-    val typed = spark.readStream.schema(Streaming.eventSchema).parquet(stage)
+    val typed = Streaming.eventStream(spark, stage)
       .withWatermark("ts", "2 hours")
       .select(col("user_id").as[Long],
         expr("CAST(floor(unix_timestamp(ts)) AS BIGINT)").as[Long])
@@ -441,11 +409,19 @@ object StateV2 {
         TimeMode.EventTime(), OutputMode.Update())
     withRocksDb(spark) {
       Streaming.runWithSentinelFlush(spark, stage, maxTs, recs.toDF(),
-        s"graft_stream_sess_v2_${runSeq.incrementAndGet()}",
+        s"graft_stream_sess_v2_${Streaming.runSeq.incrementAndGet()}",
         OutputMode.Update())
     }
   }
 
+  /** Streaming session records as a gate query: sentinel-staged zone →
+    * ListState buffering → timer-driven finalization → the exact batch
+    * `session_window` answer (oracle shared verbatim). The sentinel
+    * machinery is [[Streaming.runWithSentinelFlush]]'s: the second
+    * far-future arrival gives the final watermark advance a batch to
+    * fire the eviction timers into; sentinel-user rows drop from the
+    * projection.
+    */
   def qStreamSessionsV2(spark: SparkSession, dir: String): DataFrame = {
     val (stage, maxTs) = Streaming.sentinelStage(spark, dir)
     sessionRecordsOver(spark, stage, maxTs)

@@ -2,10 +2,12 @@ package graft.streaming
 
 import org.apache.spark.sql.{DataFrame, Dataset, SparkSession}
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.streaming.{GroupState, GroupStateTimeout, OutputMode, Trigger}
+import org.apache.spark.sql.streaming.{GroupState, GroupStateTimeout, OutputMode,
+  StreamingQuery, Trigger}
 import org.apache.spark.sql.types._
 
-import graft.sources.Sources.{readParquet, stageOnceInJvm}
+import graft.sources.Sources.{readParquet, sourceFileBytes, stageOnceInJvm,
+  stagedPath, tmpPath}
 
 /** Structured Streaming twins of the batch event-time operators
   * (graft.ops.Events): file-source stream → watermarked windowed aggs →
@@ -45,13 +47,33 @@ object Streaming {
         .write.mode("overwrite").parquet(stageDir)
     }
 
+  /** [[stageStreamInput]] into the landing zone the plain stream lanes
+    * share; returns its path.
+    */
+  private[streaming] def stagedEvents(spark: SparkSession, dir: String): String = {
+    val stage = stagedPath("graft_stream_stage_", dir)
+    stageStreamInput(spark, dir, stage)
+    stage
+  }
+
+  /** The events landing zone `stage` as a file-source stream — the one
+    * stream reader every lane uses; `maxFilesPerTrigger` caps the files
+    * each micro-batch takes.
+    */
+  def eventStream(spark: SparkSession, stage: String,
+    maxFilesPerTrigger: Option[Int] = None): DataFrame = {
+    val reader = spark.readStream.schema(eventSchema)
+    maxFilesPerTrigger.fold(reader)(n =>
+      reader.option("maxFilesPerTrigger", n.toString)).parquet(stage)
+  }
+
   /** Tumbling 1-hour windowed counts with a 2-hour watermark: the
     * canonical late-data-tolerant streaming aggregate. One shuffle per
     * micro-batch on (window, event_type); state size bounded by the
     * watermark horizon, not the stream length.
     */
   def hourlyCounts(spark: SparkSession, stageDir: String): DataFrame =
-    spark.readStream.schema(eventSchema).parquet(stageDir)
+    eventStream(spark, stageDir)
       .withWatermark("ts", "2 hours")
       .groupBy(window(col("ts"), "1 hour"), col("event_type"))
       .agg(count(lit(1)).as("n_events"))
@@ -135,7 +157,7 @@ object Streaming {
     // The watermarked `ts` attribute must reach the stateful operator for
     // EventTimeTimeout to be allowed, so it rides to the groupByKey as a
     // typed column and is folded to epoch seconds only inside the lambda.
-    spark.readStream.schema(eventSchema).parquet(stageDir)
+    eventStream(spark, stageDir)
       .withWatermark("ts", "2 hours")
       .select(col("user_id").as[Long], col("ts").as[java.sql.Timestamp])
       .groupByKey(_._1)
@@ -180,14 +202,9 @@ object Streaming {
     * elsewhere (sessions_v2's per-event appendValue round-trips —
     * fixed separately in `SessionRecordProcessor`).
     */
-  def adaptiveStateParts(spark: SparkSession, stage: String): Int = {
-    val p = new org.apache.hadoop.fs.Path(stage)
-    val bytes =
-      try p.getFileSystem(spark.sparkContext.hadoopConfiguration)
-        .getContentSummary(p).getLength
-      catch { case _: Exception => 0L }
-    adaptiveStatePartsFor(bytes, spark.sparkContext.defaultParallelism)
-  }
+  def adaptiveStateParts(spark: SparkSession, stage: String): Int =
+    adaptiveStatePartsFor(sourceFileBytes(spark, stage),
+      spark.sparkContext.defaultParallelism)
 
   /** The pure piecewise formula behind [[adaptiveStateParts]], factored
     * out so `StreamingLifecycleSpec` can pin all three regimes without
@@ -200,32 +217,41 @@ object Streaming {
     math.max(StatePartitions, math.min(target, parallelism))
   }
 
-  private def withStatePartitions[T](spark: SparkSession,
-    parts: Int = StatePartitions)(body: => T): T = {
-    // Scoped stream-start confs, restored after the run. Besides the
-    // state partitioning (above), the gate runners disable NO-DATA
-    // micro-batches (r18): every gate stream is a BOUNDED replay whose
-    // final evictions/timer firings are driven by an explicit
-    // sentinel arrival (runWithSentinelFlush) or need no flush at all
-    // (Complete/Update sinks, immediate-emit dedup/inner-join), so the
-    // engine's watermark-advance no-data batch does zero useful work —
-    // yet it re-commits EVERY state store (measured on the sf0.1
-    // full-join, OPTIMIZATION_r18.md: batches 1 and 3 carry 0 input rows
-    // and 5.7 s / 3.4 s of trigger time, ~40% of the query — pure
-    // store-commit overhead, and it grows with the state partition
-    // count at the scaled stages). Timers and evictions fire in ANY
-    // batch whose start-of-batch watermark passed their target, so the
-    // sentinel data batch performs the exact same flush; the sink's
-    // final contents are identical, oracle-checked. A CONTINUOUS
-    // production feed should keep the default (no-data batches are
-    // what advance eviction under quiet traffic) — this is a property
-    // of run-to-completion replays, not a local-host tuning.
-    val settings = Seq(
-      "spark.sql.shuffle.partitions" -> parts.toString,
-      "spark.sql.streaming.noDataMicroBatches.enabled" -> "false")
-    val prev = settings.map { case (k, _) => k -> spark.conf.get(k) }
-    settings.foreach { case (k, v) => spark.conf.set(k, v) }
-    try body finally prev.foreach { case (k, v) => spark.conf.set(k, v) }
+  /** Scoped stream-start confs for the gate runners. Besides the state
+    * partitioning (above), they disable NO-DATA micro-batches (r18):
+    * every gate stream is a BOUNDED replay whose final evictions/timer
+    * firings are driven by an explicit sentinel arrival
+    * ([[runWithSentinelFlush]]) or need no flush at all (Complete/Update
+    * sinks, immediate-emit dedup/inner-join), so the engine's
+    * watermark-advance no-data batch does zero useful work — yet it
+    * re-commits EVERY state store (measured on the sf0.1 full-join,
+    * OPTIMIZATION_r18.md: batches 1 and 3 carry 0 input rows and
+    * 5.7 s / 3.4 s of trigger time, ~40% of the query — pure
+    * store-commit overhead, and it grows with the state partition count
+    * at the scaled stages). Timers and evictions fire in ANY batch whose
+    * start-of-batch watermark passed their target, so the sentinel data
+    * batch performs the exact same flush; the sink's final contents are
+    * identical, oracle-checked. A CONTINUOUS production feed should keep
+    * the default (no-data batches are what advance eviction under quiet
+    * traffic) — this is a property of run-to-completion replays, not a
+    * local-host tuning.
+    */
+  private def replayConfs(parts: Int) = Seq(
+    "spark.sql.shuffle.partitions" -> parts.toString,
+    "spark.sql.streaming.noDataMicroBatches.enabled" -> "false")
+
+  /** Run `body` with `confs` set on the session; afterwards each key gets
+    * back its previous value, or is unset if it had none — also when
+    * `body` throws.
+    */
+  def withConfs[T](spark: SparkSession, confs: Seq[(String, String)])(
+    body: => T): T = {
+    val prev = confs.map { case (k, _) => k -> spark.conf.getOption(k) }
+    confs.foreach { case (k, v) => spark.conf.set(k, v) }
+    try body finally prev.foreach {
+      case (k, Some(v)) => spark.conf.set(k, v)
+      case (k, None) => spark.conf.unset(k)
+    }
   }
 
   /** Run a streaming DataFrame to completion over the staged files
@@ -250,24 +276,26 @@ object Streaming {
     */
   def runToMemory(df: DataFrame, name: String, mode: OutputMode,
     parts: Int = StatePartitions): DataFrame =
-    withStatePartitions(df.sparkSession, parts) {
-      runToMemoryAsIs(df, name, mode)
+    withConfs(df.sparkSession, replayConfs(parts)) {
+      toMemory(df, name, mode, Trigger.AvailableNow())(_.awaitTermination())
     }
 
-  /** [[runToMemory]] without the state-partition override (specs that
-    * want the session default).
+  /** The one memory-sink lifecycle every runner shares: retire the
+    * family's previous table, start `df` under `trigger` (checkpointed at
+    * `ckpt` when given, else a throwaway checkpoint), let `drive` run the
+    * query, capture its last plan, and hand back the sink table.
     */
-  def runToMemoryAsIs(df: DataFrame, name: String, mode: OutputMode): DataFrame = {
-    retirePrevious(df.sparkSession, name)
-    val q = df.writeStream
-      .format("memory")
-      .queryName(name)
-      .outputMode(mode)
-      .trigger(Trigger.AvailableNow())
-      .start()
-    q.awaitTermination()
+  private[streaming] def toMemory(df: DataFrame, name: String, mode: OutputMode,
+    trigger: Trigger, ckpt: Option[String] = None)(
+    drive: StreamingQuery => Unit): DataFrame = {
+    val spark = df.sparkSession
+    retirePrevious(spark, name)
+    val writer = df.writeStream.format("memory").queryName(name)
+      .outputMode(mode).trigger(trigger)
+    val q = ckpt.fold(writer)(writer.option("checkpointLocation", _)).start()
+    drive(q)
     recordPlan(q)
-    df.sparkSession.table(name)
+    spark.table(name)
   }
 
   private val lastMemTable =
@@ -334,8 +362,7 @@ object Streaming {
     * after termination: `StreamExecution` retains its last
     * `IncrementalExecution`.
     */
-  private[graft] def recordPlan(
-    q: org.apache.spark.sql.streaming.StreamingQuery): Unit = {
+  private def recordPlan(q: StreamingQuery): Unit = {
     val sink = planSink
     if (sink != null) {
       val buf = new java.io.ByteArrayOutputStream()
@@ -350,7 +377,8 @@ object Streaming {
     }
   }
 
-  private val runSeq = new java.util.concurrent.atomic.AtomicInteger(0)
+  /** Run counter behind every memory-sink query name and upsert store. */
+  private[streaming] val runSeq = new java.util.concurrent.atomic.AtomicInteger(0)
 
   /** Per-process uniquifier for /tmp artifacts that must NOT be shared
     * or resumed across JVMs (see [[qStreamUpsert]]).
@@ -369,11 +397,8 @@ object Streaming {
     */
   def qStreamTumbling(spark: SparkSession, dir: String): DataFrame = {
     import org.apache.spark.sql.types.DecimalType
-    val stage = new java.io.File(sys.props("java.io.tmpdir"),
-      "graft_stream_stage_" + dir.replaceAll("[^a-zA-Z0-9]", "_"))
-      .getAbsolutePath
-    stageStreamInput(spark, dir, stage)
-    val agg = spark.readStream.schema(eventSchema).parquet(stage)
+    val stage = stagedEvents(spark, dir)
+    val agg = eventStream(spark, stage)
       .withWatermark("ts", "2 hours")
       .groupBy(window(col("ts"), "1 hour"), col("event_type"))
       .agg(count(lit(1)).as("n_events"),
@@ -394,11 +419,8 @@ object Streaming {
     * state. Shares the batch sliding-window oracle semantics.
     */
   def qStreamSliding(spark: SparkSession, dir: String): DataFrame = {
-    val stage = new java.io.File(sys.props("java.io.tmpdir"),
-      "graft_stream_stage_" + dir.replaceAll("[^a-zA-Z0-9]", "_"))
-      .getAbsolutePath
-    stageStreamInput(spark, dir, stage)
-    val agg = spark.readStream.schema(eventSchema).parquet(stage)
+    val stage = stagedEvents(spark, dir)
+    val agg = eventStream(spark, stage)
       .withWatermark("ts", "2 hours")
       .groupBy(window(col("ts"), "1 hour", "30 minutes"), col("event_type"))
       .agg(count(lit(1)).as("n_events"))
@@ -420,12 +442,9 @@ object Streaming {
     * found — nothing is held back at stream end).
     */
   def qStreamJoin(spark: SparkSession, dir: String): DataFrame = {
-    val stage = new java.io.File(sys.props("java.io.tmpdir"),
-      "graft_stream_stage_" + dir.replaceAll("[^a-zA-Z0-9]", "_"))
-      .getAbsolutePath
-    stageStreamInput(spark, dir, stage)
+    val stage = stagedEvents(spark, dir)
     def side(tpe: String, prefix: String) =
-      spark.readStream.schema(eventSchema).parquet(stage)
+      eventStream(spark, stage)
         .filter(col("event_type") === tpe)
         .select(col("user_id").as(s"${prefix}_user"),
           expr("timestamp_seconds(unix_timestamp(ts))").as(s"${prefix}_ts"),
@@ -440,28 +459,11 @@ object Streaming {
       .orderBy("v_id", "p_id")
   }
 
-  /** Stream-stream LEFT OUTER join: every view, with its matching
-    * purchases in the trailing hour, or one null-padded row if none.
-    *
-    * Outer rows only emit once the watermark PROVES no future match can
-    * arrive, and an eviction always lands in the batch AFTER the
-    * watermark advance — so a drained landing zone never flushes its
-    * tail (AvailableNow runs no trailing no-data batch). The runner
-    * therefore emulates what a live feed does naturally: after the real
-    * data is processed it appends two successively later SENTINEL
-    * arrivals, each followed by `processAllAvailable()` — the first
-    * advances the watermark past every real view, the second gives the
-    * eviction a batch to emit in. Sentinels pass through both sides'
-    * watermark nodes BEFORE the type filters, so they feed the watermark
-    * but never reach the join. The streaming answer then reconciles
-    * exactly with the batch LEFT JOIN; state stays bounded by the
-    * watermark horizon throughout.
-    */
   /** One-slice far-future sentinel row (range() would otherwise write
     * defaultParallelism-many mostly-empty files, each a discovery +
     * processing round per source reading the zone).
     */
-  private def sentinelRow(spark: SparkSession, maxTs: java.sql.Timestamp,
+  private[graft] def sentinelRow(spark: SparkSession, maxTs: java.sql.Timestamp,
     daysLater: Int): DataFrame = spark.range(0, 1, 1, 1).select(
     lit(-1L - daysLater).as("event_id"),
     lit(new java.sql.Timestamp(maxTs.getTime + daysLater * 24L * 3600 * 1000))
@@ -495,11 +497,9 @@ object Streaming {
     * accidental Spark job per run on left_join / full_join /
     * session_window). A fresh JVM restages and recomputes together.
     */
-  private[streaming] def sentinelStage(spark: SparkSession, dir: String)
+  private[graft] def sentinelStage(spark: SparkSession, dir: String)
     : (String, java.sql.Timestamp) = {
-    val stage = new java.io.File(sys.props("java.io.tmpdir"),
-      "graft_stream_sn_" + dir.replaceAll("[^a-zA-Z0-9]", "_"))
-      .getAbsolutePath
+    val stage = stagedPath("graft_stream_sn_", dir)
     val maxTs = stageOnceInJvm(s"$dir->$stage") {
       val ev = graft.Tables.events(spark, dir)
       val m = ev.agg(max(col("ts"))).head().getTimestamp(0)
@@ -515,45 +515,73 @@ object Streaming {
     * a memory table, appending one later sentinel after the initial data
     * so the final watermark advance has a batch to evict into (a drained
     * zone never flushes its tail on its own — eviction always lands in
-    * the batch AFTER the watermark advance).
+    * the batch AFTER the watermark advance). The appended sentinel is
+    * deleted once the query stops, so the memoized zone holds exactly
+    * what staging wrote and every run replays the same feed.
     */
   private[graft] def runWithSentinelFlush(spark: SparkSession,
     stage: String, maxTs: java.sql.Timestamp, df: DataFrame, name: String,
     mode: OutputMode = OutputMode.Append()): DataFrame =
-    withStatePartitions(spark, adaptiveStateParts(spark, stage)) {
-      retirePrevious(spark, name)
-      val q = df.writeStream.format("memory").queryName(name)
-        .outputMode(mode)
-        .trigger(Trigger.ProcessingTime(0L))
-        .start()
-      q.processAllAvailable()                   // real data + sentinel 1
-      sentinelRow(spark, maxTs, 2).write.mode("append").parquet(stage)
-      q.processAllAvailable()                   // eviction batch emits
-      recordPlan(q)
-      q.stop()
-      spark.table(name)
+    withConfs(spark, replayConfs(adaptiveStateParts(spark, stage))) {
+      val zone = new org.apache.hadoop.fs.Path(stage)
+      val fs = zone.getFileSystem(spark.sparkContext.hadoopConfiguration)
+      def files() = fs.listStatus(zone).map(_.getPath).toSet
+      val staged = files()
+      toMemory(df, name, mode, Trigger.ProcessingTime(0L)) { q =>
+        try {
+          q.processAllAvailable()               // real data + sentinel 1
+          sentinelRow(spark, maxTs, 2).write.mode("append").parquet(stage)
+          q.processAllAvailable()               // eviction batch emits
+        } finally {
+          q.stop()
+          (files() -- staged).foreach(fs.delete(_, false))
+        }
+      }
     }
 
+  /** One side of a sentinel-flushed stream-stream join: `tpe` events and
+    * sentinels as `<prefix>_user`, `_ts`, `_id`, watermarked 2 hours.
+    * Sentinels must feed both sides' watermark nodes. Writing the type
+    * filter after withWatermark is NOT enough: Catalyst pushes a
+    * deterministic filter below EventTimeWatermark into the scan, so a
+    * 'sentinel'-only type would be dropped before the watermark sees it
+    * (measured: the purchase side's watermark pinned at purchase-max−2h
+    * and the tail never flushed). Keeping 'sentinel' IN the filter makes
+    * the pushdown harmless; the join emits sentinel rows with negative
+    * ids, dropped from the final projection.
+    */
+  private def sentinelSide(spark: SparkSession, stage: String, tpe: String,
+    prefix: String): DataFrame =
+    eventStream(spark, stage)
+      .select(col("user_id").as(s"${prefix}_user"),
+        expr("timestamp_seconds(unix_timestamp(ts))").as(s"${prefix}_ts"),
+        col("event_id").as(s"${prefix}_id"),
+        col("event_type").as(s"${prefix}_tpe"))
+      .withWatermark(s"${prefix}_ts", "2 hours")
+      .filter(col(s"${prefix}_tpe").isin(tpe, "sentinel"))
+      .drop(s"${prefix}_tpe")
+
+  /** Stream-stream LEFT OUTER join: every view, with its matching
+    * purchases in the trailing hour, or one null-padded row if none.
+    *
+    * Outer rows only emit once the watermark PROVES no future match can
+    * arrive, and an eviction always lands in the batch AFTER the
+    * watermark advance — so a drained landing zone never flushes its
+    * tail (AvailableNow runs no trailing no-data batch). The runner
+    * therefore emulates what a live feed does naturally: after the real
+    * data is processed it appends two successively later SENTINEL
+    * arrivals, each followed by `processAllAvailable()` — the first
+    * advances the watermark past every real view, the second gives the
+    * eviction a batch to emit in. Sentinels pass through both sides'
+    * watermark nodes BEFORE the type filters, so they feed the watermark
+    * but never reach the join. The streaming answer then reconciles
+    * exactly with the batch LEFT JOIN; state stays bounded by the
+    * watermark horizon throughout.
+    */
   def qStreamLeftJoin(spark: SparkSession, dir: String): DataFrame = {
     val (stage, maxTs) = sentinelStage(spark, dir)
-    // Sentinels must feed both sides' watermark nodes. Writing the type
-    // filter after withWatermark is NOT enough: Catalyst pushes a
-    // deterministic filter below EventTimeWatermark into the scan, so a
-    // 'sentinel'-only type would be dropped before the watermark sees it
-    // (measured: the purchase side's watermark pinned at purchase-max−2h
-    // and the tail never flushed). Keeping 'sentinel' IN the filter makes
-    // the pushdown harmless; the join emits sentinel rows with negative
-    // ids, dropped from the final projection.
-    def side(tpe: String, prefix: String) =
-      spark.readStream.schema(eventSchema).parquet(stage)
-        .select(col("user_id").as(s"${prefix}_user"),
-          expr("timestamp_seconds(unix_timestamp(ts))").as(s"${prefix}_ts"),
-          col("event_id").as(s"${prefix}_id"),
-          col("event_type").as(s"${prefix}_tpe"))
-        .withWatermark(s"${prefix}_ts", "2 hours")
-        .filter(col(s"${prefix}_tpe").isin(tpe, "sentinel"))
-        .drop(s"${prefix}_tpe")
-    val joined = side("view", "v").join(side("purchase", "p"),
+    val joined = sentinelSide(spark, stage, "view", "v").join(
+      sentinelSide(spark, stage, "purchase", "p"),
       expr("v_user = p_user AND p_ts BETWEEN v_ts - INTERVAL 1 HOUR AND v_ts"),
       "left_outer")
     runWithSentinelFlush(spark, stage, maxTs, joined,
@@ -578,16 +606,8 @@ object Streaming {
     */
   def qStreamFullJoin(spark: SparkSession, dir: String): DataFrame = {
     val (stage, maxTs) = sentinelStage(spark, dir)
-    def side(tpe: String, prefix: String) =
-      spark.readStream.schema(eventSchema).parquet(stage)
-        .select(col("user_id").as(s"${prefix}_user"),
-          expr("timestamp_seconds(unix_timestamp(ts))").as(s"${prefix}_ts"),
-          col("event_id").as(s"${prefix}_id"),
-          col("event_type").as(s"${prefix}_tpe"))
-        .withWatermark(s"${prefix}_ts", "2 hours")
-        .filter(col(s"${prefix}_tpe").isin(tpe, "sentinel"))
-        .drop(s"${prefix}_tpe")
-    val joined = side("view", "v").join(side("purchase", "p"),
+    val joined = sentinelSide(spark, stage, "view", "v").join(
+      sentinelSide(spark, stage, "purchase", "p"),
       expr("v_user = p_user AND p_ts BETWEEN v_ts - INTERVAL 1 HOUR AND v_ts"),
       "full_outer")
     runWithSentinelFlush(spark, stage, maxTs, joined,
@@ -610,7 +630,7 @@ object Streaming {
     */
   def qStreamSessionWindow(spark: SparkSession, dir: String): DataFrame = {
     val (stage, maxTs) = sentinelStage(spark, dir)
-    val agg = spark.readStream.schema(eventSchema).parquet(stage)
+    val agg = eventStream(spark, stage)
       .select(col("user_id"),
         expr("timestamp_seconds(unix_timestamp(ts))").as("tss"))
       .withWatermark("tss", "2 hours")
@@ -641,10 +661,7 @@ object Streaming {
     * Hash-checked against the batch sessionization SQL.
     */
   def qStreamSessions(spark: SparkSession, dir: String): DataFrame = {
-    val stage = new java.io.File(sys.props("java.io.tmpdir"),
-      "graft_stream_stage_" + dir.replaceAll("[^a-zA-Z0-9]", "_"))
-      .getAbsolutePath
-    stageStreamInput(spark, dir, stage)
+    val stage = stagedEvents(spark, dir)
     val res = runToMemory(sessionize(spark, stage).toDF(),
       s"graft_stream_sessions_${runSeq.incrementAndGet()}",
       OutputMode.Update(), adaptiveStateParts(spark, stage))
@@ -667,15 +684,13 @@ object Streaming {
     * Append mode: each id is emitted exactly once.
     */
   def qStreamDedup(spark: SparkSession, dir: String): DataFrame = {
-    val stage = new java.io.File(sys.props("java.io.tmpdir"),
-      "graft_stream_dup_" + dir.replaceAll("[^a-zA-Z0-9]", "_"))
-      .getAbsolutePath
+    val stage = stagedPath("graft_stream_dup_", dir)
     stageOnceInJvm(s"$dir->$stage") {
       val ev = graft.Tables.events(spark, dir)
       ev.write.mode("overwrite").parquet(stage)
       ev.write.mode("append").parquet(stage) // the duplicate delivery
     }
-    val deduped = spark.readStream.schema(eventSchema).parquet(stage)
+    val deduped = eventStream(spark, stage)
       .withWatermark("ts", "2 hours")
       .dropDuplicates("event_id", "ts")
       .select(col("event_id"), col("event_type"))
@@ -699,9 +714,7 @@ object Streaming {
     * (store keys + batch keys), never the event history.
     */
   def qStreamUpsert(spark: SparkSession, dir: String): DataFrame = {
-    val stage = new java.io.File(sys.props("java.io.tmpdir"),
-      "graft_stream_ups_" + dir.replaceAll("[^a-zA-Z0-9]", "_"))
-      .getAbsolutePath
+    val stage = stagedPath("graft_stream_ups_", dir)
     stageOnceInJvm(s"$dir->$stage") {
       graft.Tables.events(spark, dir).repartition(4)
         .write.mode("overwrite").parquet(stage)
@@ -714,13 +727,10 @@ object Streaming {
     // checkpoint REUSE (kill/resume exactly-once) pins its own path —
     // `StreamingSpec` "upsert killed mid-stream".
     val run = s"$jvmTag${runSeq.incrementAndGet()}"
-    val target = new java.io.File(sys.props("java.io.tmpdir"),
-      s"graft_stream_upsert_$run").getAbsolutePath
-    val ckpt = new java.io.File(sys.props("java.io.tmpdir"),
-      s"graft_stream_upsert_ckpt_$run").getAbsolutePath
+    val target = tmpPath(s"graft_stream_upsert_$run")
+    val ckpt = tmpPath(s"graft_stream_upsert_ckpt_$run")
     @volatile var lastBatch = -1L // foreachBatch bodies run on the driver
-    val q = spark.readStream.schema(eventSchema)
-      .option("maxFilesPerTrigger", "1").parquet(stage)
+    val q = eventStream(spark, stage, maxFilesPerTrigger = Some(1))
       .writeStream
       .queryName(s"graft_stream_upsert_$run")
       .option("checkpointLocation", ckpt)
@@ -786,13 +796,10 @@ object Streaming {
     */
   def qStreamStaticJoin(spark: SparkSession, dir: String): DataFrame = {
     import org.apache.spark.sql.types.DecimalType
-    val stage = new java.io.File(sys.props("java.io.tmpdir"),
-      "graft_stream_stage_" + dir.replaceAll("[^a-zA-Z0-9]", "_"))
-      .getAbsolutePath
-    stageStreamInput(spark, dir, stage)
+    val stage = stagedEvents(spark, dir)
     val dim = graft.Tables.customer(spark, dir)
       .select(col("c_custkey"), col("c_mktsegment"))
-    val agg = spark.readStream.schema(eventSchema).parquet(stage)
+    val agg = eventStream(spark, stage)
       .join(broadcast(dim), col("user_id") === col("c_custkey"), "inner")
       .groupBy(col("c_mktsegment"))
       .agg(count(lit(1)).as("n_events"),

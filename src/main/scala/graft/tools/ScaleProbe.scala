@@ -364,12 +364,7 @@ object ScaleProbe {
         val stage = java.nio.file.Files
           .createTempDirectory(s"graft-probe-sess-$k").toString
         ev.coalesce(1).write.mode("overwrite").parquet(stage)
-        spark.range(0, 1, 1, 1).select(
-            lit(-2L).as("event_id"),
-            lit(new java.sql.Timestamp(maxTs.getTime + 24L * 3600 * 1000))
-              .as("ts"),
-            lit(-1L).as("user_id"), lit("sentinel").as("event_type"),
-            lit(0.0).as("value"), lit(null).cast("string").as("props"))
+        graft.streaming.Streaming.sentinelRow(spark, maxTs, 1)
           .write.mode("append").parquet(stage)
         var rows = -1L
         time(s"sessions_v2 ${k}x") {

@@ -1,6 +1,8 @@
 package graft
 
-import java.nio.file.Files
+import java.nio.file.{Files, Paths}
+
+import scala.jdk.CollectionConverters._
 
 import org.apache.spark.sql.AnalysisException
 import org.apache.spark.sql.functions._
@@ -21,6 +23,10 @@ import graft.streaming.Streaming
   * but does not invalidate live frames. That is why the contract is
   * "consume before re-invoking": the stale frame's rows stay GC-reachable
   * exactly as long as the frame does.
+  *
+  * Also pins the single lifecycle path: `Streaming.withConfs` restores
+  * every key it sets, and the stream reader, memory-sink start and
+  * temp-dir root each live in one place.
   */
 class StreamingLifecycleSpec extends SparkTestBase {
 
@@ -32,7 +38,7 @@ class StreamingLifecycleSpec extends SparkTestBase {
       .parquet(d)
       .groupBy(col("id"))
       .agg(count(lit(1)).as("n"))
-    Streaming.runToMemoryAsIs(stream, name, OutputMode.Complete())
+    Streaming.runToMemory(stream, name, OutputMode.Complete())
   }
 
   test("retirePrevious drops exactly the previous family view, keeps the current") {
@@ -102,5 +108,45 @@ class StreamingLifecycleSpec extends SparkTestBase {
     assert(Streaming.adaptiveStatePartsFor(1024 * MiB, 4) === 8)
     // the live entry point agrees with the pure formula on a real dir
     assert(Streaming.adaptiveStateParts(spark, "/nonexistent/path") === 8)
+  }
+
+  test("withConfs restores a set key and unsets an unset one, also on a throw") {
+    val set = "spark.graft.test.withConfs.set"
+    val unset = "spark.graft.test.withConfs.unset"
+    spark.conf.set(set, "before")
+    spark.conf.unset(unset)
+    def assertRestored(): Unit = {
+      assert(spark.conf.get(set) === "before")
+      assert(spark.conf.getOption(unset).isEmpty)
+    }
+    val inside = Seq(set -> "inside", unset -> "inside")
+    val seen = Streaming.withConfs(spark, inside) {
+      (spark.conf.get(set), spark.conf.get(unset))
+    }
+    assert(seen === (("inside", "inside")))
+    assertRestored()
+    intercept[IllegalStateException] {
+      Streaming.withConfs(spark, inside) {
+        throw new IllegalStateException("body failed")
+      }
+    }
+    assertRestored()
+    spark.conf.unset(set)
+  }
+
+  test("one stream reader, one memory-sink start, one tmpdir root") {
+    // every lane reads through Streaming.eventStream, starts through
+    // Streaming.toMemory (or the upsert's foreachBatch sink) and roots
+    // its paths at Sources.tmpPath
+    val root = Paths.get("src/main/scala")
+    def uses(token: String): Map[String, Int] =
+      Files.walk(root).iterator().asScala
+        .filter(_.toString.endsWith(".scala"))
+        .map(p => p.getFileName.toString -> java.util.regex.Pattern
+          .quote(token).r.findAllMatchIn(Files.readString(p)).size)
+        .filter(_._2 > 0).toMap
+    assert(uses("readStream") == Map("Streaming.scala" -> 1))
+    assert(uses("writeStream") == Map("Streaming.scala" -> 2))
+    assert(uses("java.io.tmpdir") == Map("Sources.scala" -> 1))
   }
 }

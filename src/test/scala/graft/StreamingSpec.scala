@@ -120,17 +120,12 @@ class StreamingSpec extends SparkTestBase {
     val defJoin = rows(Streaming.qStreamJoin(spark, sfDir))
     val defSess = rows(Streaming.qStreamSessionWindow(spark, sfDir))
     assert(defJoin.nonEmpty && defSess.nonEmpty)
-    val prev = spark.conf.getOption(key)
-    spark.conf.set(key, "org.apache.spark.sql.execution.streaming." +
-      "state.RocksDBStateStoreProvider")
-    try {
+    Streaming.withConfs(spark, Seq(key -> ("org.apache.spark.sql.execution." +
+        "streaming.state.RocksDBStateStoreProvider"))) {
       assert(rows(Streaming.qStreamJoin(spark, sfDir)) == defJoin,
         "stream-stream join result changed under RocksDB")
       assert(rows(Streaming.qStreamSessionWindow(spark, sfDir)) == defSess,
         "session-window result changed under RocksDB")
-    } finally prev match {
-      case Some(v) => spark.conf.set(key, v)
-      case None => spark.conf.unset(key)
     }
   }
 
@@ -260,6 +255,20 @@ class StreamingSpec extends SparkTestBase {
     assert(first == want)
     val second = asSet(Streaming.qStreamLeftJoin(spark, sfDir))
     assert(second == want)
+  }
+
+  test("sentinel-flushed runs leave the memoized landing zone as staged") {
+    // the flush appends a second sentinel to the shared zone; a zone that
+    // kept it would feed every later run one more file than a fresh JVM's
+    val (zone, _) = Streaming.sentinelStage(spark, sfDir)
+    def files() = new java.io.File(zone).list().toSet
+    def rows() = Streaming.qStreamLeftJoin(spark, sfDir).collect().toSeq
+    val staged = files()
+    val first = rows()
+    assert(files() == staged, "first run left files behind in the zone")
+    val second = rows()
+    assert(files() == staged, "second run left files behind in the zone")
+    assert(first.nonEmpty && second == first)
   }
 
   test("session state folds incrementally across micro-batches") {

@@ -104,9 +104,9 @@ class ParquetReadSpec extends SparkTestBase {
     Tables.names.foreach { t =>
       val want = fileSum(t)
       assert(want > 0)
-      assert(Sources.sourceFileBytes(spark, sfDir, s"$t.parquet") === want, t)
-      assert(Sources.sourceFileBytes(spark, s"file://$sfDir", s"$t.parquet") === want, t)
+      assert(Sources.sourceFileBytes(spark, s"$sfDir/$t.parquet") === want, t)
+      assert(Sources.sourceFileBytes(spark, s"file://$sfDir/$t.parquet") === want, t)
     }
-    assert(Sources.sourceFileBytes(spark, sfDir, "absent.parquet") === 0L)
+    assert(Sources.sourceFileBytes(spark, s"$sfDir/absent.parquet") === 0L)
   }
 }
