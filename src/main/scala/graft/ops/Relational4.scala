@@ -202,7 +202,8 @@ object Relational4 {
     * runtime) are never touched — then re-asserts the flip last.
     * Residual edge, accepted: a key `set` then `unset` on the parent
     * between calls lingers on the child (getAll carries no tombstones);
-    * none of this repo's callers unset confs mid-session.
+    * the only mid-session unsets are `Streaming.withConfs` scopes, which
+    * never enclose a call here.
     */
   private val scopedSessions =
     new java.util.WeakHashMap[SparkSession, SparkSession]()

@@ -393,12 +393,11 @@ object StateV2 {
 
   /** The ListState session pipeline over any sentinel-staged landing
     * zone (public so the scale probe can drive it on replicated feeds):
-    * runs to completion with the two-sentinel flush and returns the raw
+    * runs to completion with the sentinel flush and returns the raw
     * (user_id, start_sec, end_sec, n_events) records, sentinels
     * included — callers filter/project.
     */
-  def sessionRecordsOver(spark: SparkSession, stage: String,
-      maxTs: java.sql.Timestamp): DataFrame = {
+  def sessionRecordsOver(spark: SparkSession, stage: String): DataFrame = {
     import spark.implicits._
     val typed = Streaming.eventStream(spark, stage)
       .withWatermark("ts", "2 hours")
@@ -408,7 +407,7 @@ object StateV2 {
       .transformWithState(new SessionRecordProcessor,
         TimeMode.EventTime(), OutputMode.Update())
     withRocksDb(spark) {
-      Streaming.runWithSentinelFlush(spark, stage, maxTs, recs.toDF(),
+      Streaming.runWithSentinelFlush(spark, stage, recs.toDF(),
         s"graft_stream_sess_v2_${Streaming.runSeq.incrementAndGet()}",
         OutputMode.Update())
     }
@@ -417,14 +416,12 @@ object StateV2 {
   /** Streaming session records as a gate query: sentinel-staged zone →
     * ListState buffering → timer-driven finalization → the exact batch
     * `session_window` answer (oracle shared verbatim). The sentinel
-    * machinery is [[Streaming.runWithSentinelFlush]]'s: the second
-    * far-future arrival gives the final watermark advance a batch to
-    * fire the eviction timers into; sentinel-user rows drop from the
-    * projection.
+    * machinery is [[Streaming.runWithSentinelFlush]]'s: the trailing
+    * no-data batch after the sentinel's watermark advance fires the
+    * eviction timers; sentinel-user rows drop from the projection.
     */
-  def qStreamSessionsV2(spark: SparkSession, dir: String): DataFrame = {
-    val (stage, maxTs) = Streaming.sentinelStage(spark, dir)
-    sessionRecordsOver(spark, stage, maxTs)
+  def qStreamSessionsV2(spark: SparkSession, dir: String): DataFrame =
+    sessionRecordsOver(spark, Streaming.sentinelStage(spark, dir))
       .filter(col("user_id") >= 0)
       .select(col("user_id"),
         date_format(timestamp_seconds(col("start_sec")),
@@ -433,7 +430,6 @@ object StateV2 {
           "yyyy-MM-dd HH:mm:ss").as("session_end"),
         col("n_events"))
       .orderBy("user_id", "session_start")
-  }
 
   private val firstTouchSql =
     """SELECT user_id, event_type,

@@ -2,8 +2,8 @@ package graft.streaming
 
 import org.apache.spark.sql.{DataFrame, Dataset, SparkSession}
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.streaming.{GroupState, GroupStateTimeout, OutputMode,
-  StreamingQuery, Trigger}
+import org.apache.spark.sql.streaming.{DataStreamWriter, GroupState,
+  GroupStateTimeout, OutputMode, StreamingQuery, Trigger}
 import org.apache.spark.sql.types._
 
 import graft.sources.Sources.{readParquet, sourceFileBytes, stageOnceInJvm,
@@ -218,35 +218,35 @@ object Streaming {
   }
 
   /** Scoped stream-start confs for the gate runners. Besides the state
-    * partitioning (above), they disable NO-DATA micro-batches (r18):
-    * every gate stream is a BOUNDED replay whose final evictions/timer
-    * firings are driven by an explicit sentinel arrival
-    * ([[runWithSentinelFlush]]) or need no flush at all (Complete/Update
-    * sinks, immediate-emit dedup/inner-join), so the engine's
-    * watermark-advance no-data batch does zero useful work — yet it
-    * re-commits EVERY state store (measured on the sf0.1 full-join,
-    * OPTIMIZATION_r18.md: batches 1 and 3 carry 0 input rows and
-    * 5.7 s / 3.4 s of trigger time, ~40% of the query — pure
-    * store-commit overhead, and it grows with the state partition count
-    * at the scaled stages). Timers and evictions fire in ANY batch whose
-    * start-of-batch watermark passed their target, so the sentinel data
-    * batch performs the exact same flush; the sink's final contents are
-    * identical, oracle-checked. A CONTINUOUS production feed should keep
-    * the default (no-data batches are what advance eviction under quiet
-    * traffic) — this is a property of run-to-completion replays, not a
-    * local-host tuning.
+    * partitioning (above), they disable NO-DATA micro-batches (r18) for
+    * every runner but [[runWithSentinelFlush]], whose final evictions
+    * and timer firings are its one no-data batch's work. Every other
+    * gate stream is a BOUNDED replay that needs no flush at all
+    * (Complete/Update sinks, immediate-emit dedup/inner-join), so a
+    * watermark-advance no-data batch would do zero useful work — yet it
+    * re-commits EVERY state store (measured on the sf0.1 full-join under
+    * the older `ProcessingTime` sentinel drive, OPTIMIZATION_r18.md:
+    * batches 1 and 3 carried 0 input rows and 5.7 s / 3.4 s of trigger
+    * time, ~40% of the query — pure store-commit overhead, and it grows
+    * with the state partition count at the scaled stages). A CONTINUOUS
+    * production feed should keep the default (no-data batches are what
+    * advance eviction under quiet traffic) — this is a property of
+    * run-to-completion replays, not a local-host tuning.
     */
-  private def replayConfs(parts: Int) = Seq(
+  private def replayConfs(parts: Int, noDataBatches: Boolean = false) = Seq(
     "spark.sql.shuffle.partitions" -> parts.toString,
-    "spark.sql.streaming.noDataMicroBatches.enabled" -> "false")
+    "spark.sql.streaming.noDataMicroBatches.enabled" -> noDataBatches.toString)
 
   /** Run `body` with `confs` set on the session; afterwards each key gets
-    * back its previous value, or is unset if it had none — also when
-    * `body` throws.
+    * back the value set on the session before, or is unset if none was —
+    * also when `body` throws. Set values are read from `conf.getAll`:
+    * `conf.getOption` answers a known key's default when it is unset, and
+    * restoring that would leave the key pinned.
     */
   def withConfs[T](spark: SparkSession, confs: Seq[(String, String)])(
     body: => T): T = {
-    val prev = confs.map { case (k, _) => k -> spark.conf.getOption(k) }
+    val set = spark.conf.getAll
+    val prev = confs.map { case (k, _) => k -> set.get(k) }
     confs.foreach { case (k, v) => spark.conf.set(k, v) }
     try body finally prev.foreach {
       case (k, Some(v)) => spark.conf.set(k, v)
@@ -292,11 +292,35 @@ object Streaming {
     retirePrevious(spark, name)
     val writer = df.writeStream.format("memory").queryName(name)
       .outputMode(mode).trigger(trigger)
-    val q = ckpt.fold(writer)(writer.option("checkpointLocation", _)).start()
+    val q = start(spark, ckpt.fold(writer)(writer.option("checkpointLocation", _)))
     drive(q)
     recordPlan(q)
     spark.table(name)
   }
+
+  /** Confs of the session clone every stream query runs on, set on the
+    * parent only for the span of `start()`: `StreamExecution` clones the
+    * session (runtime conf included) inside `start()`, so the clone keeps
+    * them and the parent gets its own values back right after.
+    *
+    * Artifact isolation off: with it on, each clone gets a fresh session
+    * UUID, so its tasks run under a fresh session class loader — and
+    * Spark's generated-code cache keys on the task thread's class loader,
+    * so every run of a lane recompiled classes byte-identical to the
+    * previous run's (`q_stream_join` 18 per run, `q_stream_first_touch_boot`
+    * 45). Off, the clone's tasks use the default loader and every run
+    * after the first hits the cache. Isolation only separates session
+    * artifacts (jars, files, REPL classes), and the engine registers none —
+    * `SessionSpec` fails if `src/main` ever adds one. The scope stays this
+    * narrow because the parent's own `ArtifactManager` reads the key once,
+    * lazily, and must keep the session's value.
+    */
+  private val startConfs = Seq("spark.sql.artifact.isolation.enabled" -> "false")
+
+  /** The one place a stream query starts: `writer` under [[startConfs]]. */
+  private def start(spark: SparkSession, writer: DataStreamWriter[_])
+    : StreamingQuery =
+    withConfs(spark, startConfs)(writer.start())
 
   private val lastMemTable =
     new java.util.concurrent.ConcurrentHashMap[String, String]()
@@ -331,8 +355,10 @@ object Streaming {
     * that has CONSUMED a query's result calls this to return the
     * driver to zero sink footprint; the next `runToMemory` in any
     * family re-registers cleanly ([[retirePrevious]] tolerates the
-    * cleared map). Same held-frame caveat as retirement: a frame
-    * handed out earlier keeps serving rows — callers consume first.
+    * cleared map). The latest upsert run's store and checkpoint are
+    * deleted too ([[retireUpsertDirs]]). Same held-frame caveat as
+    * retirement: a frame handed out earlier keeps serving rows (or, for
+    * the upsert store, fails) — callers consume first.
     */
   def retireAll(spark: SparkSession): Unit = {
     val it = lastMemTable.values.iterator()
@@ -341,7 +367,24 @@ object Streaming {
       catch { case _: Exception => () }
     }
     lastMemTable.clear()
+    retireUpsertDirs(spark, Nil)
   }
+
+  /** Store and checkpoint directories of the latest [[qStreamUpsert]] run. */
+  private val lastUpsertDirs =
+    new java.util.concurrent.atomic.AtomicReference[Seq[String]](Nil)
+
+  /** [[retirePrevious]] for the upsert lane's directories: record `next`
+    * as the latest run's pair and delete the previous run's. The frame a
+    * run returns reads its store lazily, so a pair outlives its own run
+    * and goes when the next run starts, at [[retireAll]], or at JVM exit
+    * (each pair is registered with the Hadoop `FileSystem.deleteOnExit`).
+    */
+  private def retireUpsertDirs(spark: SparkSession, next: Seq[String]): Unit =
+    lastUpsertDirs.getAndSet(next).foreach { d =>
+      val p = new org.apache.hadoop.fs.Path(d)
+      p.getFileSystem(spark.sparkContext.hadoopConfiguration).delete(p, true)
+    }
 
   /** When non-null (set only by `graft.tools.PlanDump`), every
     * streaming runner deposits its query's LAST EXECUTED micro-batch
@@ -459,15 +502,14 @@ object Streaming {
       .orderBy("v_id", "p_id")
   }
 
-  /** One-slice far-future sentinel row (range() would otherwise write
-    * defaultParallelism-many mostly-empty files, each a discovery +
-    * processing round per source reading the zone).
+  /** One-slice sentinel row one day after `maxTs` (range() would
+    * otherwise write defaultParallelism-many mostly-empty files, each a
+    * discovery + processing round per source reading the zone).
     */
-  private[graft] def sentinelRow(spark: SparkSession, maxTs: java.sql.Timestamp,
-    daysLater: Int): DataFrame = spark.range(0, 1, 1, 1).select(
-    lit(-1L - daysLater).as("event_id"),
-    lit(new java.sql.Timestamp(maxTs.getTime + daysLater * 24L * 3600 * 1000))
-      .as("ts"),
+  private[graft] def sentinelRow(spark: SparkSession,
+    maxTs: java.sql.Timestamp): DataFrame = spark.range(0, 1, 1, 1).select(
+    lit(-2L).as("event_id"),
+    lit(new java.sql.Timestamp(maxTs.getTime + 24L * 3600 * 1000)).as("ts"),
     lit(-1L).as("user_id"),
     lit("sentinel").as("event_type"),
     lit(0.0).as("value"),
@@ -476,10 +518,10 @@ object Streaming {
   /** Stage `dir`'s events as a landing zone whose LAST row is a
     * far-future sentinel: one time-ordered file for the real data (a
     * single batch in strict event-time order — a real feed arrives in
-    * near-time-order, which is what this models), plus the first
-    * sentinel riding along. The watermark is 0 while the initial batch
-    * executes (nothing late) and advances past every real event right
-    * after — one later append then suffices to flush final state.
+    * near-time-order, which is what this models), plus the sentinel
+    * riding along. The watermark is 0 while the initial batch executes
+    * (nothing late) and advances past every real event right after —
+    * the following no-data batch then flushes final state.
     *
     * `repartition(1)` (NOT `coalesce(1)`: coalesce collapses the
     * upstream scan into the same single task — the identical idiom
@@ -487,56 +529,37 @@ object Streaming {
     * pays one shuffle into a single writer; the explicit
     * `(ts, event_id)` sort makes the file's row order deterministic
     * rather than inheriting whatever order the shuffle delivers.
-    * Returns (stagePath, maxRealTs).
-    *
-    * maxRealTs is memoized with the zone itself (the staging memo
-    * returns it): the value is a property of the staged files
-    * (sentinel 1, already written into the zone, is derived from it),
-    * yet the old shape re-ran the max(ts) aggregation job on EVERY
-    * invocation of every sentinel-flushed lane (r19 census: one
-    * accidental Spark job per run on left_join / full_join /
-    * session_window). A fresh JVM restages and recomputes together.
+    * Returns the zone's path; the max(ts) job runs once per zone per JVM,
+    * with the staging.
     */
-  private[graft] def sentinelStage(spark: SparkSession, dir: String)
-    : (String, java.sql.Timestamp) = {
+  private[graft] def sentinelStage(spark: SparkSession, dir: String): String = {
     val stage = stagedPath("graft_stream_sn_", dir)
-    val maxTs = stageOnceInJvm(s"$dir->$stage") {
+    stageOnceInJvm(s"$dir->$stage") {
       val ev = graft.Tables.events(spark, dir)
       val m = ev.agg(max(col("ts"))).head().getTimestamp(0)
       ev.repartition(1).sortWithinPartitions("ts", "event_id")
         .write.mode("overwrite").parquet(stage)
-      sentinelRow(spark, m, 1).write.mode("append").parquet(stage)
-      m
+      sentinelRow(spark, m).write.mode("append").parquet(stage)
     }
-    (stage, maxTs)
+    stage
   }
 
   /** Run an append-mode stateful stream over a [[sentinelStage]] zone to
-    * a memory table, appending one later sentinel after the initial data
-    * so the final watermark advance has a batch to evict into (a drained
-    * zone never flushes its tail on its own — eviction always lands in
-    * the batch AFTER the watermark advance). The appended sentinel is
-    * deleted once the query stops, so the memoized zone holds exactly
-    * what staging wrote and every run replays the same feed.
+    * a memory table in one AvailableNow run with no-data micro-batches
+    * on. The data batch (real events plus the sentinel) advances the
+    * watermark past every real event; eviction always lands in the batch
+    * AFTER the advance, and that is the no-data batch the engine then
+    * runs, so the tail flushes without a second arrival. Nothing is
+    * written to the zone while the query runs, so both sides of a
+    * stream-stream join take the same files in the same batches, and
+    * every run takes the same two micro-batches.
     */
   private[graft] def runWithSentinelFlush(spark: SparkSession,
-    stage: String, maxTs: java.sql.Timestamp, df: DataFrame, name: String,
+    stage: String, df: DataFrame, name: String,
     mode: OutputMode = OutputMode.Append()): DataFrame =
-    withConfs(spark, replayConfs(adaptiveStateParts(spark, stage))) {
-      val zone = new org.apache.hadoop.fs.Path(stage)
-      val fs = zone.getFileSystem(spark.sparkContext.hadoopConfiguration)
-      def files() = fs.listStatus(zone).map(_.getPath).toSet
-      val staged = files()
-      toMemory(df, name, mode, Trigger.ProcessingTime(0L)) { q =>
-        try {
-          q.processAllAvailable()               // real data + sentinel 1
-          sentinelRow(spark, maxTs, 2).write.mode("append").parquet(stage)
-          q.processAllAvailable()               // eviction batch emits
-        } finally {
-          q.stop()
-          (files() -- staged).foreach(fs.delete(_, false))
-        }
-      }
+    withConfs(spark, replayConfs(adaptiveStateParts(spark, stage),
+        noDataBatches = true)) {
+      toMemory(df, name, mode, Trigger.AvailableNow())(_.awaitTermination())
     }
 
   /** One side of a sentinel-flushed stream-stream join: `tpe` events and
@@ -567,24 +590,22 @@ object Streaming {
     * Outer rows only emit once the watermark PROVES no future match can
     * arrive, and an eviction always lands in the batch AFTER the
     * watermark advance — so a drained landing zone never flushes its
-    * tail (AvailableNow runs no trailing no-data batch). The runner
-    * therefore emulates what a live feed does naturally: after the real
-    * data is processed it appends two successively later SENTINEL
-    * arrivals, each followed by `processAllAvailable()` — the first
-    * advances the watermark past every real view, the second gives the
-    * eviction a batch to emit in. Sentinels pass through both sides'
-    * watermark nodes BEFORE the type filters, so they feed the watermark
-    * but never reach the join. The streaming answer then reconciles
-    * exactly with the batch LEFT JOIN; state stays bounded by the
-    * watermark horizon throughout.
+    * tail by itself. The zone's far-future SENTINEL arrival does what a
+    * live feed does naturally: it advances the watermark past every
+    * real view, and [[runWithSentinelFlush]]'s trailing no-data batch
+    * gives the eviction a batch to emit in. Sentinels pass through both
+    * sides' watermark nodes BEFORE the type filters, so they feed the
+    * watermark but never reach the join. The streaming answer then
+    * reconciles exactly with the batch LEFT JOIN; state stays bounded by
+    * the watermark horizon throughout.
     */
   def qStreamLeftJoin(spark: SparkSession, dir: String): DataFrame = {
-    val (stage, maxTs) = sentinelStage(spark, dir)
+    val stage = sentinelStage(spark, dir)
     val joined = sentinelSide(spark, stage, "view", "v").join(
       sentinelSide(spark, stage, "purchase", "p"),
       expr("v_user = p_user AND p_ts BETWEEN v_ts - INTERVAL 1 HOUR AND v_ts"),
       "left_outer")
-    runWithSentinelFlush(spark, stage, maxTs, joined,
+    runWithSentinelFlush(spark, stage, joined,
         s"graft_stream_lj_${runSeq.incrementAndGet()}")
       .filter(col("v_id") >= 0)
       .select(col("v_id"), col("p_id"), col("v_user").as("user_id"))
@@ -605,12 +626,12 @@ object Streaming {
     * null-padded ones.
     */
   def qStreamFullJoin(spark: SparkSession, dir: String): DataFrame = {
-    val (stage, maxTs) = sentinelStage(spark, dir)
+    val stage = sentinelStage(spark, dir)
     val joined = sentinelSide(spark, stage, "view", "v").join(
       sentinelSide(spark, stage, "purchase", "p"),
       expr("v_user = p_user AND p_ts BETWEEN v_ts - INTERVAL 1 HOUR AND v_ts"),
       "full_outer")
-    runWithSentinelFlush(spark, stage, maxTs, joined,
+    runWithSentinelFlush(spark, stage, joined,
         s"graft_stream_fj_${runSeq.incrementAndGet()}")
       .filter((col("v_id").isNull || col("v_id") >= 0) &&
         (col("p_id").isNull || col("p_id") >= 0))
@@ -629,14 +650,14 @@ object Streaming {
     * struct inside the horizon — evicted on emission.
     */
   def qStreamSessionWindow(spark: SparkSession, dir: String): DataFrame = {
-    val (stage, maxTs) = sentinelStage(spark, dir)
+    val stage = sentinelStage(spark, dir)
     val agg = eventStream(spark, stage)
       .select(col("user_id"),
         expr("timestamp_seconds(unix_timestamp(ts))").as("tss"))
       .withWatermark("tss", "2 hours")
       .groupBy(session_window(col("tss"), "30 minutes"), col("user_id"))
       .agg(count(lit(1)).as("n_events"))
-    runWithSentinelFlush(spark, stage, maxTs, agg,
+    runWithSentinelFlush(spark, stage, agg,
         s"graft_stream_sw_${runSeq.incrementAndGet()}")
       .filter(col("user_id") >= 0)
       .select(col("user_id"),
@@ -729,8 +750,9 @@ object Streaming {
     val run = s"$jvmTag${runSeq.incrementAndGet()}"
     val target = tmpPath(s"graft_stream_upsert_$run")
     val ckpt = tmpPath(s"graft_stream_upsert_ckpt_$run")
+    retireUpsertDirs(spark, Seq(target, ckpt))
     @volatile var lastBatch = -1L // foreachBatch bodies run on the driver
-    val q = eventStream(spark, stage, maxFilesPerTrigger = Some(1))
+    val q = start(spark, eventStream(spark, stage, maxFilesPerTrigger = Some(1))
       .writeStream
       .queryName(s"graft_stream_upsert_$run")
       .option("checkpointLocation", ckpt)
@@ -738,8 +760,13 @@ object Streaming {
         upsertMergeBatch(spark, batch, target, batchId)
         lastBatch = math.max(lastBatch, batchId)
       }
-      .trigger(Trigger.AvailableNow()).start()
-    q.awaitTermination()
+      .trigger(Trigger.AvailableNow()))
+    // deleteOnExit only registers a path that exists, hence after the run
+    try q.awaitTermination()
+    finally Seq(target, ckpt).foreach { d =>
+      val p = new org.apache.hadoop.fs.Path(d)
+      p.getFileSystem(spark.sparkContext.hadoopConfiguration).deleteOnExit(p)
+    }
     recordPlan(q)
     readUpsertStore(spark, target, lastBatch)
   }

@@ -364,12 +364,12 @@ object ScaleProbe {
         val stage = java.nio.file.Files
           .createTempDirectory(s"graft-probe-sess-$k").toString
         ev.coalesce(1).write.mode("overwrite").parquet(stage)
-        graft.streaming.Streaming.sentinelRow(spark, maxTs, 1)
+        graft.streaming.Streaming.sentinelRow(spark, maxTs)
           .write.mode("append").parquet(stage)
         var rows = -1L
         time(s"sessions_v2 ${k}x") {
           rows = graft.streaming.StateV2
-            .sessionRecordsOver(spark, stage, maxTs)
+            .sessionRecordsOver(spark, stage)
             .filter(col("user_id") >= 0).count()
           rows
         }

@@ -9,7 +9,9 @@ import org.apache.spark.sql.classic.{SparkSession => ClassicSession}
 /** One way to build a production session: every main takes
   * [[Bench.session]], so Bench, Verify and the tools run one optimizer.
   * `ForeignSessionSmoke` is the deliberate exception — it checks the
-  * loaders on a session built without the graft confs.
+  * loaders on a session built without the graft confs. Also checks that
+  * the engine registers no session artifacts, which the stream-start
+  * scope (`Streaming.startConfs`) relies on.
   */
 class SessionSpec extends SparkTestBase {
 
@@ -20,6 +22,17 @@ class SessionSpec extends SparkTestBase {
       .filter(p => Files.readString(p).contains("SparkSession.builder"))
       .map(_.getFileName.toString).toSeq.sorted
     assert(builders == Seq("Bench.scala", "ForeignSessionSmoke.scala"))
+  }
+
+  test("src/main registers no session artifacts") {
+    // a call here means `Streaming.startConfs` must be revisited
+    val call = """\b(addArtifacts?|addJar|addFile)\s*\(""".r
+    val root = Paths.get("src/main/scala")
+    val callers = Files.walk(root).iterator().asScala
+      .filter(p => p.toString.endsWith(".scala"))
+      .filter(p => call.findFirstIn(Files.readString(p)).isDefined)
+      .map(_.getFileName.toString).toSeq.sorted
+    assert(callers.isEmpty, s"session artifacts registered in $callers")
   }
 
   test("the shared test session's optimizer runs CollapseRedundantRound") {

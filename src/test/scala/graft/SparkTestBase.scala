@@ -44,6 +44,11 @@ object SparkTestBase {
       .config("spark.sql.legacy.parquet.nanosAsLong", "true")
       .config("spark.sql.extensions", "graft.functions.GraftExtensions")
       .config("spark.sql.maxMetadataStringLength", "2000")
+      // Spark's default generated-code cache (100 entries in four LRU
+      // segments of 25) lets one query's ~60 classes overflow a segment,
+      // which then recompiles on every run; StreamingLifecycleSpec's
+      // re-run check needs each lane's classes to stay cached
+      .config("spark.sql.codegen.cache.maxEntries", "400")
       .config("spark.sql.warehouse.dir",
         java.nio.file.Files.createTempDirectory("graft-wh").toString)
       .config("spark.ui.enabled", "false")

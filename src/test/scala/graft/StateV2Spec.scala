@@ -131,8 +131,8 @@ class StateV2Spec extends SparkTestBase {
       // two sentinel arrivals on a DIFFERENT key: the first advances the
       // watermark past user 1's timer target, the second provides the
       // batch the timer fires into (eviction always lands in the batch
-      // AFTER the watermark advance — same mechanics as
-      // runWithSentinelFlush)
+      // AFTER the watermark advance; runWithSentinelFlush gets that batch
+      // as the engine's trailing no-data batch)
       slice(-1L, Seq((-8L, 1000000L))).write.mode("append").parquet(stage)
       q.processAllAvailable()
       slice(-1L, Seq((-9L, 2000000L))).write.mode("append").parquet(stage)

@@ -1,12 +1,14 @@
 package graft
 
 import java.nio.file.{Files, Paths}
+import java.util.concurrent.atomic.AtomicInteger
 
 import scala.jdk.CollectionConverters._
 
-import org.apache.spark.sql.AnalysisException
+import org.apache.spark.metrics.source.CodegenMetrics
+import org.apache.spark.sql.{AnalysisException, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.streaming.OutputMode
+import org.apache.spark.sql.streaming.{OutputMode, StreamingQueryListener}
 
 import graft.streaming.Streaming
 
@@ -25,12 +27,13 @@ import graft.streaming.Streaming
   * exactly as long as the frame does.
   *
   * Also pins the single lifecycle path: `Streaming.withConfs` restores
-  * every key it sets, and the stream reader, memory-sink start and
-  * temp-dir root each live in one place.
+  * every key it sets, the stream reader, stream start, memory-sink writer
+  * and temp-dir root each live in one place, and a stream lane re-run
+  * reuses its generated classes.
   */
 class StreamingLifecycleSpec extends SparkTestBase {
 
-  private def runCounts(name: String): org.apache.spark.sql.DataFrame = {
+  private def runCounts(name: String): DataFrame = {
     val d = Files.createTempDirectory("graft-retire").toString
     spark.range(5).select(col("id")).coalesce(1).write.mode("overwrite").parquet(d)
     val stream = spark.readStream
@@ -134,10 +137,86 @@ class StreamingLifecycleSpec extends SparkTestBase {
     spark.conf.unset(set)
   }
 
+  test("withConfs leaves a known key unset when it was unset") {
+    // conf.getOption answers an unset known key with its default; the
+    // scope must not restore that default as an explicit setting
+    val key = "spark.sql.streaming.noDataMicroBatches.enabled"
+    spark.conf.unset(key)
+    Streaming.withConfs(spark, Seq(key -> "false")) {
+      assert(spark.conf.get(key) === "false")
+    }
+    assert(!spark.conf.getAll.contains(key))
+  }
+
+  test("every stream lane's second run compiles no class; the session's isolation conf is untouched") {
+    // Stream queries start with artifact isolation off on their session
+    // clone only (`Streaming.startConfs`), so a re-run's tasks load the
+    // previous run's generated classes. Run 1 leaves the key unset on the
+    // session, run 2 sets it: both must find it as they left it. Both runs
+    // must also take the same micro-batches: a run that split its feed
+    // differently would plan, and compile, other shapes.
+    val key = "spark.sql.artifact.isolation.enabled"
+    def compiles() = CodegenMetrics.METRIC_COMPILATION_TIME.getCount
+    val started, ended, batches = new AtomicInteger()
+    val listener = new StreamingQueryListener {
+      // the started event reaches listeners before `start()` returns;
+      // progress and termination arrive later, in order, on the bus
+      def onQueryStarted(e: StreamingQueryListener.QueryStartedEvent): Unit =
+        started.incrementAndGet()
+      def onQueryProgress(e: StreamingQueryListener.QueryProgressEvent): Unit =
+        batches.incrementAndGet()
+      def onQueryTerminated(
+          e: StreamingQueryListener.QueryTerminatedEvent): Unit =
+        ended.incrementAndGet()
+    }
+    def run(fn: (SparkSession, String) => DataFrame): Int = {
+      val b0 = batches.get
+      fn(spark, sfDir).count()
+      Streaming.retireAll(spark)
+      val deadline = System.nanoTime() + 60L * 1000 * 1000 * 1000
+      while (ended.get < started.get && System.nanoTime() < deadline)
+        Thread.sleep(2)
+      assert(ended.get === started.get, "listener bus did not drain in 60 s")
+      batches.get - b0
+    }
+    val lanes = SparkEntry.queries.toSeq.filter(_._1.startsWith("q_stream_"))
+    assert(lanes.size === 13)
+    spark.streams.addListener(listener)
+    val problems = try lanes.flatMap { case (name, fn) =>
+      spark.conf.unset(key)
+      val batches1 = run(fn)
+      val unsetKept = !spark.conf.getAll.contains(key)
+      val c0 = compiles()
+      val (batches2, setKept) = Streaming.withConfs(spark, Seq(key -> "true")) {
+        (run(fn), spark.conf.getAll.get(key).contains("true"))
+      }
+      val recompiled = compiles() - c0
+      Seq(s"$name: run 2 compiled $recompiled classes" -> (recompiled == 0),
+        s"$name: $batches1 then $batches2 micro-batches" ->
+          (batches1 == batches2 && batches1 > 0),
+        s"$name: unset key was set" -> unsetKept,
+        s"$name: set key changed" -> setKept).collect { case (p, false) => p }
+    } finally spark.streams.removeListener(listener)
+    assert(problems === Nil)
+  }
+
+  test("an upsert run's store and checkpoint go at the next run or at retireAll") {
+    val tmp = new java.io.File(sys.props("java.io.tmpdir"))
+    def upsertDirs() = tmp.list().count(_.startsWith("graft_stream_upsert_"))
+    Streaming.retireAll(spark)
+    val before = upsertDirs()
+    assert(Streaming.qStreamUpsert(spark, sfDir).count() > 0L)
+    assert(upsertDirs() === before + 2, "this run's store and checkpoint")
+    assert(Streaming.qStreamUpsert(spark, sfDir).count() > 0L)
+    assert(upsertDirs() === before + 2, "the first run's pair must be gone")
+    Streaming.retireAll(spark)
+    assert(upsertDirs() === before)
+  }
+
   test("one stream reader, one memory-sink start, one tmpdir root") {
     // every lane reads through Streaming.eventStream, starts through
-    // Streaming.toMemory (or the upsert's foreachBatch sink) and roots
-    // its paths at Sources.tmpPath
+    // Streaming.start (from Streaming.toMemory or the upsert's
+    // foreachBatch sink) and roots its paths at Sources.tmpPath
     val root = Paths.get("src/main/scala")
     def uses(token: String): Map[String, Int] =
       Files.walk(root).iterator().asScala
@@ -146,6 +225,7 @@ class StreamingLifecycleSpec extends SparkTestBase {
           .quote(token).r.findAllMatchIn(Files.readString(p)).size)
         .filter(_._2 > 0).toMap
     assert(uses("readStream") == Map("Streaming.scala" -> 1))
+    assert(uses(".start()") == Map("Streaming.scala" -> 1))
     assert(uses("writeStream") == Map("Streaming.scala" -> 2))
     assert(uses("java.io.tmpdir") == Map("Sources.scala" -> 1))
   }

@@ -249,8 +249,7 @@ class StreamingSpec extends SparkTestBase {
         if (r.isNullAt(1)) -1L else r.getLong(1), r.getLong(2))).toSet
     val want = asSet(batchAnswer)
     assert(want.exists(_._2 == -1L), "fixture must contain unmatched views")
-    // twice: the second run reuses a landing zone that already contains
-    // the first run's sentinel files — arrival order must stay safe
+    // twice: the second run replays the same memoized landing zone
     val first = asSet(Streaming.qStreamLeftJoin(spark, sfDir))
     assert(first == want)
     val second = asSet(Streaming.qStreamLeftJoin(spark, sfDir))
@@ -258,9 +257,9 @@ class StreamingSpec extends SparkTestBase {
   }
 
   test("sentinel-flushed runs leave the memoized landing zone as staged") {
-    // the flush appends a second sentinel to the shared zone; a zone that
-    // kept it would feed every later run one more file than a fresh JVM's
-    val (zone, _) = Streaming.sentinelStage(spark, sfDir)
+    // a zone that gained a file would feed every later run one more file
+    // than a fresh JVM's
+    val zone = Streaming.sentinelStage(spark, sfDir)
     def files() = new java.io.File(zone).list().toSet
     def rows() = Streaming.qStreamLeftJoin(spark, sfDir).collect().toSeq
     val staged = files()
