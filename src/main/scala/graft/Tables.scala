@@ -1,5 +1,7 @@
 package graft
 
+import scala.util.control.NonFatal
+
 import org.apache.spark.sql.{DataFrame, SparkSession}
 
 /** Loaders for the driver-generated parquet tables (TESTDATA.md).
@@ -35,7 +37,7 @@ object Tables {
       if (!cur.contains(rule))
         spark.conf.set("spark.sql.optimizer.excludedRules",
           if (cur.isEmpty) rule else s"$cur,$rule")
-    } catch { case _: Throwable => }
+    } catch { case NonFatal(_) => }
   }
 
   def load(spark: SparkSession, dir: String, name: String): DataFrame = {
@@ -60,7 +62,7 @@ object Tables {
     // defensive: make the read work even on sessions that didn't set the
     // legacy conf at build time (it is a runtime-settable SQL conf)
     try spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
-    catch { case _: Throwable => }
+    catch { case NonFatal(_) => }
     val raw = load(spark, dir, "events")
     if (raw.schema("ts").dataType == org.apache.spark.sql.types.LongType)
       raw.withColumn("ts", expr("timestamp_micros(ts div 1000)"))

@@ -292,7 +292,7 @@ object Streaming {
     retirePrevious(spark, name)
     val writer = df.writeStream.format("memory").queryName(name)
       .outputMode(mode).trigger(trigger)
-    val q = start(spark, ckpt.fold(writer)(writer.option("checkpointLocation", _)))
+    val q = start(spark, writer, ckpt)
     drive(q)
     recordPlan(q)
     spark.table(name)
@@ -314,13 +314,55 @@ object Streaming {
     * `SessionSpec` fails if `src/main` ever adds one. The scope stays this
     * narrow because the parent's own `ArtifactManager` reads the key once,
     * lazily, and must keep the session's value.
+    *
+    * Checkpoint file manager, on a local root only: Spark's default
+    * (`FileContext`-based) manager commits every checkpoint file with an
+    * overwrite-rename whose link-status lookups on the local filesystem
+    * each fork a `readlink` process through Hadoop's `Shell`. The
+    * `FileSystem`-based manager commits with `FileSystem.rename`, which
+    * on a local disk is one atomic `rename(2)`: a `q_stream_tumbling` run
+    * at sf0.1 forks no `readlink` instead of ~176. Offset, commit, source
+    * and metadata logs and every state-store file switch together,
+    * because they all read the key from the clone's conf; file names and
+    * Spark's state checksums are unchanged (`StreamingSpec`). Any other
+    * scheme keeps the default, whose atomic overwrite-rename is what
+    * those filesystems need ([[localCheckpointRoot]]).
     */
-  private val startConfs = Seq("spark.sql.artifact.isolation.enabled" -> "false")
+  private def startConfs(spark: SparkSession, ckpt: Option[String]) = {
+    val local = localCheckpointRoot(ckpt,
+      spark.conf.getOption("spark.sql.streaming.checkpointLocation"),
+      spark.conf.getOption("fs.defaultFS").getOrElse(
+        spark.sparkContext.hadoopConfiguration.get("fs.defaultFS", "file:///")))
+    Seq("spark.sql.artifact.isolation.enabled" -> "false") ++
+      Option.when(local)(CheckpointManagerKey -> RenameCheckpointManager)
+  }
 
-  /** The one place a stream query starts: `writer` under [[startConfs]]. */
-  private def start(spark: SparkSession, writer: DataStreamWriter[_])
-    : StreamingQuery =
-    withConfs(spark, startConfs)(writer.start())
+  private[graft] val CheckpointManagerKey =
+    "spark.sql.streaming.checkpointFileManagerClass"
+  private[graft] val RenameCheckpointManager = "org.apache.spark.sql." +
+    "execution.streaming.checkpointing.FileSystemBasedCheckpointFileManager"
+
+  /** Whether a query's checkpoint root is on the local (`file:`)
+    * filesystem, from the URIs alone: the root is `ckpt`, else the
+    * session's `sessionRoot` (Spark puts a named query under it), else
+    * Spark's temporary checkpoint, a scheme-less path; a scheme-less root
+    * resolves against `defaultFS`, as Spark resolves it.
+    */
+  private[graft] def localCheckpointRoot(ckpt: Option[String],
+      sessionRoot: Option[String], defaultFS: String): Boolean =
+    ckpt.orElse(sessionRoot)
+      .flatMap(r => Option(new org.apache.hadoop.fs.Path(r).toUri.getScheme))
+      .orElse(Option(java.net.URI.create(defaultFS).getScheme))
+      .forall(_ == "file")
+
+  /** The one place a stream query starts: `writer`, checkpointed at
+    * `ckpt` when given, under [[startConfs]].
+    */
+  private[graft] def start[T](spark: SparkSession, writer: DataStreamWriter[T],
+      ckpt: Option[String]): StreamingQuery =
+    withConfs(spark, startConfs(spark, ckpt)) {
+      ckpt.fold(writer)(writer.option("checkpointLocation", _)).start()
+    }
 
   private val lastMemTable =
     new java.util.concurrent.ConcurrentHashMap[String, String]()
@@ -755,12 +797,11 @@ object Streaming {
     val q = start(spark, eventStream(spark, stage, maxFilesPerTrigger = Some(1))
       .writeStream
       .queryName(s"graft_stream_upsert_$run")
-      .option("checkpointLocation", ckpt)
       .foreachBatch { (batch: DataFrame, batchId: Long) =>
         upsertMergeBatch(spark, batch, target, batchId)
         lastBatch = math.max(lastBatch, batchId)
       }
-      .trigger(Trigger.AvailableNow()))
+      .trigger(Trigger.AvailableNow()), Some(ckpt))
     // deleteOnExit only registers a path that exists, hence after the run
     try q.awaitTermination()
     finally Seq(target, ckpt).foreach { d =>

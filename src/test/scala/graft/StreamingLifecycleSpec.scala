@@ -8,7 +8,8 @@ import scala.jdk.CollectionConverters._
 import org.apache.spark.metrics.source.CodegenMetrics
 import org.apache.spark.sql.{AnalysisException, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.streaming.{OutputMode, StreamingQueryListener}
+import org.apache.spark.sql.streaming.{OutputMode, StreamingQuery,
+  StreamingQueryListener}
 
 import graft.streaming.Streaming
 
@@ -151,18 +152,27 @@ class StreamingLifecycleSpec extends SparkTestBase {
   test("every stream lane's second run compiles no class; the session's isolation conf is untouched") {
     // Stream queries start with artifact isolation off on their session
     // clone only (`Streaming.startConfs`), so a re-run's tasks load the
-    // previous run's generated classes. Run 1 leaves the key unset on the
-    // session, run 2 sets it: both must find it as they left it. Both runs
+    // previous run's generated classes. Every lane checkpoints on the
+    // local filesystem, so its clone also carries the rename-committing
+    // checkpoint manager. Run 1 leaves both keys unset on the session,
+    // run 2 sets them: both must find them as they left them. Both runs
     // must also take the same micro-batches: a run that split its feed
     // differently would plan, and compile, other shapes.
     val key = "spark.sql.artifact.isolation.enabled"
+    val managerKey = Streaming.CheckpointManagerKey
+    val defaultManager = "org.apache.spark.sql.execution.streaming." +
+      "checkpointing.FileContextBasedCheckpointFileManager"
     def compiles() = CodegenMetrics.METRIC_COMPILATION_TIME.getCount
     val started, ended, batches = new AtomicInteger()
+    val cloneManagers = new java.util.concurrent.ConcurrentLinkedQueue[String]()
     val listener = new StreamingQueryListener {
       // the started event reaches listeners before `start()` returns;
       // progress and termination arrive later, in order, on the bus
-      def onQueryStarted(e: StreamingQueryListener.QueryStartedEvent): Unit =
+      def onQueryStarted(e: StreamingQueryListener.QueryStartedEvent): Unit = {
+        cloneManagers.add(streamSession(spark.streams.get(e.id))
+          .conf.getOption(managerKey).getOrElse("<unset>"))
         started.incrementAndGet()
+      }
       def onQueryProgress(e: StreamingQueryListener.QueryProgressEvent): Unit =
         batches.incrementAndGet()
       def onQueryTerminated(
@@ -184,20 +194,56 @@ class StreamingLifecycleSpec extends SparkTestBase {
     spark.streams.addListener(listener)
     val problems = try lanes.flatMap { case (name, fn) =>
       spark.conf.unset(key)
+      spark.conf.unset(managerKey)
+      cloneManagers.clear()
       val batches1 = run(fn)
-      val unsetKept = !spark.conf.getAll.contains(key)
+      val unsetKept = !spark.conf.getAll.contains(key) &&
+        !spark.conf.getAll.contains(managerKey)
       val c0 = compiles()
-      val (batches2, setKept) = Streaming.withConfs(spark, Seq(key -> "true")) {
-        (run(fn), spark.conf.getAll.get(key).contains("true"))
+      val set = Seq(key -> "true", managerKey -> defaultManager)
+      val (batches2, setKept) = Streaming.withConfs(spark, set) {
+        (run(fn),
+          set.forall { case (k, v) => spark.conf.getAll.get(k).contains(v) })
       }
       val recompiled = compiles() - c0
+      val managers = cloneManagers.asScala.toSeq
       Seq(s"$name: run 2 compiled $recompiled classes" -> (recompiled == 0),
         s"$name: $batches1 then $batches2 micro-batches" ->
           (batches1 == batches2 && batches1 > 0),
+        s"$name: clones' checkpoint managers $managers" -> (managers.nonEmpty &&
+          managers.forall(_ == Streaming.RenameCheckpointManager)),
         s"$name: unset key was set" -> unsetKept,
         s"$name: set key changed" -> setKept).collect { case (p, false) => p }
     } finally spark.streams.removeListener(listener)
     assert(problems === Nil)
+  }
+
+  /** The session clone a started query runs on (`StreamExecution` keeps it
+    * in a field Spark does not expose to other packages).
+    */
+  private def streamSession(q: StreamingQuery): SparkSession = {
+    val exec = q.getClass.getMethod("streamingQuery").invoke(q)
+    exec.getClass.getMethod("sparkSessionForStream").invoke(exec)
+      .asInstanceOf[SparkSession]
+  }
+
+  test("only a local checkpoint root commits by rename; the decision reads no filesystem") {
+    // the URIs are never opened: an `hdfs://nn` root would fail any lookup
+    val local = "file:///"
+    def renames(ckpt: Option[String], sessionRoot: Option[String] = None,
+        defaultFS: String = local) =
+      Streaming.localCheckpointRoot(ckpt, sessionRoot, defaultFS)
+    assert(renames(None), "Spark's temporary checkpoint is local")
+    assert(renames(Some("file:/x")))
+    assert(renames(Some("/x")), "a scheme-less root under a local defaultFS")
+    assert(!renames(Some("hdfs://nn/x")))
+    assert(!renames(None, sessionRoot = Some("hdfs://nn/c")),
+      "the session's checkpointLocation roots a query started without one")
+    assert(renames(Some("file:/x"), sessionRoot = Some("hdfs://nn/c")),
+      "the query's own root wins over the session's")
+    assert(!renames(Some("/x"), defaultFS = "hdfs://nn"),
+      "a scheme-less root resolves against defaultFS")
+    assert(!renames(None, defaultFS = "hdfs://nn"))
   }
 
   test("an upsert run's store and checkpoint go at the next run or at retireAll") {
@@ -228,5 +274,7 @@ class StreamingLifecycleSpec extends SparkTestBase {
     assert(uses(".start()") == Map("Streaming.scala" -> 1))
     assert(uses("writeStream") == Map("Streaming.scala" -> 2))
     assert(uses("java.io.tmpdir") == Map("Sources.scala" -> 1))
+    // the stream-start scope is the one place that picks the manager
+    assert(uses("checkpointFileManagerClass").keySet == Set("Streaming.scala"))
   }
 }

@@ -2,6 +2,8 @@ package graft
 
 import java.nio.file.Files
 
+import scala.jdk.CollectionConverters._
+
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.OutputMode
 
@@ -143,14 +145,14 @@ class StreamingSpec extends SparkTestBase {
     val processed = new java.util.concurrent.atomic.AtomicLong(0)
     def runOnce(): Long = {
       processed.set(0)
-      val q = spark.readStream.schema(Streaming.eventSchema).parquet(land)
-        .writeStream
-        .option("checkpointLocation", ckpt)
-        .foreachBatch { (b: org.apache.spark.sql.DataFrame, _: Long) =>
-          processed.addAndGet(b.count()); ()
-        }
-        .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
-        .start()
+      val q = Streaming.start(spark,
+        spark.readStream.schema(Streaming.eventSchema).parquet(land)
+          .writeStream
+          .foreachBatch { (b: org.apache.spark.sql.DataFrame, _: Long) =>
+            processed.addAndGet(b.count()); ()
+          }
+          .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow()),
+        Some(ckpt))
       q.awaitTermination()
       processed.get()
     }
@@ -163,7 +165,6 @@ class StreamingSpec extends SparkTestBase {
 
   test("upsert killed mid-stream resumes from checkpoint exactly-once") {
     import org.apache.spark.sql.functions._
-    import scala.jdk.CollectionConverters._
     // own landing zone (4 files -> 4 micro-batches), checkpoint, store
     val stage = java.nio.file.Files
       .createTempDirectory("graft-crash-stage").toString
@@ -177,22 +178,22 @@ class StreamingSpec extends SparkTestBase {
     val bomb = new java.util.concurrent.atomic.AtomicBoolean(true)
     def run(): Long = {
       var lastBatch = -1L
-      val q = spark.readStream.schema(Streaming.eventSchema)
-        .option("maxFilesPerTrigger", "1").parquet(stage)
-        .writeStream
-        .option("checkpointLocation", ckpt)
-        .foreachBatch { (b: org.apache.spark.sql.DataFrame, id: Long) =>
-          attempts.add(id)
-          Streaming.upsertMergeBatch(spark, b, target, id)
-          lastBatch = math.max(lastBatch, id)
-          // crash AFTER the sink write but BEFORE Spark commits the
-          // batch — the worst-case failure point: the work is done but
-          // unacknowledged, so resume MUST redeliver this batch and the
-          // sink must absorb the duplicate
-          if (id == 2L && bomb.getAndSet(false)) sys.error("injected crash")
-        }
-        .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
-        .start()
+      val q = Streaming.start(spark,
+        spark.readStream.schema(Streaming.eventSchema)
+          .option("maxFilesPerTrigger", "1").parquet(stage)
+          .writeStream
+          .foreachBatch { (b: org.apache.spark.sql.DataFrame, id: Long) =>
+            attempts.add(id)
+            Streaming.upsertMergeBatch(spark, b, target, id)
+            lastBatch = math.max(lastBatch, id)
+            // crash AFTER the sink write but BEFORE Spark commits the
+            // batch — the worst-case failure point: the work is done but
+            // unacknowledged, so resume MUST redeliver this batch and the
+            // sink must absorb the duplicate
+            if (id == 2L && bomb.getAndSet(false)) sys.error("injected crash")
+          }
+          .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow()),
+        Some(ckpt))
       try q.awaitTermination()
       catch {
         case _: org.apache.spark.sql.streaming.StreamingQueryException => ()
@@ -227,6 +228,46 @@ class StreamingSpec extends SparkTestBase {
         ((r.getLong(1), r.getString(2), r.getDouble(3)))).toMap
     assert(got == want,
       "post-crash store must equal the batch latest-wins oracle")
+  }
+
+  test("a checkpoint committed by rename holds the same files and rows as Spark's default") {
+    // a stateful query over a 4-file zone, one file per micro-batch: once
+    // through Streaming.start (the rename-committing manager on this local
+    // root), once started directly (Spark's default manager)
+    val stage = Files.createTempDirectory("graft-ckpt-parity").toString
+    graft.Tables.events(spark, sfDir).repartition(4)
+      .write.mode("overwrite").parquet(stage)
+    def run(name: String, viaEngine: Boolean): (Set[String], Set[String]) = {
+      val ckpt = Files.createTempDirectory(s"graft-ckpt-$name").toString
+      val writer = spark.readStream.schema(Streaming.eventSchema)
+        .option("maxFilesPerTrigger", "1").parquet(stage)
+        .groupBy(col("event_type")).agg(count(lit(1)).as("n"))
+        .writeStream.format("memory").queryName(name)
+        .outputMode(OutputMode.Complete())
+        .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
+      val q =
+        if (viaEngine) Streaming.start(spark, writer, Some(ckpt))
+        else writer.option("checkpointLocation", ckpt).start()
+      q.awaitTermination()
+      val root = java.nio.file.Paths.get(ckpt)
+      val files = Files.walk(root).iterator().asScala
+        .filter(Files.isRegularFile(_)).map(root.relativize(_).toString).toSet
+      val rows = spark.table(name).collect().map(_.toString).toSet
+      spark.catalog.dropTempView(name)
+      (files, rows)
+    }
+    val (renamed, renamedRows) = run("graft_ckpt_parity_engine", viaEngine = true)
+    val (default, defaultRows) = run("graft_ckpt_parity_default", viaEngine = false)
+    assert(renamed === default)
+    // logs, state deltas, Spark's state checksums (`4.delta.crc`) and
+    // Hadoop's checksum sidecars (`.4.delta.crc`, `.3.crc`)
+    Seq("offsets/3", "offsets/.3.crc", "commits/3", "metadata", "sources/0/3",
+      "state/0/0/4.delta", "state/0/0/4.delta.crc", "state/0/0/.4.delta.crc")
+      .foreach { f =>
+        assert(renamed.contains(f), s"$f missing from ${renamed.toSeq.sorted}")
+      }
+    assert(renamedRows === defaultRows)
+    assert(renamedRows.nonEmpty)
   }
 
   test("stream-stream left outer join == batch left join, repeatable") {
