@@ -1,4 +1,5 @@
 package graft
+import scala.util.control.NonFatal
 import org.apache.spark.sql.SparkSession
 object Bench {
   def main(args: Array[String]): Unit = {
@@ -19,7 +20,7 @@ object Bench {
     val warmDir = "/root/testdata/sf0.001"
     if (new java.io.File(warmDir).isDirectory && warmDir != sfDir) {
       SparkEntry.queries.foreach { case (_, fn) =>
-        try fn(spark, warmDir).count() catch { case _: Throwable => }
+        try fn(spark, warmDir).count() catch { case NonFatal(_) => }
       }
       // The streaming queries stage a landing-zone copy of the TIMED
       // sfDir's events table on first touch (a one-time setup write, not
@@ -27,7 +28,7 @@ object Bench {
       // measures the micro-batch engine, not the staging I/O.
       SparkEntry.queries.foreach { case (name, fn) =>
         if (name.startsWith("q_stream_"))
-          try fn(spark, sfDir).count() catch { case _: Throwable => }
+          try fn(spark, sfDir).count() catch { case NonFatal(_) => }
       }
       // the warm pass's sink tables are consumed — drop them so the
       // timed passes start at zero driver-resident sink footprint
@@ -37,7 +38,7 @@ object Bench {
         spark.read.parquet(s"$sfDir/lineitem.parquet")
           .limit(1000).groupBy("l_returnflag").count().count()
         spark.read.parquet(s"$sfDir/documents.parquet").limit(10).count()
-      } catch { case _: Throwable => }
+      } catch { case NonFatal(_) => }
     // Queries whose pass threw (exception swallowed so one bad query
     // doesn't kill the whole bench) — RECORDED in the artifact: an r15
     // session had a storage OOM kill the SparkContext at query 60/166,
@@ -49,7 +50,7 @@ object Bench {
     val results = SparkEntry.queries.toSeq.sortBy(_._1).map { case (name, fn) =>
       val t0 = System.nanoTime()
       try fn(spark, sfDir).count()
-      catch { case _: Throwable => failedQueries += name }
+      catch { case NonFatal(_) => failedQueries += name }
       val secs = (System.nanoTime() - t0) / 1e9
       // Memory-sink hygiene OUTSIDE the timed window: this query's
       // result is consumed (count above), so its driver-resident sink

@@ -89,8 +89,8 @@ object Dedup {
     * on the gate corpora the deepest bucket holds 2 docs, so the cap
     * never fires there and the capped pipeline is bit-identical to the
     * exact one; on a boilerplate-replicated corpus it is the difference
-    * between linear and quadratic candidate growth (ScaleProbe's
-    * `minhash cap` rows).
+    * between linear and quadratic candidate growth (SCALE.md's
+    * measured-scaling `minhash cap` rows).
     */
   val MinhashBandCap = 64L
 
@@ -198,8 +198,8 @@ object Dedup {
     * reported jaccard ≤ true jaccard and pairs sharing ONLY boilerplate
     * drop out — exactly what a dedup pipeline wants. Default ∞ keeps the
     * exact semantics for the oracle-checked query; at 100 TB you always
-    * set a cap (the ScaleProbe `jaccard df-cap` rows show the bounded
-    * vs quadratic growth).
+    * set a cap (SCALE.md's measured-scaling `dfCap` rows show the
+    * bounded vs quadratic growth).
     */
   def jaccardPairsOf(docsIn: DataFrame, minJ: Double,
     dfCap: Long = Long.MaxValue): DataFrame = {

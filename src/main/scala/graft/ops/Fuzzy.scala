@@ -25,9 +25,9 @@ import graft.Tables
   * candidate pairs. `dfCap` wires the same count-prepass + broadcast
   * anti-join the Jaccard lane uses ([[Dedup.jaccardPairsOf]]) — and
   * unlike Jaccard's lower-bound semantics, here the cap stays LOSSLESS
-  * (proof at [[fuzzySelfJoin]]). ScaleProbe's `fuzzy` rows measure the
-  * contrast: uncapped candidates grow ~k² under 10× replication while
-  * capped growth stays near-linear, with identical final pairs.
+  * (proof at [[fuzzySelfJoin]]). SCALE.md's fuzzy probe table records
+  * the contrast: uncapped candidates grow ~k² under 10× replication
+  * while capped growth stays near-linear, with identical final pairs.
   */
 object Fuzzy {
 
@@ -75,12 +75,12 @@ object Fuzzy {
       .orderBy("name_a", "name_b")
 
   /** The candidate pairs the blocking emits (before Levenshtein
-    * verification) — exposed so ScaleProbe can measure what the df-cap
-    * actually bounds: candidate growth is where the skew blowup lives;
-    * the verified-pair count is the same either way (losslessness).
+    * verification) — what the df-cap actually bounds: candidate growth
+    * is where the skew blowup lives; the verified-pair count is the
+    * same either way (losslessness).
     */
-  def fuzzyCandidates(names: DataFrame, maxDist: Int,
-    dfCap: Long = Long.MaxValue): DataFrame = {
+  private def fuzzyCandidates(names: DataFrame, maxDist: Int,
+    dfCap: Long): DataFrame = {
     val n = names.select(col("name")).distinct()
     val minSafeLen = 3 * maxDist - 1
     val grams = n.select(col("name"), explode(expr(

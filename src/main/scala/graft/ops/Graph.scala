@@ -53,7 +53,7 @@ object Graph {
     * shuffle-hash join of edges and ranks on the node key — the
     * classic Pregel shape, edges shuffling once per iteration per
     * direction); results are identical by construction and the
-    * ScaleProbe row measures the cost gap.
+    * PageRank join-strategy gap in SCALE.md records the cost.
     */
   def pagerank(edgesIn: DataFrame, iters: Int,
     reliableCheckpoint: Boolean = false,

@@ -125,33 +125,11 @@ object Relational4 {
     * bound per-activation input anyway; only single-node benches with
     * cores-many giant partitions expose whole-stage starvation. At the
     * gate scales the bound is a no-op (waves = 1, plan unchanged).
+    * A deployment that wants the shared-map aggregate path instead sets
+    * Spark's `spark.sql.codegen.aggregate.map.twolevel.enabled=false`.
     */
   def qEventResample(spark: SparkSession, dir: String): DataFrame = {
-    // r16 scoped shared-map lever: every r13–r15 cliff capture starves
-    // in THIS query's per-query generated fast-map `findOrInsert`; the
-    // shared `BytesToBytesMap` path (twolevel.enabled=false) is
-    // profile-hot JVM-wide and has no per-query nmethod to starve. The
-    // r15 global A/B priced the flip at ~2× on this query's clean
-    // passes but ~0 globally — so the flip must be scoped to exactly
-    // this query, not the session. Spark has no per-query conf, but a
-    // child session (shares SparkContext, cached data, the JVM-global
-    // codegen cache, and the context-bus listeners; SQLConf re-merged
-    // from the SparkContext conf) carries the flip for only the plans
-    // built against it. Knob: `spark.graft.resample.fastMapOff`
-    // (flows in via -Dspark.graft.resample.fastMapOff=… like any
-    // spark.* property). Adjudicated by the r16 alternating-arm ev100
-    // campaign (SCALE.md §round-16): default
-    // stays FALSE — cluster executors (few cores per JVM, file-split-
-    // bounded activations) never hit the starvation precondition and
-    // keep the fast map's ~2.1× win on this aggregate; single-JVM
-    // many-core deployments where agg-stage p99 matters should set it
-    // true (measured: resample 2.1× steady-state, ZERO other-lane
-    // cost by construction, 0 cliffs in 10 drifted-morning treatment
-    // passes vs the control arm's 3-in-10 at 77.8–115.8 s).
     val parts = spark.conf.get("spark.sql.shuffle.partitions").toInt
-    val fastMapOff =
-      spark.conf.get("spark.graft.resample.fastMapOff", "false").toBoolean
-    val s = if (!fastMapOff) spark else scopedSharedMapSession(spark)
     // waves keyed off the summed SOURCE FILE bytes, not
     // optimizedPlan.stats.sizeInBytes (r15 ADVICE): the estimator value
     // shifts with session conf (fileCompressionFactor) and silently
@@ -160,7 +138,7 @@ object Relational4 {
     val waves = activationWaves(
       BigInt(graft.sources.Sources.sourceFileBytes(spark, s"$dir/events.parquet")),
       parts)
-    val e = Tables.events(s, dir)
+    val e = Tables.events(spark, dir)
       .withColumn("minute", expr("unix_timestamp(ts) div 60"))
     val perMin = e
       .select(col("user_id"), col("minute"), col("value"))
@@ -184,44 +162,6 @@ object Relational4 {
           .otherwise(0L)).as("n_gap_filled"),
         max_by(col("ff"), col("m")).as("final_value"))
       .orderBy("user_id")
-  }
-
-  /** Memoized child session carrying the shared-map flip for
-    * [[qEventResample]] (one per parent session, r16 ADVICE — a fresh
-    * `newSession()` per call builds a new SessionState/catalog each
-    * time, which accumulates over repeated passes in one JVM or
-    * repeated interactive calls). Weak keys: the cache must not pin a
-    * stopped parent session.
-    *
-    * `newSession()` re-merges SQLConf from the SparkContext conf ONLY,
-    * so caller RUNTIME `conf.set` overrides (session timezone,
-    * shuffle.partitions, AQE flags) would otherwise silently not apply
-    * to the scoped plan (r16 ADVICE). Each call therefore re-syncs the
-    * parent's current runtime confs onto the child — diff-only, so
-    * static confs (identical on both by construction, unsettable at
-    * runtime) are never touched — then re-asserts the flip last.
-    * Residual edge, accepted: a key `set` then `unset` on the parent
-    * between calls lingers on the child (getAll carries no tombstones);
-    * the only mid-session unsets are `Streaming.withConfs` scopes, which
-    * never enclose a call here.
-    */
-  private val scopedSessions =
-    new java.util.WeakHashMap[SparkSession, SparkSession]()
-
-  private def scopedSharedMapSession(parent: SparkSession): SparkSession = {
-    val child = scopedSessions.synchronized {
-      var c = scopedSessions.get(parent)
-      if (c == null) { c = parent.newSession(); scopedSessions.put(parent, c) }
-      c
-    }
-    parent.conf.getAll.foreach { case (k, v) =>
-      if (!child.conf.getOption(k).contains(v))
-        try child.conf.set(k, v)
-        catch { case _: org.apache.spark.sql.AnalysisException => () }
-    }
-    child.conf.set(
-      "spark.sql.codegen.aggregate.map.twolevel.enabled", "false")
-    child
   }
 
   /** Waves of tasks per core for [[qEventResample]]'s pinned exchange:

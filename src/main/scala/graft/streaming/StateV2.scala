@@ -392,12 +392,12 @@ object StateV2 {
   }
 
   /** The ListState session pipeline over any sentinel-staged landing
-    * zone (public so the scale probe can drive it on replicated feeds):
-    * runs to completion with the sentinel flush and returns the raw
-    * (user_id, start_sec, end_sec, n_events) records, sentinels
+    * zone: runs to completion with the sentinel flush and returns the
+    * raw (user_id, start_sec, end_sec, n_events) records, sentinels
     * included — callers filter/project.
     */
-  def sessionRecordsOver(spark: SparkSession, stage: String): DataFrame = {
+  private[graft] def sessionRecordsOver(spark: SparkSession,
+    stage: String): DataFrame = {
     import spark.implicits._
     val typed = Streaming.eventStream(spark, stage)
       .withWatermark("ts", "2 hours")

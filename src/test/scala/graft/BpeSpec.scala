@@ -83,8 +83,8 @@ class BpeSpec extends SparkTestBase {
   // all previous regexp rewrites from the scan (O(k²) corpus passes;
   // 13.9 s for q_bpe_merges alone at sf0.1 k=5 in BENCH_r06). With the
   // eager localCheckpoint per iteration the loop is 2 narrow passes per
-  // merge; measured after: see SCALE.md's BPE section and the k-sweep
-  // ScaleProbe row (flat per-iteration cost through k=50).
+  // merge; measured after: see SCALE.md's BPE section and its k-sweep
+  // (flat per-iteration cost through k=50).
 
   test("plain-Scala model replay on the sf0.001 corpus") {
     // replay the loop in-memory: tokenize, then k rounds of pair-count /

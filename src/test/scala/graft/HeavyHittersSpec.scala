@@ -44,6 +44,18 @@ class HeavyHittersSpec extends SparkTestBase {
     assert(got.toSeq == want.toSeq)
   }
 
+  test("heavy-hitter answer is k-invariant under exact k-fold replication") {
+    // k copies multiply every count AND the relative threshold by k, so
+    // the same tokens clear it, each with exactly k times its count
+    def answer(k: Int) = HeavyHitters.heavyHitters(
+        Seq.fill(k)(HeavyHitters.corpusTokens(spark, sfDir)).reduce(_ union _),
+        permille = 5L)
+      .collect().map(r => (r.getString(0), r.getLong(1))).toSeq
+    val base = answer(1)
+    assert(base.nonEmpty, "sf0.001 corpus should have hot tokens at 5 permille")
+    assert(answer(2) == base.map { case (t, n) => (t, 2L * n) })
+  }
+
   test("the sketch estimate never underestimates any token's true count") {
     import spark.implicits._
     // collisions guaranteed: vocab 5000 > width 2048, so buckets mix

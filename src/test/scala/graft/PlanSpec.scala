@@ -75,62 +75,6 @@ class PlanSpec extends SparkTestBase {
         p.linesIterator.filter(_.contains("Repartition")).mkString("\n"))
   }
 
-  test("resample's scoped shared-map knob flips only its own session (r16)") {
-    // `spark.graft.resample.fastMapOff` routes ONLY this query's plans
-    // through the shared BytesToBytesMap aggregate path (the r13–r15
-    // cliff captures all starve in the per-query generated fast map's
-    // findOrInsert). The mechanism is a child session — the flip must
-    // be visible on the returned DataFrame's session, invisible on the
-    // caller's, inherit the caller's builder confs, and not change
-    // results.
-    val key = "spark.graft.resample.fastMapOff"
-    val tl = "spark.sql.codegen.aggregate.map.twolevel.enabled"
-    // capture, don't hard-code (r16 ADVICE): the non-leakage claim is
-    // "caller's value UNCHANGED", not "caller's value is the stock
-    // default" — a harness that ever sets this conf should not turn
-    // this into a wrong-reason failure
-    val tlBefore = spark.conf.get(tl)
-    val base = graft.ops.Relational4.qEventResample(spark, sfDir)
-    assert(base.sparkSession eq spark,
-      "knob off must build on the caller's session (zero-cost default)")
-    val expected = base.collect().map(_.toString).sorted
-    spark.conf.set(key, "true")
-    val rtKey = "spark.sql.adaptive.advisoryPartitionSizeInBytes"
-    val rtBefore = spark.conf.getOption(rtKey)
-    try {
-      val scoped = graft.ops.Relational4.qEventResample(spark, sfDir)
-      assert(scoped.sparkSession ne spark,
-        "knob on must build on a child session")
-      assert(scoped.sparkSession.conf.get(tl) == "false",
-        "child session must run the shared-map aggregate path")
-      assert(spark.conf.get(tl) == tlBefore,
-        "the twolevel flip must not leak to the caller's session")
-      assert(scoped.sparkSession.conf.get("spark.sql.shuffle.partitions")
-          == spark.conf.get("spark.sql.shuffle.partitions"),
-        "child must inherit the caller's builder confs")
-      // r17: one child per parent (memoized), and caller RUNTIME
-      // conf.set overrides re-sync onto it each call — newSession()
-      // alone only merges builder-time confs from the SparkContext
-      val again = graft.ops.Relational4.qEventResample(spark, sfDir)
-      assert(again.sparkSession eq scoped.sparkSession,
-        "repeated calls must reuse one memoized child session")
-      spark.conf.set(rtKey, "48m")
-      val synced = graft.ops.Relational4.qEventResample(spark, sfDir)
-      assert(synced.sparkSession.conf.get(rtKey) == "48m",
-        "caller runtime conf overrides must reach the scoped session")
-      assert(synced.sparkSession.conf.get(tl) == "false",
-        "the flip must survive the runtime-conf re-sync")
-      assert(scoped.collect().map(_.toString).sorted.sameElements(expected),
-        "scoped path must be result-identical")
-    } finally {
-      spark.conf.unset(key)
-      rtBefore match {
-        case Some(v) => spark.conf.set(rtKey, v)
-        case None => spark.conf.unset(rtKey)
-      }
-    }
-  }
-
   test("global sort is range-partitioned, not single-reducer") {
     // the reference's global sort funnels everything through ONE reducer
     // (grep pattern, SURVEY §2b); ours must be a range-partitioned

@@ -17,11 +17,14 @@ class SessionSpec extends SparkTestBase {
 
   test("SparkSession.builder appears only in Bench and ForeignSessionSmoke") {
     val root = Paths.get("src/main/scala")
-    val builders = Files.walk(root).iterator().asScala
+    def filesWith(pattern: String) = Files.walk(root).iterator().asScala
       .filter(p => p.toString.endsWith(".scala"))
-      .filter(p => Files.readString(p).contains("SparkSession.builder"))
+      .filter(p => Files.readString(p).contains(pattern))
       .map(_.getFileName.toString).toSeq.sorted
-    assert(builders == Seq("Bench.scala", "ForeignSessionSmoke.scala"))
+    assert(filesWith("SparkSession.builder") ==
+      Seq("Bench.scala", "ForeignSessionSmoke.scala"))
+    // a child session is a second way to build one
+    assert(filesWith("newSession(").isEmpty)
   }
 
   test("src/main registers no session artifacts") {

@@ -95,6 +95,33 @@ class StateV2Spec extends SparkTestBase {
     assert(got.nonEmpty && got == want)
   }
 
+  test("sessions_v2 records scale exactly k-fold over replicas with distinct users") {
+    // k copies of the feed, each shifted onto its own user range, so
+    // per-user state never mixes across replicas: every replica must
+    // yield exactly the base run's records, shifted by its user stride
+    val stride = 10000000L
+    val events = graft.Tables.events(spark, sfDir)
+    val nEvents = events.count()
+    def records(k: Int): Seq[(Long, Long, Long, Long)] = {
+      val ev = (0 until k).map(i => events
+          .withColumn("user_id", col("user_id") + lit(i * stride))
+          .withColumn("event_id", col("event_id") + lit(i * nEvents)))
+        .reduce(_ union _)
+      val maxTs = ev.agg(max(col("ts"))).head().getTimestamp(0)
+      val stage = Files.createTempDirectory(s"graft-tws-replicas-$k").toString
+      ev.repartition(1).sortWithinPartitions("ts", "event_id")
+        .write.mode("overwrite").parquet(stage)
+      Streaming.sentinelRow(spark, maxTs).write.mode("append").parquet(stage)
+      StateV2.sessionRecordsOver(spark, stage).filter(col("user_id") >= 0)
+        .collect().map(r => (r.getLong(0), r.getLong(1), r.getLong(2),
+          r.getLong(3))).toSeq.sorted
+    }
+    val base = records(1)
+    assert(base.nonEmpty)
+    val shifted = base.map(r => r.copy(_1 = r._1 + stride))
+    assert(records(2) == (base ++ shifted).sorted)
+  }
+
   test("ListState sessionizer folds a late-but-in-horizon event across batches") {
     // Three hand-driven micro-batches: user 1's events arrive 1000,
     // then {900, 2000} — 900 is LATE relative to batch 1's maximum but

@@ -15,8 +15,8 @@ stride = max(key)+1 of the base table, keeping FK structure intact:
   supplier.s_suppkey  <- lineitem.l_suppkey
   documents.doc_id    <- embeddings.vec_id (the curate lane pairs the
                          two on doc_id space, so embeddings stride by
-                         the DOCUMENTS key span — see ScaleProbe's
-                         scaledEmbClusters rationale)
+                         the DOCUMENTS key span — see the curate note
+                         under SCALE.md's round-4 lanes table)
 Dimension enums (region, nation) are copied unreplicated — dims grow
 slower than facts. Embedding labels shift by i*10 per replica (cluster
 count tracks the corpus: the SemDeDup design point).
