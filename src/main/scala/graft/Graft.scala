@@ -195,12 +195,27 @@ object Graft {
     /** Distinct-token ratio + top-bigram fraction repetition filters. */
     def repetition(docs: DataFrame): DataFrame = ops.Text.repetitionOf(docs)
 
-    /** TF-IDF keyword extraction: top-k terms per doc by tf·ln(N/df). */
+    /** TF-IDF keyword extraction: top-k terms per doc by tf·ln(N/df).
+      *
+      * Building it runs Spark jobs: an eager `localCheckpoint` pins
+      * the (doc_id, term, tf) table on the executors when this method
+      * is called, not when the returned frame runs. The pinned
+      * snapshot lives in executor block storage with its lineage cut,
+      * so losing an executor that holds a block fails the query
+      * instead of recomputing it.
+      */
     def tfidfTop(docs: DataFrame, k: Int = 3): DataFrame =
       ops.Text.tfidfTopOf(docs, k)
 
     /** PMI collocations: top-k adjacent token pairs by pointwise mutual
       * information (the BPE-style merge-rule signal).
+      *
+      * Building it runs Spark jobs: eager `localCheckpoint`s pin
+      * the unigram and bigram count tables on the executors when this
+      * method is called, not when the returned frame runs. The pinned
+      * snapshots live in executor block storage with their lineage
+      * cut, so losing an executor that holds a block fails the query
+      * instead of recomputing it.
       */
     def pmiBigrams(docs: DataFrame, minCount: Int = 3, k: Int = 15): DataFrame =
       ops.Text2.pmiBigramsOf(docs, minCount, k)
@@ -230,6 +245,13 @@ object Graft {
 
     /** Corpus-trained unigram-LM mean log-prob per document — the
       * model-free fluency/quality score.
+      *
+      * Building it runs Spark jobs: an eager `localCheckpoint` pins
+      * the vocabulary count table on the executors when this method is
+      * called, not when the returned frame runs. The pinned snapshot
+      * lives in executor block storage with its lineage cut, so losing
+      * an executor that holds a block fails the query instead of
+      * recomputing it.
       */
     def unigramLmScores(docs: DataFrame): DataFrame =
       ops.Text2.unigramLmScores(docs)

@@ -79,21 +79,36 @@ object Tables {
     * and this is a no-op. Costs one exchange of the raw rows, which pays
     * off exactly when per-row CPU dominates row width (the dedup/text/
     * similarity pipelines); scan-dominated relational queries skip it.
+    *
+    * The exchange hash-partitions on the row `keys`, the way the
+    * reference's map side partitions once by the key its reducer groups
+    * on. What the key buys:
+    *  - an aggregate or window keyed on it (or on a superset of it) that
+    *    sits on the spread — `groupBy(doc_id, w)` after a token explode,
+    *    `Window.partitionBy(doc_id)` — finds its `ClusteredDistribution`
+    *    already satisfied and plans no second exchange;
+    *  - no keys means round-robin, and Spark sorts every raw row in each
+    *    map task before dealing it out
+    *    (`spark.sql.execution.sortBeforeRepartition`) so a retried task
+    *    deals the same rows to the same partitions; a hash exchange is
+    *    deterministic without that sort.
+    * The table keys are unique per row, so the partitions stay even.
+    * Round-robin is only for a pipeline whose key-grouped aggregate has
+    * two readers: with its exchange gone, each reader recomputes it from
+    * the spread (see `Search.lexicalDocs`).
     */
-  def spread(spark: SparkSession, df: DataFrame): DataFrame = {
+  def spread(spark: SparkSession, df: DataFrame, keys: String*): DataFrame = {
     val target = spark.sparkContext.defaultParallelism
-    if (df.rdd.getNumPartitions * 2 <= target) df.repartition(target) else df
+    if (df.rdd.getNumPartitions * 2 <= target)
+      df.repartition(target, keys.map(df(_)): _*)
+    else df
   }
 
-  /** [[documents]] re-spread for CPU-heavy per-doc pipelines. */
+  /** [[documents]] spread by `doc_id` for CPU-heavy per-doc pipelines. */
   def documentsSpread(spark: SparkSession, dir: String): DataFrame =
-    spread(spark, documents(spark, dir))
+    spread(spark, documents(spark, dir), "doc_id")
 
-  /** [[embeddings]] re-spread for per-vector scoring pipelines. */
+  /** [[embeddings]] spread by `vec_id` for per-vector scoring pipelines. */
   def embeddingsSpread(spark: SparkSession, dir: String): DataFrame =
-    spread(spark, embeddings(spark, dir))
-
-  /** [[lineitem]] re-spread for per-row-hash-heavy pipelines. */
-  def lineitemSpread(spark: SparkSession, dir: String): DataFrame =
-    spread(spark, lineitem(spark, dir))
+    spread(spark, embeddings(spark, dir), "vec_id")
 }

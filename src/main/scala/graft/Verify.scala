@@ -1,5 +1,8 @@
 package graft
 import java.nio.file.{Files, Paths}
+
+import scala.util.control.NonFatal
+
 /** Driver-run correctness dump: each SparkEntry.queries result → parquet,
   * plus oracle_sql.json, for the driver's DuckDB compare. */
 object Verify {
@@ -27,7 +30,7 @@ object Verify {
           .parquet(s"$outDir/$name")
         System.err.println(
           f"[verify] $name ok ${(System.nanoTime() - t0) / 1e9}%.1f s")
-      } catch { case e: Throwable =>
+      } catch { case NonFatal(e) =>
         System.err.println(s"[verify] $name failed: ${e.getMessage}")
       }
     }

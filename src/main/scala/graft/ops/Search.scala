@@ -125,6 +125,16 @@ object Search {
   private val bm25K1 = 1.2
   private val bm25B = 0.75
 
+  /** The corpus the BM25 lanes read: spread round-robin, not by doc_id.
+    * [[bm25Of]]'s per-doc aggregate has two readers (the 1-row stats and
+    * the scoring side). Over a doc_id spread it needs no exchange, so
+    * nothing holds it and each reader re-tokenizes the corpus from the
+    * spread; round-robin keeps the aggregate's own exchange, which both
+    * readers reuse (`TextPlanSpec` pins the single tokenize pass).
+    */
+  private def lexicalDocs(spark: SparkSession, dir: String): DataFrame =
+    Tables.spread(spark, Tables.documents(spark, dir))
+
   /** BM25 top-10 ranking of the corpus for a fixed term set — the
     * full-text retrieval scorer (Robertson/Sparck Jones; the "+1" IDF of
     * Lucene so scores stay positive). One tokenize pass: per-term tf
@@ -142,7 +152,7 @@ object Search {
     * break identically (doc_id asc).
     */
   def qBm25Search(spark: SparkSession, dir: String): DataFrame =
-    bm25Of(Tables.documentsSpread(spark, dir), bm25Terms, 10)
+    bm25Of(lexicalDocs(spark, dir), bm25Terms, 10)
 
   /** Same operator over any (doc_id, text, ...) frame.
     *
@@ -229,7 +239,7 @@ object Search {
     */
   def qHybridSearch(spark: SparkSession, dir: String): DataFrame =
     hybridSearchOf(
-      Tables.documentsSpread(spark, dir),
+      lexicalDocs(spark, dir),
       Tables.embeddingsSpread(spark, dir), bm25Terms, laneK = 20, k = 10)
 
   /** Same operator over any (doc_id, text) corpus + (vec_id, embedding)
@@ -259,7 +269,7 @@ object Search {
     */
   def qHybridSearchIvf(spark: SparkSession, dir: String): DataFrame =
     rrfFuse(
-      lexLaneOf(Tables.documentsSpread(spark, dir), bm25Terms, laneK = 20),
+      lexLaneOf(lexicalDocs(spark, dir), bm25Terms, laneK = 20),
       semRank(Sim.ivfPrunedTopK(spark, dir, k = 20)),
       k = 10)
 

@@ -263,9 +263,8 @@ object Text {
     * The tf⋈df join strategy is PINNED shuffle_hash (r12): tf is
     * corpus-scale by design, but its compressed map-output statistic
     * can dip under the adaptive broadcast threshold on replicated text
-    * (HighlyCompressedMapStatus quantization + the round-robin spread's
-    * random start make the estimate wobble run to run), and when it
-    * does, AQE broadcasts the CORPUS side — a tens-of-millions-row
+    * (HighlyCompressedMapStatus quantization makes the estimate wobble
+    * run to run), and when it does, AQE broadcasts the CORPUS side — a tens-of-millions-row
     * HashedRelation built single-threaded on the driver, with the df
     * probe side coalesced to one partition, so the join AND the per-doc
     * window run in a single task. Measured at the combined 100× stage:

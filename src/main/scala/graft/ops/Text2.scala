@@ -129,9 +129,10 @@ object Text2 {
     // The toks⋈lp strategy is PINNED shuffle_hash (r12): toks is
     // token-scale by design, and AQE intermittently flipped to
     // broadcasting IT (BuildLeft over a driver-built token-scale
-    // HashedRelation, lp coalesced to one partition) when the round-
-    // robin spread's compressed map-output estimate dipped under the
-    // adaptive broadcast threshold — measured 3.3 s normal vs 20–28 s
+    // HashedRelation, lp coalesced to one partition) when its
+    // compressed map-output estimate (HighlyCompressedMapStatus
+    // quantization) dipped under the adaptive broadcast threshold —
+    // measured 3.3 s normal vs 20–28 s
     // flipped at the combined 100× stage. Same class and same fix as
     // tfidf (`Text.tfidfTopOf`) and the salted join (`ops/Skew.scala`);
     // shuffle_hash builds the vocab side per partition, the shape that

@@ -14,8 +14,8 @@ import org.apache.spark.sql.execution.datasources.{HadoopFsRelation, LogicalRela
   * Background (SCALE.md §combined-stage, r12): AQE intermittently
   * broadcast a CORPUS-scale join side — highly-duplicated text
   * compresses so well that its map-output size statistic wobbles under
-  * the adaptive broadcast threshold (random round-robin `spread` start
-  * offset × `HighlyCompressedMapStatus` quantization). The flipped plan
+  * the adaptive broadcast threshold (`HighlyCompressedMapStatus`
+  * quantization). The flipped plan
   * builds a multi-million-row HashedRelation single-threaded on the
   * driver with the probe side coalesced to ONE task: 4–20× per-query
   * cliffs, roughly every other fresh JVM at the 100× text stage.

@@ -1,5 +1,7 @@
 package graft.streaming
 
+import scala.util.control.NonFatal
+
 import org.apache.spark.sql.{DataFrame, Dataset, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.{DataStreamWriter, GroupState,
@@ -457,7 +459,7 @@ object Streaming {
         }
         sink.put(q.name, buf.toString("UTF-8"))
       } catch {
-        case e: Throwable => sink.put(q.name, s"<explain failed: $e>")
+        case NonFatal(e) => sink.put(q.name, s"<explain failed: $e>")
       }
     }
   }

@@ -49,17 +49,20 @@ class SearchSpec extends SparkTestBase {
   test("substr grams build in-array: token stream never shuffles pre-join") {
     // r18 shape: grams assemble INSIDE each document's token array
     // (transform + posexplode) on both the count side and the probe
-    // side — no exploded-token window, so the only doc_id exchange in
-    // the whole plan is the islands-merge window AFTER the semi join
+    // side — no exploded-token window, so the only doc_id exchange the
+    // planner inserts is the islands-merge window AFTER the semi join
     // (the old lead-window shape shuffled and double-sorted the entire
-    // token stream by (doc_id, pos) before a single gram existed).
+    // token stream by (doc_id, pos) before a single gram existed). The
+    // spread's own doc_id exchange moves raw documents, not tokens, and
+    // is REPARTITION_BY_NUM, so it is not counted.
     val df = Search.substrSpansOf(Tables.documentsSpread(spark, sfDir), 8)
     df.collect() // materialize so AQE finalizes the plan
     val plan = df.queryExecution.executedPlan.toString
       .split("== Initial Plan ==").head
     assert(plan.contains("LeftSemi"), "df>=2 membership must be a semi join")
     val docIdExchanges =
-      "Exchange hashpartitioning\\(doc_id".r.findAllIn(plan).size
+      "Exchange hashpartitioning\\(doc_id#\\d+L, \\d+\\), ENSURE_REQUIREMENTS"
+        .r.findAllIn(plan).size
     assert(docIdExchanges == 1,
       s"expected the islands window's doc_id exchange only, " +
         s"got $docIdExchanges:\n$plan")

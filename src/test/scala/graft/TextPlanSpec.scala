@@ -6,8 +6,8 @@ package graft
   *
   *  - `Text.tfidfTopOf`'s tf⋈df: tf is O(doc·terms) by design, but its
   *    compressed map-output estimate wobbles under the adaptive
-  *    broadcast threshold on replicated text (round-robin spread start
-  *    is random, HighlyCompressedMapStatus quantizes), and the flipped
+  *    broadcast threshold on replicated text (HighlyCompressedMapStatus
+  *    quantizes), and the flipped
   *    plan builds a tens-of-millions-row HashedRelation single-threaded
   *    on the driver with the probe side coalesced to ONE task —
   *    7.7 s → 29–41 s, roughly every other run.
