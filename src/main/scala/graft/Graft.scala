@@ -197,12 +197,12 @@ object Graft {
 
     /** TF-IDF keyword extraction: top-k terms per doc by tf·ln(N/df).
       *
-      * Building it runs Spark jobs: an eager `localCheckpoint` pins
-      * the (doc_id, term, tf) table on the executors when this method
-      * is called, not when the returned frame runs. The pinned
-      * snapshot lives in executor block storage with its lineage cut,
-      * so losing an executor that holds a block fails the query
-      * instead of recomputing it.
+      * Building it runs no Spark job and pins nothing; the plan is one
+      * tokenize pass. `docs` is read by two branches of that plan (the
+      * term counts and the document count N), so it must be
+      * deterministic: a frame that differs between evaluations (a
+      * sample, `rand()`, a source read while it changes) gives
+      * inconsistent tf, df and N.
       */
     def tfidfTop(docs: DataFrame, k: Int = 3): DataFrame =
       ops.Text.tfidfTopOf(docs, k)

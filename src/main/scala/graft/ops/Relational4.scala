@@ -97,8 +97,8 @@ object Relational4 {
     * in one task — the suspected mechanism behind this query's rare
     * 120 s first-run outliers at the 100× stages (observed twice across
     * ~40 controlled runs; signature: one long task-poor stretch, no
-    * spill, no GC — the same estimator-wobble class as the tfidf/
-    * unigram broadcast flips, `ops/Text.scala`). Repartitioning the
+    * spill, no GC — the same estimator-wobble class as r12's tfidf and
+    * unigram broadcast flips, `ops/Text2.scala`). Repartitioning the
     * raw events first costs one shuffle of 10 M rows instead of two of
     * ~9 M (the map-side per-minute combine bought only ~10% here) and
     * leaves NO AQE-resizable exchange anywhere in the plan. On feeds

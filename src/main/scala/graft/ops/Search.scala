@@ -238,9 +238,11 @@ object Search {
     * non-null BIGINT in both engines.
     */
   def qHybridSearch(spark: SparkSession, dir: String): DataFrame =
-    hybridSearchOf(
-      lexicalDocs(spark, dir),
-      Tables.embeddingsSpread(spark, dir), bm25Terms, laneK = 20, k = 10)
+    rrfFuse(
+      lexLaneOf(lexicalDocs(spark, dir), bm25Terms, laneK = 20),
+      semRank(bruteCosTopK(Tables.embeddingsSpread(spark, dir),
+        Sim.queryVec(spark, dir), laneK = 20)),
+      k = 10)
 
   /** Same operator over any (doc_id, text) corpus + (vec_id, embedding)
     * table whose vec `queryId` is the query vector. The doc_id ≡ vec_id
@@ -255,7 +257,8 @@ object Search {
   def hybridSearchOf(rawDocs: DataFrame, emb: DataFrame, terms: Seq[String],
       laneK: Int, k: Int, queryId: Long = 0L): DataFrame =
     rrfFuse(lexLaneOf(rawDocs, terms, laneK, queryId),
-      semRank(bruteCosTopK(emb, laneK, queryId)), k)
+      semRank(bruteCosTopK(emb, emb.filter(col("vec_id") === queryId),
+        laneK, queryId)), k)
 
   /** The composite that PROVES the scaladoc's swap claim: the dense lane
     * is the IVF probe answered from the AT-REST list-partitioned layout
@@ -282,13 +285,14 @@ object Search {
         Window.orderBy(col("bm25").desc, col("doc_id").asc)).cast("bigint"))
       .select(col("doc_id"), col("lex_rank"))
 
-  /** Brute dense lane: exact cosine of every vector against the query
-    * vector. */
-  private def bruteCosTopK(emb: DataFrame, laneK: Int,
+  /** Brute dense lane: exact cosine of every vector of `emb` against the
+    * `query` row (vec `queryId`, cut by the caller — the gate lane cuts
+    * it from the unspread table, see [[Sim.queryVec]]). */
+  private def bruteCosTopK(emb: DataFrame, query: DataFrame, laneK: Int,
       queryId: Long = 0L): DataFrame = {
     val e = emb.withColumn("nrm", Sim.normExpr(col("embedding")))
-    val q = broadcast(e.filter(col("vec_id") === queryId)
-      .select(col("embedding").as("q_emb"), col("nrm").as("q_nrm")))
+    val q = broadcast(query.select(col("embedding").as("q_emb"),
+      Sim.normExpr(col("embedding")).as("q_nrm")))
     e.filter(col("vec_id") =!= queryId)
       .crossJoin(q)
       .select(col("vec_id"),

@@ -50,11 +50,19 @@ object Sim {
     aggregate(zip_with(a, b, (x, y) => x.cast("double") * y.cast("double")),
       lit(0.0), (acc, v) => acc + v) / (na * nb)
 
+  /** The query vector vec_id = 0, cut from the unspread table: the
+    * spread is for the scoring side's per-row CPU, and one row headed
+    * for a broadcast needs no shuffle of its own (a filter below the
+    * spread's exchange would shuffle a second scan to move it).
+    */
+  private[ops] def queryVec(spark: SparkSession, dir: String): DataFrame =
+    Tables.embeddings(spark, dir).filter(col("vec_id") === 0)
+
   /** Brute-force cosine top-10 for the query vector vec_id = 0. */
   def qSimTopK(spark: SparkSession, dir: String): DataFrame = {
     val e = Tables.embeddingsSpread(spark, dir).withColumn("nrm", normExpr(col("embedding")))
-    val q = broadcast(e.filter(col("vec_id") === 0)
-      .select(col("embedding").as("q_emb"), col("nrm").as("q_nrm")))
+    val q = broadcast(queryVec(spark, dir)
+      .select(col("embedding").as("q_emb"), normExpr(col("embedding")).as("q_nrm")))
     e.filter(col("vec_id") =!= 0)
       .crossJoin(q)
       .withColumn("cos",
@@ -72,7 +80,7 @@ object Sim {
   def qSimLsh(spark: SparkSession, dir: String): DataFrame = {
     graft.functions.GraftFunctions.ensureRegistered(spark)
     val b = withBuckets(Tables.embeddingsSpread(spark, dir))
-    val qb = broadcast(b.filter(col("vec_id") === 0)
+    val qb = broadcast(withBuckets(queryVec(spark, dir))
       .select(col("t").as("q_t"), col("bucket").as("q_bucket"),
         col("embedding").as("q_emb")))
     b.filter(col("vec_id") =!= 0)
@@ -116,7 +124,7 @@ object Sim {
   def qSimTopKNative(spark: SparkSession, dir: String): DataFrame = {
     graft.functions.GraftFunctions.ensureRegistered(spark)
     val e = Tables.embeddingsSpread(spark, dir)
-    val q = broadcast(e.filter(col("vec_id") === 0)
+    val q = broadcast(queryVec(spark, dir)
       .select(col("embedding").as("q_emb")))
     e.filter(col("vec_id") =!= 0)
       .crossJoin(q)
@@ -125,14 +133,6 @@ object Sim {
       .orderBy(col("cos_sim").desc, col("vec_id").asc)
       .limit(10)
   }
-
-  /** Squared L2 distance between a float array and a double-array centroid,
-    * left-to-right accumulation (identical fold order on the oracle side).
-    */
-  private[ops] def sqDistExpr(emb: Column, cen: Column): Column =
-    aggregate(zip_with(emb, cen,
-        (x, c) => (x.cast("double") - c) * (x.cast("double") - c)),
-      lit(0.0), (acc, v) => acc + v)
 
   /** IVF (inverted-file) ANN with a deterministic codebook: per-label mean
     * vectors (summed in DECIMAL(30,15) so the means are order-independent

@@ -241,64 +241,77 @@ object Text {
   /** TF-IDF keyword extraction: top-3 terms per document by
     * tf · ln(N/df) — the classic corpus-statistics feature stage (search
     * indexing, topic labeling, near-dup explanation). Shape: one narrow
-    * token explode, tf in one groupBy, df as a second aggregate joined
-    * back on the term (df table is O(vocabulary) — shuffle-joined, NOT
-    * broadcast: real vocabularies outgrow a broadcast at corpus scale),
-    * then a per-doc top-k window. N is COUNT(DISTINCT doc) over the
-    * token table so both engines derive it identically; the score
-    * rounds to 6 decimals after one double multiply of ln(N/df) —
-    * division and log on identical rationals, engine-exact in practice.
+    * token explode, tf in one groupBy, df as a count window over the
+    * one term shuffle, N as a 1-row broadcast, then a per-doc top-k
+    * window — see [[tfidfTopOf]]. The score rounds to 6 decimals after
+    * one double multiply of ln(N/df) — division and log on identical
+    * rationals, engine-exact in practice.
     */
   def qTfidfTop(spark: SparkSession, dir: String): DataFrame =
     tfidfTopOf(Tables.documentsSpread(spark, dir), 3)
 
-  /** Same operator over any (doc_id, text) frame; top `k` terms/doc.
-    * df and N derive from the tf TABLE, not from a second pass over the
-    * raw token stream: df(w) = #docs containing w = #tf rows for w, so
-    * the corpus is tokenized once and the df aggregate runs over
-    * O(doc·distinct-terms) rows instead of O(tokens) — and because the
-    * tf subtree is identical on both join sides, Spark reuses its
-    * exchange (one shuffle write, two readers) rather than re-scanning.
+  /** Same operator over any deterministic (doc_id, text) frame; top `k`
+    * terms/doc.
     *
-    * The tf⋈df join strategy is PINNED shuffle_hash (r12): tf is
-    * corpus-scale by design, but its compressed map-output statistic
-    * can dip under the adaptive broadcast threshold on replicated text
-    * (HighlyCompressedMapStatus quantization makes the estimate wobble
-    * run to run), and when it does, AQE broadcasts the CORPUS side — a tens-of-millions-row
-    * HashedRelation built single-threaded on the driver, with the df
-    * probe side coalesced to one partition, so the join AND the per-doc
-    * window run in a single task. Measured at the combined 100× stage:
-    * 7.7 s normal vs 29–41 s flipped (intermittent, ~half of runs;
-    * SCALE.md §the combined 100× stage, round 12). Same class as the
-    * salted join's r11 fix (`ops/Skew.scala`). shuffle_hash builds the
-    * vocab side per partition — the shape that also holds when real
-    * vocabularies outgrow any broadcast budget. `TextPlanSpec` pins it.
+    * Single-pass shape, the one `Search.bm25Of` took in r18 — the
+    * MapReduce chain of the reference: tokenize once, shuffle once by
+    * term, reduce. The only join left is the 1-row N broadcast.
+    *  - tf: `groupBy(doc_id, w)` straight off the doc_id spread, which
+    *    already satisfies its distribution (no exchange).
+    *  - df(w) = #docs containing w = #tf rows for w: a
+    *    `count(1) over (partition by w)` window on the tf rows. Its
+    *    exchange is the one term shuffle; no df table is shuffled or
+    *    joined back, and tf is not pinned.
+    *  - N: docs with at least one non-empty token. A token of
+    *    `split(lower(text), ' ')` is non-empty iff text holds a
+    *    character other than ' ', which is `trim(text) <> ''` (Spark's
+    *    `trim` strips ASCII 32 only; a tab-only text is one token). So
+    *    N is read off `docs` without tokenizing: that predicate's max
+    *    per doc_id (a doc_id may repeat), the true rows counted. Over
+    *    the spread this `groupBy(doc_id)` needs no exchange either, and
+    *    the branch reads the spread as a `ReusedExchange`.
+    * The score expression, the per-doc `row_number` and its ordering
+    * are those of the former tf⋈df join shape, and so are the rows
+    * (`TextPlanSpec` compares the two).
+    *
+    * Trade-offs:
+    *  - A hot term's tf rows (one per doc containing it) are
+    *    window-sorted in the one task that owns the term. The old
+    *    shape sent them to one task too: the SHJ probe side was
+    *    partitioned by w. AQE's skew-join split never applied to it,
+    *    because `OptimizeSkewedJoin` matches a join only when BOTH
+    *    children are shuffle query stages, and the df side was a
+    *    final `HashAggregate` above its stage. Checked on a skewed
+    *    corpus with the skew thresholds forced to 1 byte and
+    *    `forceOptimizeSkewedJoin` on: the old plan had no skewed
+    *    shuffle read, while the same join against a pinned (bare-stage)
+    *    df table did split.
+    *  - `docs` is evaluated by two branches (tf and N), so the frame
+    *    must be deterministic. The N branch never tokenizes, but it
+    *    reads `doc_id, text` a second time: over the spread it fetches
+    *    the reused exchange's shuffle output again, and when the scan
+    *    is not under-split (no spread) it scans the table again.
+    * With no row-scale join left, r12's hazard (AQE broadcasting the
+    * corpus-scale tf side) cannot arise, and nothing is pinned.
     */
   def tfidfTopOf(docs: DataFrame, k: Int): DataFrame = {
     import org.apache.spark.sql.expressions.Window
-    val toks = docs
+    val tf = docs
       .select(col("doc_id"),
         explode(split(lower(col("text")), " ", -1)).as("w"))
       .filter(col("w") =!= "")
-    // Eager localCheckpoint (r19, guide §2.3/§2.4): tf fans out to the
-    // df table, the 1-row N subquery AND the scored join side, and
-    // column pruning makes the three copies canonicalize differently
-    // (the df/N branches drop the count), so the planner re-ran the
-    // full tokenize+aggregate subtree per consumer — the r19 executed
-    // plan showed the corpus tokenized THREE times. Materialized once,
-    // the checkpoint is the same (doc_id, w, tf) bytes the join
-    // shuffles anyway; at 100 TB this removes two full tokenize passes.
-    val tf = toks.groupBy(col("doc_id"), col("w"))
+      .groupBy(col("doc_id"), col("w"))
       .agg(count(lit(1)).as("tf"))
-      .localCheckpoint(true)
-    val df = tf.groupBy(col("w"))
-      .agg(count(lit(1)).as("df"))
-    val n = tf.select(col("doc_id")).distinct()
+    val n = docs
+      .groupBy(col("doc_id"))
+      .agg(max(trim(col("text")) =!= "").as("has_token"))
+      .filter(col("has_token"))
       .agg(count(lit(1)).as("n"))
+    val byTerm = Window.partitionBy(col("w"))
     val win = Window.partitionBy(col("doc_id"))
       .orderBy(col("score").desc, col("w").asc)
-    tf.join(df.hint("shuffle_hash"), "w")
-      .crossJoin(broadcast(n)) // N is 1 row; df is NOT broadcast
+    tf.withColumn("df", count(lit(1)).over(byTerm))
+      .crossJoin(broadcast(n))
       .withColumn("score", round(col("tf") *
         log(col("n").cast("double") / col("df").cast("double")), 6))
       .withColumn("rk", row_number().over(win).cast("long"))

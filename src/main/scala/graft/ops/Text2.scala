@@ -22,7 +22,7 @@ object Text2 {
     * via an index-sequence transform — no self-join on position);
     * unigram counts are O(vocabulary) and join the bigram table on each
     * side as shuffle joins (vocabularies outgrow broadcasts at corpus
-    * scale, same rationale as [[Text.qTfidfTop]]); the two scalar totals
+    * scale); the two scalar totals
     * broadcast as 1-row frames. The min-count filter runs BEFORE the
     * joins, so the expensive side of the join is the (rare) surviving
     * pairs, not the full bigram distribution.
@@ -134,7 +134,8 @@ object Text2 {
     // quantization) dipped under the adaptive broadcast threshold —
     // measured 3.3 s normal vs 20–28 s
     // flipped at the combined 100× stage. Same class and same fix as
-    // tfidf (`Text.tfidfTopOf`) and the salted join (`ops/Skew.scala`);
+    // the salted join (`ops/Skew.scala`); tfidf had it too until its
+    // single-pass rewrite left it no row-scale join (`Text.tfidfTopOf`).
     // shuffle_hash builds the vocab side per partition, the shape that
     // also holds when a real vocabulary outgrows broadcast budgets.
     //

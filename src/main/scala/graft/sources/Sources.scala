@@ -75,10 +75,7 @@ object Sources {
     }
   }
 
-  /** Round-trip helpers for the standard columnar/row formats. */
-  def writeParquet(df: DataFrame, out: String): Unit =
-    df.write.mode(SaveMode.Overwrite).parquet(out)
-
+  /** Round-trip helpers for the standard row formats. */
   def writeCsv(df: DataFrame, out: String): Unit =
     df.write.mode(SaveMode.Overwrite).option("header", "true").csv(out)
 

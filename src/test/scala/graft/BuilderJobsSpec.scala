@@ -21,7 +21,6 @@ class BuilderJobsSpec extends SparkTestBase {
     "q_sim_ivf_kmeans" -> "Sim.ivfKmeansTopK: KMeans fit, query-vector head()",
     "q_sim_ivf_pruned" -> "Sim.ivfPrunedTopK: probe-list collect()",
     "q_sink_roundtrip" -> "Sources.qSinkRoundtrip: CSV write",
-    "q_tfidf_top" -> "Text.qTfidfTop: eager localCheckpoint",
     "q_unigram_lm" -> "Text2.qUnigramLm: eager localCheckpoint",
     "q_zorder_scan" -> "Sources.qZOrderScan: box bounds agg head()")
 

@@ -1,20 +1,25 @@
 package graft
 
-/** Pins the join strategy of the two text-lane vocabulary joins whose
-  * corpus-scale side AQE intermittently broadcast at the combined 100×
-  * stage (r12 diagnosis — same class as the salted join's r11 fix):
+import org.apache.spark.sql.DataFrame
+import org.apache.spark.sql.expressions.Window
+import org.apache.spark.sql.functions._
+
+/** Pins the shape of the text lanes' vocabulary statistics.
   *
-  *  - `Text.tfidfTopOf`'s tf⋈df: tf is O(doc·terms) by design, but its
-  *    compressed map-output estimate wobbles under the adaptive
-  *    broadcast threshold on replicated text (HighlyCompressedMapStatus
-  *    quantizes), and the flipped
-  *    plan builds a tens-of-millions-row HashedRelation single-threaded
-  *    on the driver with the probe side coalesced to ONE task —
-  *    7.7 s → 29–41 s, roughly every other run.
-  *  - `Text2.unigramLmScores`'s toks⋈lp: same flip, 3.3 s → 20–28 s.
+  * `Text2.unigramLmScores`'s toks⋈lp is corpus-scale on one side, and
+  * AQE intermittently broadcast that side at the combined 100× stage
+  * (r12 diagnosis — same class as the salted join's r11 fix): its
+  * compressed map-output estimate wobbles under the adaptive broadcast
+  * threshold on replicated text (HighlyCompressedMapStatus quantizes),
+  * and the flipped plan builds a token-scale HashedRelation
+  * single-threaded on the driver with the probe side coalesced to ONE
+  * task — 3.3 s → 20–28 s. The shuffle_hash hints pin the
+  * broadcast-free shape; this spec fails if a hint is dropped or the
+  * planner stops honoring it.
   *
-  * The shuffle_hash hints pin the broadcast-free shape; this spec fails
-  * if a hint is dropped or the planner stops honoring it.
+  * `Text.tfidfTopOf` and `Search.bm25Of` join nothing row-scale at all
+  * (single-pass shapes): they are pinned as no-join plans with one
+  * tokenize pass.
   */
 class TextPlanSpec extends SparkTestBase {
 
@@ -25,12 +30,69 @@ class TextPlanSpec extends SparkTestBase {
     df.queryExecution.executedPlan.toString
   }
 
-  test("tfidf tf-df join plans as ShuffledHashJoin, never a broadcast") {
+  test("tfidf is single-pass: one tokenize, no join, N off the spread") {
+    // tf sits on the doc_id spread, df is a count window over the one
+    // term shuffle and N is a 1-row broadcast computed off the spread
+    // without tokenizing — so the AQE-final plan has one explode, no
+    // row-scale join of any strategy, no pinned checkpoint scan, and the
+    // N branch reads the spread's exchange as a ReusedExchange
     val p = finalPlan(graft.ops.Text.qTfidfTop(spark, dir))
-    assert(p.contains("ShuffledHashJoin"),
-      s"expected the hinted shuffled-hash strategy:\n$p")
-    assert(!p.contains("BroadcastHashJoin"),
-      s"neither side of tf-df may be broadcast:\n$p")
+      .split("== Initial Plan ==").head
+    assert(!p.contains("SortMergeJoin") && !p.contains("ShuffledHashJoin") &&
+      !p.contains("BroadcastHashJoin"),
+      s"tfidf must not join row-scale sides at all:\n$p")
+    val tokenizes = "Generate explode".r.findAllIn(p).size
+    assert(tokenizes == 1,
+      s"expected exactly one tokenize pass, got $tokenizes:\n$p")
+    assert(!p.contains("Scan ExistingRDD"), s"nothing may be pinned:\n$p")
+    val reused = "ReusedExchange[^\n]*".r.findAllIn(p).toList
+    assert(reused.size == 1 && reused.head.contains("REPARTITION_BY_NUM"),
+      s"expected the spread reused once by the N branch:\n$p")
+  }
+
+  test("tfidf rows equal the tf-df join shape on blank, null and repeated docs") {
+    import spark.implicits._
+    // The shape before the single-pass rewrite: tf pinned, df a second
+    // aggregate shuffle-hash-joined back, N the distinct doc_ids of tf.
+    def joinShape(docs: DataFrame, k: Int): DataFrame = {
+      val toks = docs
+        .select(col("doc_id"),
+          explode(split(lower(col("text")), " ", -1)).as("w"))
+        .filter(col("w") =!= "")
+      val tf = toks.groupBy(col("doc_id"), col("w"))
+        .agg(count(lit(1)).as("tf"))
+        .localCheckpoint(true)
+      val df = tf.groupBy(col("w")).agg(count(lit(1)).as("df"))
+      val n = tf.select(col("doc_id")).distinct().agg(count(lit(1)).as("n"))
+      val win = Window.partitionBy(col("doc_id"))
+        .orderBy(col("score").desc, col("w").asc)
+      tf.join(df.hint("shuffle_hash"), "w")
+        .crossJoin(broadcast(n))
+        .withColumn("score", round(col("tf") *
+          log(col("n").cast("double") / col("df").cast("double")), 6))
+        .withColumn("rk", row_number().over(win).cast("long"))
+        .filter(col("rk") <= k)
+        .select(col("doc_id"), col("rk"), col("w").as("term"), col("score"))
+        .orderBy("doc_id", "rk")
+    }
+    // doc 2 empty, 3 all spaces, 4 null: no token, so not in N. Doc 5 is
+    // a lone tab, which splitting on ' ' keeps as a token — and every
+    // doc with a token holds a standalone tab, so that term's
+    // df = N and its score is ln(1) = 0. Doc 6 appears twice; its rows
+    // merge into one doc (the double space is an empty token).
+    val docs = Seq[(Long, String)](
+      (1L, "Spark filter \t spark"), (2L, ""), (3L, "   "), (4L, null),
+      (5L, "\t"), (6L, "filter \t stream"), (6L, "spark  x \t"),
+      (7L, "\t stream stream"))
+      .toDF("doc_id", "text").repartition(3)
+    for (k <- Seq(2, 10)) {
+      val got = graft.ops.Text.tfidfTopOf(docs, k).collect().toSeq
+      assert(got == joinShape(docs, k).collect().toSeq, s"k=$k")
+      assert(got.map(_.getLong(0)).distinct == Seq(1L, 5L, 6L, 7L))
+      if (k == 10)
+        assert(got.filter(_.getString(2) == "\t").map(_.getDouble(3))
+          == Seq(0.0, 0.0, 0.0, 0.0))
+    }
   }
 
   test("unigram-LM toks-lp join plans as ShuffledHashJoin, never a broadcast") {
