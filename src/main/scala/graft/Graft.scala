@@ -198,9 +198,11 @@ object Graft {
     /** TF-IDF keyword extraction: top-k terms per doc by tf·ln(N/df).
       *
       * Building it runs no Spark job and pins nothing; the plan is one
-      * tokenize pass. `docs` is read by two branches of that plan (the
-      * term counts and the document count N), so it must be
-      * deterministic: a frame that differs between evaluations (a
+      * tokenize pass whose per-row term counts (`term_counts`, which
+      * the call registers on `docs`' session) are shuffled once, by
+      * term, however `docs` is split. `docs` is read by two branches of
+      * that plan (the term counts and the document count N), so it must
+      * be deterministic: a frame that differs between evaluations (a
       * sample, `rand()`, a source read while it changes) gives
       * inconsistent tf, df and N.
       */

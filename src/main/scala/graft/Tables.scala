@@ -84,9 +84,12 @@ object Tables {
     * reference's map side partitions once by the key its reducer groups
     * on. What the key buys:
     *  - an aggregate or window keyed on it (or on a superset of it) that
-    *    sits on the spread — `groupBy(doc_id, w)` after a token explode,
+    *    sits on the spread — the per-doc `groupBy(doc_id)` of the
+    *    minhash/simhash signatures, the fingerprints'
     *    `Window.partitionBy(doc_id)` — finds its `ClusteredDistribution`
-    *    already satisfied and plans no second exchange;
+    *    already satisfied and plans no second exchange; a pipeline whose
+    *    first shuffle is on another key gains nothing from it (TF-IDF
+    *    shuffles its tf rows by term, so it reads the table unspread);
     *  - no keys means round-robin, and Spark sorts every raw row in each
     *    map task before dealing it out
     *    (`spark.sql.execution.sortBeforeRepartition`) so a retried task

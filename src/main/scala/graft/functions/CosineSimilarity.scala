@@ -102,6 +102,15 @@ object GraftFunctions {
   private val ivfNearestInfo = new ExpressionInfo(
     classOf[IvfNearest].getCanonicalName, "ivf_nearest")
 
+  val termCountsBuilder: Seq[Expression] => Expression = {
+    case Seq(toks) => TermCounts(toks)
+    case other => throw new IllegalArgumentException(
+      s"term_counts expects 1 argument, got ${other.size}")
+  }
+
+  private val termCountsInfo = new ExpressionInfo(
+    classOf[TermCounts].getCanonicalName, "term_counts")
+
   /** Spark ships `BloomFilterAggregate` / `BloomFilterMightContain`
     * (the build and probe its own runtime row-level filtering plans)
     * but keeps both OUT of the public function registry — so expose
@@ -153,6 +162,9 @@ object GraftFunctions {
     val ivfId = FunctionIdentifier("ivf_nearest")
     if (!registry.functionExists(ivfId))
       registry.registerFunction(ivfId, ivfNearestInfo, ivfNearestBuilder)
+    val tcId = FunctionIdentifier("term_counts")
+    if (!registry.functionExists(tcId))
+      registry.registerFunction(tcId, termCountsInfo, termCountsBuilder)
   }
 }
 
@@ -175,6 +187,9 @@ class GraftExtensions extends (org.apache.spark.sql.SparkSessionExtensions => Un
     ext.injectFunction((FunctionIdentifier("ivf_nearest"),
       new ExpressionInfo(classOf[IvfNearest].getCanonicalName, "ivf_nearest"),
       GraftFunctions.ivfNearestBuilder))
+    ext.injectFunction((FunctionIdentifier("term_counts"),
+      new ExpressionInfo(classOf[TermCounts].getCanonicalName, "term_counts"),
+      GraftFunctions.termCountsBuilder))
     ext.injectOptimizerRule(_ => graft.plans.CollapseRedundantRound)
     ext.injectOptimizerRule(_ => graft.plans.RewriteAsOfJoin)
   }

@@ -185,10 +185,10 @@ object Sim {
     // inside the corpus scan with zero extra rows and zero shuffles.
     val cb = broadcast(labelMeanCodebook(e))
     // the query row probes its nprobe=3 nearest lists
-    val probes = e.filter(col("vec_id") === 0).crossJoin(cb)
+    val q = queryVec(spark, dir)
+    val probes = q.crossJoin(cb)
       .select(explode(expr("ivf_nearest(embedding, cb, 3)")).as("assigned"))
-    val qdf = broadcast(e.filter(col("vec_id") === 0)
-      .select(col("embedding").as("q_emb")))
+    val qdf = broadcast(q.select(col("embedding").as("q_emb")))
     // assignment attaches inline — no corpus self-join on vec_id
     e.crossJoin(cb)
       .withColumn("assigned",
@@ -253,11 +253,11 @@ object Sim {
           .drop("cb"),
         tmp, "assigned")
     }
-    val probes = e.filter(col("vec_id") === 0).crossJoin(cb)
+    val q = queryVec(spark, dir)
+    val probes = q.crossJoin(cb)
       .select(explode(expr("ivf_nearest(embedding, cb, 3)")).as("assigned"))
       .collect().map(_.getLong(0)).toSeq
-    val qdf = broadcast(e.filter(col("vec_id") === 0)
-      .select(col("embedding").as("q_emb")))
+    val qdf = broadcast(q.select(col("embedding").as("q_emb")))
     graft.sources.Sources.readParquet(spark, out)
       .filter(col("assigned").isin(probes: _*) && col("vec_id") =!= 0)
       .crossJoin(qdf)

@@ -240,68 +240,74 @@ object Text {
 
   /** TF-IDF keyword extraction: top-3 terms per document by
     * tf · ln(N/df) — the classic corpus-statistics feature stage (search
-    * indexing, topic labeling, near-dup explanation). Shape: one narrow
-    * token explode, tf in one groupBy, df as a count window over the
-    * one term shuffle, N as a 1-row broadcast, then a per-doc top-k
-    * window — see [[tfidfTopOf]]. The score rounds to 6 decimals after
-    * one double multiply of ln(N/df) — division and log on identical
-    * rationals, engine-exact in practice.
+    * indexing, topic labeling, near-dup explanation). Shape: per-row
+    * term counts exploded to one (term, tf) row per distinct term of a
+    * row, one shuffle by term carrying tf and df, N as a 1-row
+    * broadcast, then a per-doc top-k window — see [[tfidfTopOf]]. It
+    * reads the unspread table: the term shuffle is the only exchange
+    * tf needs, so spreading the raw text first would only ship it
+    * twice. The score rounds to 6 decimals after one double multiply of
+    * ln(N/df) — division and log on identical rationals, engine-exact in
+    * practice.
     */
   def qTfidfTop(spark: SparkSession, dir: String): DataFrame =
-    tfidfTopOf(Tables.documentsSpread(spark, dir), 3)
+    tfidfTopOf(Tables.documents(spark, dir), 3)
 
   /** Same operator over any deterministic (doc_id, text) frame; top `k`
     * terms/doc.
     *
-    * Single-pass shape, the one `Search.bm25Of` took in r18 — the
-    * MapReduce chain of the reference: tokenize once, shuffle once by
-    * term, reduce. The only join left is the 1-row N broadcast.
-    *  - tf: `groupBy(doc_id, w)` straight off the doc_id spread, which
-    *    already satisfies its distribution (no exchange).
+    * The MapReduce chain of the reference: the map side emits (term,
+    * doc, tf), the data is shuffled once by term, the reducer counts df.
+    *  - tf: `explode(term_counts(split(lower(text), ' ', -1)))` — the
+    *    native [[graft.functions.TermCounts]] counts each row's tokens
+    *    in the row (in-mapper combining), so one (w, tf) row leaves per
+    *    distinct term of a row; `repartition(w)` is the one shuffle;
+    *    `groupBy(w, doc_id)` with `sum(tf)` only merges a doc_id that
+    *    repeats across rows, and `hashpartitioning(w)` already
+    *    satisfies it (no exchange).
     *  - df(w) = #docs containing w = #tf rows for w: a
-    *    `count(1) over (partition by w)` window on the tf rows. Its
-    *    exchange is the one term shuffle; no df table is shuffled or
-    *    joined back, and tf is not pinned.
+    *    `count(1) over (partition by w)` window, on the same
+    *    partitioning (no exchange).
     *  - N: docs with at least one non-empty token. A token of
     *    `split(lower(text), ' ')` is non-empty iff text holds a
     *    character other than ' ', which is `trim(text) <> ''` (Spark's
     *    `trim` strips ASCII 32 only; a tab-only text is one token). So
     *    N is read off `docs` without tokenizing: that predicate's max
-    *    per doc_id (a doc_id may repeat), the true rows counted. Over
-    *    the spread this `groupBy(doc_id)` needs no exchange either, and
-    *    the branch reads the spread as a `ReusedExchange`.
+    *    per doc_id (a doc_id may repeat), the true rows counted; its
+    *    partial aggregate ships one (doc_id, flag) row per doc and
+    *    partition.
     * The score expression, the per-doc `row_number` and its ordering
     * are those of the former tf⋈df join shape, and so are the rows
     * (`TextPlanSpec` compares the two).
     *
+    * The plan does not depend on how `docs` is split: over a one-file
+    * scan and over a many-file scan alike, the tf rows cross two
+    * exchanges, `hashpartitioning(w)` and then `doc_id` for the top-k
+    * window. (A `groupBy(doc_id, w)` before the term window ships them
+    * three times on a many-file scan: by (doc_id, w), by w, by doc_id.)
+    *
     * Trade-offs:
-    *  - A hot term's tf rows (one per doc containing it) are
-    *    window-sorted in the one task that owns the term. The old
-    *    shape sent them to one task too: the SHJ probe side was
-    *    partitioned by w. AQE's skew-join split never applied to it,
-    *    because `OptimizeSkewedJoin` matches a join only when BOTH
-    *    children are shuffle query stages, and the df side was a
-    *    final `HashAggregate` above its stage. Checked on a skewed
-    *    corpus with the skew thresholds forced to 1 byte and
-    *    `forceOptimizeSkewedJoin` on: the old plan had no skewed
-    *    shuffle read, while the same join against a pinned (bare-stage)
-    *    df table did split.
+    *  - Skew: a hot term's rows are summed and window-sorted in the one
+    *    task that owns the term, one row per (row, term) — the same
+    *    profile as a per-(doc, term) aggregate. A plain token explode
+    *    before `repartition(w)` would ship every occurrence instead,
+    *    about avg-tf times more rows to that task. AQE's skew split does
+    *    not apply (it splits joins only).
     *  - `docs` is evaluated by two branches (tf and N), so the frame
     *    must be deterministic. The N branch never tokenizes, but it
-    *    reads `doc_id, text` a second time: over the spread it fetches
-    *    the reused exchange's shuffle output again, and when the scan
-    *    is not under-split (no spread) it scans the table again.
-    * With no row-scale join left, r12's hazard (AQE broadcasting the
+    *    reads `doc_id, text` a second time.
+    * With no row-scale join, r12's hazard (AQE broadcasting the
     * corpus-scale tf side) cannot arise, and nothing is pinned.
     */
   def tfidfTopOf(docs: DataFrame, k: Int): DataFrame = {
     import org.apache.spark.sql.expressions.Window
+    graft.functions.GraftFunctions.ensureRegistered(docs.sparkSession)
     val tf = docs
-      .select(col("doc_id"),
-        explode(split(lower(col("text")), " ", -1)).as("w"))
-      .filter(col("w") =!= "")
-      .groupBy(col("doc_id"), col("w"))
-      .agg(count(lit(1)).as("tf"))
+      .select(col("doc_id"), explode(call_function("term_counts",
+        split(lower(col("text")), " ", -1))).as(Seq("w", "tf")))
+      .repartition(col("w"))
+      .groupBy(col("w"), col("doc_id"))
+      .agg(sum(col("tf")).as("tf"))
     val n = docs
       .groupBy(col("doc_id"))
       .agg(max(trim(col("text")) =!= "").as("has_token"))

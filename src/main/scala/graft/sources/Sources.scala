@@ -1,6 +1,6 @@
 package graft.sources
 
-import org.apache.spark.sql.{DataFrame, Dataset, SaveMode, SparkSession}
+import org.apache.spark.sql.{DataFrame, SaveMode, SparkSession}
 import org.apache.spark.sql.functions._
 
 /** Sources & sinks. The reference supports exactly one of each — a text
@@ -12,10 +12,6 @@ import org.apache.spark.sql.functions._
   * the reference's whole-file round-robin at 100 TB.
   */
 object Sources {
-
-  /** Reference source parity: read a directory of text files as lines. */
-  def readTextDir(spark: SparkSession, dir: String): Dataset[String] =
-    spark.read.textFile(dir)
 
   /** Reference sink parity: `key\tvalue` lines, hash-partitioned by key
     * into R files, sorted within each partition, overwrite semantics —

@@ -19,10 +19,11 @@ object ForeignSessionSmoke {
     println(s"[foreign-smoke] ts type: ${ev.schema("ts").dataType.simpleString}")
     println(s"[foreign-smoke] rows with valid ts: ${ev.filter("ts IS NOT NULL").count()}")
     println(s"[foreign-smoke] entry rows: ${graft.SparkEntry.entry(spark).count()}")
-    // pieces needing per-session registration: the native cosine
-    // expression (ensureRegistered) and the custom as-of plan node
-    // (experimentalMethods rule) — both must self-install here.
+    // pieces needing per-session registration: the native cosine and
+    // term-count expressions (ensureRegistered) and the custom as-of
+    // plan node (experimentalMethods rule) — all must self-install here.
     println(s"[foreign-smoke] cosine top-k rows: ${graft.ops.Sim.qSimTopKNative(spark, sfDir).count()}")
+    println(s"[foreign-smoke] tf-idf rows: ${graft.ops.Text.qTfidfTop(spark, sfDir).count()}")
     println(s"[foreign-smoke] as-of plan rows: ${graft.ops.Events.qEventAsofPlan(spark, sfDir).count()}")
     spark.stop()
   }

@@ -19,7 +19,10 @@ import org.apache.spark.sql.execution.ExplainMode
   *    through [[graft.streaming.Streaming.planSink]]. Only these show the
   *    stateful operators (`StateStoreSave`, `StreamingSymmetricHashJoin`,
   *    `TransformWithStateExec`, ...); a streaming frame has no physical
-  *    plan until `IncrementalExecution` plans a micro-batch.
+  *    plan until `IncrementalExecution` plans a micro-batch;
+  *  - `exchanges.tsv` — one row per query, counted from its AQE-final
+  *    plan by [[exchangeCounts]]: the gate's exchange tally, one method
+  *    for every before/after comparison.
   *
   * The session is [[graft.Bench.session]], so the optimizer is the one
   * the gate runs. Usage:
@@ -42,6 +45,25 @@ object PlanDump {
     blob.replaceAllIn(plan, m => s"<literal blob, ${m.matched.length} chars>"),
     m => s"<numeric array literal, ${m.matched.length} chars>")
 
+  /** Exchange counts of one `executedPlan` string, read from the plan
+    * above its first `== Initial Plan ==` marker (the whole text when
+    * the plan is not adaptive). That is the outer Final Plan section up
+    * to the first nested adaptive plan (a scalar subquery, an iterated
+    * pagerank step), whose own sections are not counted. Operators are
+    * matched by name at the head of each tree line:
+    * `Exchange`/`BroadcastExchange` count as exchanges, `ReusedExchange`
+    * is counted apart, and an `Exchange` over `RoundRobinPartitioning`
+    * also counts as round-robin.
+    */
+  def exchangeCounts(plan: String): (Int, Int, Int) = {
+    val op = "^[\\s:+|-]*(?:\\*\\(\\d+\\)\\s*)?(\\w+)".r
+    val lines = plan.split("== Initial Plan ==", 2).head.linesIterator
+      .flatMap(l => op.findFirstMatchIn(l).map(m => (m.group(1), l))).toSeq
+    (lines.count(l => l._1 == "Exchange" || l._1 == "BroadcastExchange"),
+      lines.count(_._1 == "ReusedExchange"),
+      lines.count(l => l._1 == "Exchange" && l._2.contains("RoundRobinPartitioning")))
+  }
+
   def main(args: Array[String]): Unit = {
     require(args.length >= 2, "usage: PlanDump <outDir> <sfDir> [query ...]")
     val Array(outDir, sfDir) = args.take(2)
@@ -56,6 +78,7 @@ object PlanDump {
     Files.createDirectories(Paths.get(outDir))
     def write(file: String, text: String): Unit =
       Files.writeString(Paths.get(outDir, file), compact(text))
+    val tally = Seq.newBuilder[String]
     val sink = new java.util.concurrent.ConcurrentHashMap[String, String]()
     graft.streaming.Streaming.planSink = sink
     try names.foreach { name =>
@@ -76,7 +99,10 @@ object PlanDump {
       // the exact plan object whose final form we print (gate outputs
       // are bounded, so the driver-side result is small).
       df.collect()
-      write(s"$name.final.txt", df.queryExecution.executedPlan.toString)
+      val finalPlan = df.queryExecution.executedPlan.toString
+      write(s"$name.final.txt", finalPlan)
+      val (exchanges, reused, roundRobin) = exchangeCounts(finalPlan)
+      tally += s"$name\t$exchanges\t$reused\t$roundRobin"
       sink.asScala.toSeq.sortBy(_._1).foreach { case (stream, plan) =>
         write(s"$name.stream.$stream.txt", plan)
       }
@@ -84,6 +110,8 @@ object PlanDump {
         graft.streaming.Streaming.retireAll(spark)
       println(s"[plan-dump] $name: ${2 + sink.size} plans")
     } finally graft.streaming.Streaming.planSink = null
+    Files.write(Paths.get(outDir, "exchanges.tsv"),
+      ("query\texchanges\treused_exchanges\tround_robin" +: tally.result()).asJava)
     println(s"[plan-dump] wrote ${names.size} queries to $outDir")
     spark.stop()
   }

@@ -23,4 +23,35 @@ class PlanAuditSpec extends SparkTestBase {
     assert(offenders.isEmpty,
       s"row-scale cartesian product planned in: ${offenders.mkString(", ")}")
   }
+
+  test("PlanDump counts the outer final plan's exchanges by operator name") {
+    // a ReusedExchange line quotes the exchange it reuses, and the
+    // initial plan repeats every exchange: neither may be counted
+    val text =
+      """AdaptiveSparkPlan isFinalPlan=true
+        |+- == Final Plan ==
+        |   ResultQueryStage 3
+        |   +- *(3) Sort [k#1 ASC NULLS FIRST], true, 0
+        |      +- ShuffleQueryStage 2
+        |         +- Exchange rangepartitioning(k#1 ASC NULLS FIRST, 4), ENSURE_REQUIREMENTS, [plan_id=50]
+        |            +- *(2) BroadcastHashJoin [k#1], [k#2], Inner, BuildRight, false
+        |               :- *(2) HashAggregate(keys=[k#1], functions=[count(1)])
+        |               :  +- ShuffleQueryStage 0
+        |               :     +- Exchange hashpartitioning(k#1, 4), ENSURE_REQUIREMENTS, [plan_id=10]
+        |               :        +- Exchange RoundRobinPartitioning(3), REPARTITION_BY_NUM, [plan_id=5]
+        |               +- BroadcastQueryStage 1
+        |                  +- BroadcastExchange HashedRelationBroadcastMode(List(input[0, bigint, false]),false), [plan_id=30]
+        |                     +- ReusedExchange [k#2], Exchange hashpartitioning(k#1, 4), ENSURE_REQUIREMENTS, [plan_id=10]
+        |+- == Initial Plan ==
+        |   Sort [k#1 ASC NULLS FIRST], true, 0
+        |   +- Exchange rangepartitioning(k#1 ASC NULLS FIRST, 4), ENSURE_REQUIREMENTS, [plan_id=20]
+        |""".stripMargin
+    assert(graft.tools.PlanDump.exchangeCounts(text) == ((4, 1, 1)))
+    import org.apache.spark.sql.functions.col
+    val df = spark.range(0, 100, 1, 2).repartition(3)
+      .groupBy((col("id") % 5).as("k")).count()
+    df.collect()
+    assert(graft.tools.PlanDump.exchangeCounts(
+      df.queryExecution.executedPlan.toString) == ((2, 0, 1)))
+  }
 }

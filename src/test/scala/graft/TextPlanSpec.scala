@@ -19,7 +19,9 @@ import org.apache.spark.sql.functions._
   *
   * `Text.tfidfTopOf` and `Search.bm25Of` join nothing row-scale at all
   * (single-pass shapes): they are pinned as no-join plans with one
-  * tokenize pass.
+  * tokenize pass. tfidf's tf rows, counted in-row by `term_counts`,
+  * cross one exchange on the term before the per-doc top-k window,
+  * whether the input is one file or many.
   */
 class TextPlanSpec extends SparkTestBase {
 
@@ -30,24 +32,41 @@ class TextPlanSpec extends SparkTestBase {
     df.queryExecution.executedPlan.toString
   }
 
-  test("tfidf is single-pass: one tokenize, no join, N off the spread") {
-    // tf sits on the doc_id spread, df is a count window over the one
-    // term shuffle and N is a 1-row broadcast computed off the spread
-    // without tokenizing — so the AQE-final plan has one explode, no
-    // row-scale join of any strategy, no pinned checkpoint scan, and the
-    // N branch reads the spread's exchange as a ReusedExchange
-    val p = finalPlan(graft.ops.Text.qTfidfTop(spark, dir))
-      .split("== Initial Plan ==").head
-    assert(!p.contains("SortMergeJoin") && !p.contains("ShuffledHashJoin") &&
-      !p.contains("BroadcastHashJoin"),
-      s"tfidf must not join row-scale sides at all:\n$p")
-    val tokenizes = "Generate explode".r.findAllIn(p).size
-    assert(tokenizes == 1,
-      s"expected exactly one tokenize pass, got $tokenizes:\n$p")
-    assert(!p.contains("Scan ExistingRDD"), s"nothing may be pinned:\n$p")
-    val reused = "ReusedExchange[^\n]*".r.findAllIn(p).toList
-    assert(reused.size == 1 && reused.head.contains("REPARTITION_BY_NUM"),
-      s"expected the spread reused once by the N branch:\n$p")
+  test("tfidf shuffles its tf rows once, by term") {
+    // tf leaves the map side as one (w, tf) row per distinct term of a
+    // row (term_counts), is shuffled once by w, and both the per-doc
+    // merge groupBy(w, doc_id) and the df window sit on that
+    // partitioning; N is a 1-row broadcast. So the AQE-final plan has one
+    // explode, exactly one exchange on hashpartitioning(w) alone, none
+    // on (doc_id, w), no spread of the raw text, no row-scale join and no
+    // pinned checkpoint scan — over a one-file table and over a
+    // many-file copy of it alike.
+    def check(label: String, docs: DataFrame): Unit = {
+      val p = finalPlan(graft.ops.Text.tfidfTopOf(docs, 3))
+        .split("== Initial Plan ==").head
+      assert(!p.contains("SortMergeJoin") && !p.contains("ShuffledHashJoin") &&
+        !p.contains("BroadcastHashJoin"),
+        s"$label: tfidf must not join row-scale sides at all:\n$p")
+      val tokenizes = "Generate explode".r.findAllIn(p).size
+      assert(tokenizes == 1,
+        s"$label: expected exactly one tokenize pass, got $tokenizes:\n$p")
+      val byTerm = "Exchange hashpartitioning\\(w#\\d+, \\d+\\)".r.findAllIn(p).size
+      assert(byTerm == 1,
+        s"$label: expected one exchange on w alone, got $byTerm:\n$p")
+      assert("hashpartitioning\\((doc_id#\\d+L?, w#|w#\\d+, doc_id#)".r
+        .findFirstIn(p).isEmpty, s"$label: tf shuffled on (doc_id, w):\n$p")
+      assert(!p.contains("REPARTITION_BY_NUM"), s"$label: raw text spread:\n$p")
+      assert(!p.contains("Scan ExistingRDD"), s"$label: nothing may be pinned:\n$p")
+    }
+    check("one file", Tables.documents(spark, dir))
+    val copy = java.nio.file.Files.createTempDirectory("graft-tfidf-split").toString
+    try {
+      Tables.documents(spark, dir).repartition(8)
+        .write.mode("overwrite").parquet(copy)
+      val many = spark.read.parquet(copy)
+      assert(many.rdd.getNumPartitions > 1)
+      check("8 files", many)
+    } finally org.apache.commons.io.FileUtils.deleteDirectory(new java.io.File(copy))
   }
 
   test("tfidf rows equal the tf-df join shape on blank, null and repeated docs") {
