@@ -3,7 +3,8 @@ package graft.functions
 import org.apache.spark.sql.catalyst.FunctionIdentifier
 import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
 import org.apache.spark.sql.catalyst.analysis.TypeCheckResult
-import org.apache.spark.sql.catalyst.expressions.{BinaryExpression, Expression, ExpressionInfo}
+import org.apache.spark.sql.catalyst.expressions.{BinaryExpression, BloomFilterMightContain, Expression, ExpressionInfo}
+import org.apache.spark.sql.catalyst.expressions.aggregate.BloomFilterAggregate
 import org.apache.spark.sql.catalyst.util.ArrayData
 import org.apache.spark.sql.types.{ArrayType, DataType, DoubleType, FloatType}
 import org.apache.spark.sql.SparkSession
@@ -80,116 +81,57 @@ case class CosineSimilarity(left: Expression, right: Expression)
     copy(left = newLeft, right = newRight)
 }
 
-/** Registration helpers: either via spark.sql.extensions=graft.functions
-  * .GraftExtensions at session build, or imperatively per-session.
+/** The native functions, registered from one table: at session build
+  * through `spark.sql.extensions=graft.functions.GraftExtensions`, or
+  * imperatively per session with [[ensureRegistered]].
   */
 object GraftFunctions {
-  val cosineSimBuilder: Seq[Expression] => Expression = {
-    case Seq(a, b) => CosineSimilarity(a, b)
-    case other => throw new IllegalArgumentException(
-      s"cosine_sim expects 2 arguments, got ${other.size}")
-  }
-
-  private val info = new ExpressionInfo(
-    classOf[CosineSimilarity].getCanonicalName, "cosine_sim")
-
-  val ivfNearestBuilder: Seq[Expression] => Expression = {
-    case Seq(e, c, n) => IvfNearest(e, c, n)
-    case other => throw new IllegalArgumentException(
-      s"ivf_nearest expects 3 arguments, got ${other.size}")
-  }
-
-  private val ivfNearestInfo = new ExpressionInfo(
-    classOf[IvfNearest].getCanonicalName, "ivf_nearest")
-
-  val termCountsBuilder: Seq[Expression] => Expression = {
-    case Seq(toks) => TermCounts(toks)
-    case other => throw new IllegalArgumentException(
-      s"term_counts expects 1 argument, got ${other.size}")
-  }
-
-  private val termCountsInfo = new ExpressionInfo(
-    classOf[TermCounts].getCanonicalName, "term_counts")
+  /** (identifier, info, builder) with the builder's arity error. */
+  private def entry(name: String, cls: Class[_], arity: String)(
+      build: PartialFunction[Seq[Expression], Expression])
+      : (FunctionIdentifier, ExpressionInfo, Seq[Expression] => Expression) =
+    (FunctionIdentifier(name), new ExpressionInfo(cls.getCanonicalName, name),
+      args => build.applyOrElse(args, (a: Seq[Expression]) =>
+        throw new IllegalArgumentException(s"$name expects $arity, got ${a.size}")))
 
   /** Spark ships `BloomFilterAggregate` / `BloomFilterMightContain`
     * (the build and probe its own runtime row-level filtering plans)
-    * but keeps both OUT of the public function registry — so expose
-    * them here under Spark's internal names for a fully codegen
+    * but keeps both OUT of the public function registry — so the table
+    * exposes them under Spark's internal names for a fully codegen
     * bloom-semi-join prefilter ([[graft.ops.Pipeline.bloomPrefilter]]).
     */
-  val bloomAggBuilder: Seq[Expression] => Expression = {
-    case Seq(c, est, bits) =>
-      new org.apache.spark.sql.catalyst.expressions.aggregate
-        .BloomFilterAggregate(c, est, bits)
-    case Seq(c, est) =>
-      new org.apache.spark.sql.catalyst.expressions.aggregate
-        .BloomFilterAggregate(c, est)
-    case Seq(c) =>
-      new org.apache.spark.sql.catalyst.expressions.aggregate
-        .BloomFilterAggregate(c)
-    case other => throw new IllegalArgumentException(
-      s"bloom_filter_agg expects 1-3 arguments, got ${other.size}")
-  }
-
-  val mightContainBuilder: Seq[Expression] => Expression = {
-    case Seq(bf, v) =>
-      org.apache.spark.sql.catalyst.expressions.BloomFilterMightContain(bf, v)
-    case other => throw new IllegalArgumentException(
-      s"might_contain expects 2 arguments, got ${other.size}")
-  }
-
-  private val bloomAggInfo = new ExpressionInfo(
-    classOf[org.apache.spark.sql.catalyst.expressions.aggregate.BloomFilterAggregate]
-      .getCanonicalName, "bloom_filter_agg")
-
-  private val mightContainInfo = new ExpressionInfo(
-    classOf[org.apache.spark.sql.catalyst.expressions.BloomFilterMightContain]
-      .getCanonicalName, "might_contain")
+  val table: Seq[(FunctionIdentifier, ExpressionInfo, Seq[Expression] => Expression)] = Seq(
+    entry("cosine_sim", classOf[CosineSimilarity], "2 arguments") {
+      case Seq(a, b) => CosineSimilarity(a, b)
+    },
+    entry("might_contain", classOf[BloomFilterMightContain], "2 arguments") {
+      case Seq(bf, v) => BloomFilterMightContain(bf, v)
+    },
+    entry("bloom_filter_agg", classOf[BloomFilterAggregate], "1-3 arguments") {
+      case Seq(c, est, bits) => new BloomFilterAggregate(c, est, bits)
+      case Seq(c, est) => new BloomFilterAggregate(c, est)
+      case Seq(c) => new BloomFilterAggregate(c)
+    },
+    entry("ivf_nearest", classOf[IvfNearest], "3 arguments") {
+      case Seq(e, c, n) => IvfNearest(e, c, n)
+    },
+    entry("term_counts", classOf[TermCounts], "1 argument") {
+      case Seq(toks) => TermCounts(toks)
+    })
 
   /** Idempotent imperative registration on an existing session. */
   def ensureRegistered(spark: SparkSession): Unit = {
-    val classic = spark.asInstanceOf[org.apache.spark.sql.classic.SparkSession]
-    val registry = classic.sessionState.functionRegistry
-    val id = FunctionIdentifier("cosine_sim")
-    if (!registry.functionExists(id))
-      registry.registerFunction(id, info, cosineSimBuilder)
-    val mcId = FunctionIdentifier("might_contain")
-    if (!registry.functionExists(mcId))
-      registry.registerFunction(mcId, mightContainInfo, mightContainBuilder)
-    val bfId = FunctionIdentifier("bloom_filter_agg")
-    if (!registry.functionExists(bfId))
-      registry.registerFunction(bfId, bloomAggInfo, bloomAggBuilder)
-    val ivfId = FunctionIdentifier("ivf_nearest")
-    if (!registry.functionExists(ivfId))
-      registry.registerFunction(ivfId, ivfNearestInfo, ivfNearestBuilder)
-    val tcId = FunctionIdentifier("term_counts")
-    if (!registry.functionExists(tcId))
-      registry.registerFunction(tcId, termCountsInfo, termCountsBuilder)
+    val registry = spark.asInstanceOf[org.apache.spark.sql.classic.SparkSession]
+      .sessionState.functionRegistry
+    for ((id, info, builder) <- table if !registry.functionExists(id))
+      registry.registerFunction(id, info, builder)
   }
 }
 
 /** `--conf spark.sql.extensions=graft.functions.GraftExtensions` */
 class GraftExtensions extends (org.apache.spark.sql.SparkSessionExtensions => Unit) {
   override def apply(ext: org.apache.spark.sql.SparkSessionExtensions): Unit = {
-    ext.injectFunction((FunctionIdentifier("cosine_sim"),
-      new ExpressionInfo(classOf[CosineSimilarity].getCanonicalName, "cosine_sim"),
-      GraftFunctions.cosineSimBuilder))
-    ext.injectFunction((FunctionIdentifier("might_contain"),
-      new ExpressionInfo(
-        classOf[org.apache.spark.sql.catalyst.expressions.BloomFilterMightContain]
-          .getCanonicalName, "might_contain"),
-      GraftFunctions.mightContainBuilder))
-    ext.injectFunction((FunctionIdentifier("bloom_filter_agg"),
-      new ExpressionInfo(
-        classOf[org.apache.spark.sql.catalyst.expressions.aggregate.BloomFilterAggregate]
-          .getCanonicalName, "bloom_filter_agg"),
-      GraftFunctions.bloomAggBuilder))
-    ext.injectFunction((FunctionIdentifier("ivf_nearest"),
-      new ExpressionInfo(classOf[IvfNearest].getCanonicalName, "ivf_nearest"),
-      GraftFunctions.ivfNearestBuilder))
-    ext.injectFunction((FunctionIdentifier("term_counts"),
-      new ExpressionInfo(classOf[TermCounts].getCanonicalName, "term_counts"),
-      GraftFunctions.termCountsBuilder))
+    GraftFunctions.table.foreach(ext.injectFunction)
     ext.injectOptimizerRule(_ => graft.plans.CollapseRedundantRound)
     ext.injectOptimizerRule(_ => graft.plans.RewriteAsOfJoin)
   }

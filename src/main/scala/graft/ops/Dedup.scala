@@ -398,6 +398,15 @@ object Dedup {
   /** Connected components over candidate pairs; canonical = component MIN.
     * `driverThreshold` picks the strategy (see [[ResolveDriverThreshold]];
     * pass 0 to force the distributed loop).
+    *
+    * Building it runs Spark jobs: `pairsDf` is cached and probed with
+    * `collect()` when this method is called, not when the returned
+    * frame runs; on the driver path the components are computed there
+    * and the frame holds them as local rows. Above the threshold each
+    * propagation round is an eager `localCheckpoint`: those snapshots
+    * live in executor block storage with their lineage cut, so losing
+    * an executor that holds a block fails the query instead of
+    * recomputing it.
     */
   def resolveComponents(spark: SparkSession, pairsDf: DataFrame,
     driverThreshold: Long): DataFrame = {

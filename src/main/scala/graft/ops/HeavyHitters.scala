@@ -95,6 +95,12 @@ object HeavyHitters {
     * one-column (`t` STRING) frame, via the CMS prepass. Threshold
     * arithmetic is integer (`(total·permille + 999) div 1000`) so the
     * oracle can replay it without floating-point ceil hazards.
+    *
+    * Building it runs a Spark job: the count-min sketch is aggregated
+    * over `tokens` and collected when this method is called, not when
+    * the returned frame runs, and rides in the plan as a literal. The
+    * frame is read once for the sketch and again when it runs, so it
+    * must be deterministic.
     */
   def heavyHitters(tokens: DataFrame, permille: Long): DataFrame = {
     val withH = tokens.withColumn("hh", xxhash64(col("t")))

@@ -28,17 +28,6 @@ object Multimodal {
   final case class ImageFeatures(doc_id: Long, w: Long, h: Long,
     sum_r: Long, sum_g: Long, sum_b: Long)
 
-  /** documents → (doc_id, payload BINARY, meta struct). The payload
-    * holds utf-8 text bytes standing in for opaque media bytes —
-    * metadata/frame plumbing queries (`q_mm_meta`, `q_mm_frames`) run
-    * on this; the decoded-pixel queries use [[imagesOf]].
-    */
-  def binarize(spark: SparkSession, dir: String): DataFrame = {
-    graft.Tables.documentsSpread(spark, dir)
-      .select(col("doc_id"), col("text").cast("binary").as("payload"),
-        struct(col("lang"), col("n_chars"), col("source")).as("meta"))
-  }
-
   /** One deterministic P6 image per document. Dimensions vary per doc
     * (w ∈ 8..16, h ∈ 6..10); sample byte i of the row-major RGB plane
     * is `(doc_id·131 + i·7 + text[i mod len]) mod 256`. Every term is
@@ -76,7 +65,7 @@ object Multimodal {
     featuresOf(imagesOf(spark, dir))
 
   /** Same decode + feature pass over ANY (doc_id, P6 payload) frame —
-    * the facade's entry for user-supplied media columns.
+    * the entry for user-supplied media columns.
     */
   def featuresOf(images: Dataset[MediaRow]): Dataset[ImageFeatures] = {
     import images.sparkSession.implicits._
@@ -91,7 +80,7 @@ object Multimodal {
   }
 
   /** Decoded-sample stats over ANY (doc_id, WAV payload) frame — the
-    * facade's audio twin of [[featuresOf]].
+    * audio twin of [[featuresOf]].
     */
   def audioStatsOf(wavs: Dataset[MediaRow]): DataFrame = {
     import wavs.sparkSession.implicits._

@@ -69,8 +69,8 @@ object Pipeline {
   def qSplitTrain(spark: SparkSession, dir: String): DataFrame =
     splitCountsOf(Tables.documents(spark, dir))
 
-  /** Per-doc split assignment over any (doc_id, ...) frame — the
-    * facade-facing form (adds a `split` column).
+  /** Per-doc split assignment over any (doc_id, ...) frame (adds a
+    * `split` column).
     */
   def withSplit(docs: DataFrame): DataFrame =
     docs
@@ -283,6 +283,11 @@ object Pipeline {
     * (`PlanSpec` pins this) with no closure serialization and no UDF
     * black box blocking later pushdown. xxhash64 on BOTH sides keeps
     * build and probe hashing identical for any key type.
+    *
+    * Building it runs a Spark job: the filter over `dim` is aggregated
+    * and fetched with `head` when this method is called, not when the
+    * returned frame runs. A later change to `dim` is not seen by the
+    * returned frame.
     */
   def bloomPrefilter(fact: DataFrame, factKey: String,
     dim: DataFrame, dimKey: String, expectedKeys: Long): DataFrame = {

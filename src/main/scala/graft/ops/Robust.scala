@@ -79,6 +79,13 @@ object Robust {
     * pointing at a random multiply. At 10¹⁸ micro-cents·rows (e.g.
     * 10¹⁰ rows of values up to 10⁶) the restructure is to subtract the
     * per-group mean before squaring, which shrinks magnitudes by ~n.
+    *
+    * With `singleScan = true` (the default) building it runs a Spark
+    * job: an eager `localCheckpoint` pins the per-(group, value) counts
+    * on the executors when this method is called, not when the
+    * returned frame runs. The pinned snapshot lives in executor block
+    * storage with its lineage cut, so losing an executor that holds a
+    * block fails the query instead of recomputing it.
     */
   def zscoreOutliers(df: DataFrame, group: Column, value: Column,
     singleScan: Boolean = true): DataFrame = {
@@ -304,6 +311,13 @@ object Robust {
     * (see [[SingleScanBytes]]) produce identical rows — `RobustSpec`
     * pins the equality (the A/B of the two shapes is recorded in
     * OPTIMIZATION_r19.md).
+    *
+    * With `singleScan = true` (the default) building it runs a Spark
+    * job: an eager `localCheckpoint` pins the per-(group, value) counts
+    * on the executors when this method is called, not when the
+    * returned frame runs. The pinned snapshot lives in executor block
+    * storage with its lineage cut, so losing an executor that holds a
+    * block fails the query instead of recomputing it.
     */
   def winsorize(df: DataFrame, group: Column, value: Column,
     pLo: Int, pHi: Int, singleScan: Boolean = true): DataFrame = {
@@ -375,6 +389,13 @@ object Robust {
 
   /** [[qFeatureBinning]] over any frame: per-group decile audit. Both
     * shapes (see [[SingleScanBytes]]) produce identical rows.
+    *
+    * With `singleScan = true` (the default) building it runs a Spark
+    * job: an eager `localCheckpoint` pins the per-(group, value) counts
+    * on the executors when this method is called, not when the
+    * returned frame runs. The pinned snapshot lives in executor block
+    * storage with its lineage cut, so losing an executor that holds a
+    * block fails the query instead of recomputing it.
     */
   def featureBins(df: DataFrame, group: Column, value: Column,
     singleScan: Boolean = true): DataFrame = {

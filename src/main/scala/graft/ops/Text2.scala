@@ -33,7 +33,15 @@ object Text2 {
   def qPmiBigrams(spark: SparkSession, dir: String): DataFrame =
     pmiBigramsOf(Tables.documentsSpread(spark, dir), minCount = 3, k = 15)
 
-  /** Same operator over any frame with a `text` column. */
+  /** Same operator over any frame with a `text` column.
+    *
+    * Building it runs Spark jobs: eager `localCheckpoint`s pin the
+    * unigram and bigram count tables on the executors when this method
+    * is called, not when the returned frame runs. The pinned snapshots
+    * live in executor block storage with their lineage cut, so losing
+    * an executor that holds a block fails the query instead of
+    * recomputing it.
+    */
   def pmiBigramsOf(docs: DataFrame, minCount: Int, k: Int): DataFrame = {
     val toks = docs
       .withColumn("w", split(lower(col("text")), " ", -1))
@@ -100,7 +108,15 @@ object Text2 {
   def qUnigramLm(spark: SparkSession, dir: String): DataFrame =
     unigramLmScores(Tables.documentsSpread(spark, dir))
 
-  /** Same scorer over any frame with (doc_id, text). */
+  /** Same scorer over any frame with (doc_id, text).
+    *
+    * Building it runs Spark jobs: an eager `localCheckpoint` pins the
+    * vocabulary count table on the executors when this method is
+    * called, not when the returned frame runs. The pinned
+    * snapshot lives in executor block storage with its lineage cut, so
+    * losing an executor that holds a block fails the query instead of
+    * recomputing it.
+    */
   def unigramLmScores(docs: DataFrame): DataFrame = {
     val toks = docs
       .select(col("doc_id"),

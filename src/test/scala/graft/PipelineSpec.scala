@@ -82,7 +82,7 @@ class PipelineSpec extends SparkTestBase {
 
   test("profile: one row per column, counts partition the table") {
     val n = Tables.lineitem(spark, sfDir).count()
-    val prof = Graft.pipeline.profile(Tables.lineitem(spark, sfDir),
+    val prof = ops.Profile.profileOf(Tables.lineitem(spark, sfDir),
       Seq("l_quantity", "l_discount")).collect()
     assert(prof.length == 2)
     prof.foreach { r =>

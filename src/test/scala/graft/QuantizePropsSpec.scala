@@ -22,7 +22,7 @@ class QuantizePropsSpec extends SparkTestBase {
     assert(vecs.nonEmpty)
     val df = vecs.zipWithIndex.map { case (v, i) => (i.toLong, v) }
       .toDF("vec_id", "embedding")
-    val got = Graft.sim.quantizeFidelity(df).collect()
+    val got = ops.Sim2.quantizeOf(df).collect()
       .map(r => r.getLong(0) -> (r.getDouble(1), r.getDouble(2))).toMap
     vecs.zipWithIndex.foreach { case (v, i) =>
       val d = v.map(_.toDouble)
@@ -37,7 +37,7 @@ class QuantizePropsSpec extends SparkTestBase {
   test("a constant vector quantizes exactly (scale clamp path)") {
     import spark.implicits._
     val df = Seq((0L, Array(3.5f, 3.5f, 3.5f))).toDF("vec_id", "embedding")
-    val r = Graft.sim.quantizeFidelity(df).collect().head
+    val r = ops.Sim2.quantizeOf(df).collect().head
     assert(r.getDouble(1) == 1.0 && r.getDouble(2) == 0.0)
   }
 
@@ -59,7 +59,7 @@ class QuantizePropsSpec extends SparkTestBase {
     val bgs = toks.flatMap(ts => ts.zip(ts.drop(1)))
     val cab = bgs.groupBy(identity).view.mapValues(_.size.toLong).toMap
     val nb = bgs.size.toDouble
-    val got = Graft.text.pmiBigrams(df, minCount = 1, k = 1000).collect()
+    val got = ops.Text2.pmiBigramsOf(df, minCount = 1, k = 1000).collect()
       .map(r => ((r.getString(0), r.getString(1)), (r.getLong(2), r.getDouble(3))))
       .toMap
     assert(got.keySet == cab.keySet)

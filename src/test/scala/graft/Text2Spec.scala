@@ -12,7 +12,7 @@ class Text2Spec extends SparkTestBase {
     // unigrams: x=3 y=3 z=1, U=7
     // bigrams: (x,y)=3 [doc1 twice + doc2 once], (y,x)=1, (y,z)=1, NB=5
     val docs = Seq((1L, "x y x y"), (2L, "x y z")).toDF("doc_id", "text")
-    val got = Graft.text.pmiBigrams(docs, minCount = 1, k = 10)
+    val got = ops.Text2.pmiBigramsOf(docs, minCount = 1, k = 10)
       .collect()
       .map(r => ((r.getString(0), r.getString(1)), (r.getLong(2), r.getDouble(3))))
       .toMap
@@ -31,7 +31,7 @@ class Text2Spec extends SparkTestBase {
     import spark.implicits._
     val docs = Seq((1L, "a b a b a b"), (2L, "c d")).toDF("doc_id", "text")
     // (a,b)=3, (b,a)=2, (c,d)=1
-    val got = Graft.text.pmiBigrams(docs, minCount = 2, k = 1).collect()
+    val got = ops.Text2.pmiBigramsOf(docs, minCount = 2, k = 1).collect()
     assert(got.length == 1)
     assert((got(0).getString(0), got(0).getString(1)) == (("a", "b")),
       "with equal unigram margins the more frequent pair has higher PMI")
