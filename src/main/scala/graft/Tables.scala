@@ -87,9 +87,11 @@ object Tables {
     *    sits on the spread — the per-doc `groupBy(doc_id)` of the
     *    minhash/simhash signatures, the fingerprints'
     *    `Window.partitionBy(doc_id)` — finds its `ClusteredDistribution`
-    *    already satisfied and plans no second exchange; a pipeline whose
-    *    first shuffle is on another key gains nothing from it (TF-IDF
-    *    shuffles its tf rows by term, so it reads the table unspread);
+    *    already satisfied and plans no second exchange; a pipeline that
+    *    does no per-row work before its own first shuffle gains nothing
+    *    from it (TF-IDF's first operator is its `groupBy(doc_id)` merge,
+    *    which shuffles the raw rows once and tokenizes above that
+    *    exchange, so it reads the table unspread);
     *  - no keys means round-robin, and Spark sorts every raw row in each
     *    map task before dealing it out
     *    (`spark.sql.execution.sortBeforeRepartition`) so a retried task

@@ -16,9 +16,10 @@ import org.apache.spark.unsafe.types.UTF8String
   * This is in-mapper combining (Lin & Dyer, *Data-Intensive Text
   * Processing with MapReduce*): `explode(term_counts(...))` emits one
   * (term, tf) row per distinct term of a row instead of one row per
-  * token occurrence, so a shuffle by term ships each (doc, term) once
-  * and a hot term's reducer gets one row per doc, not per occurrence.
-  * The tokenizer stays outside (TF-IDF passes Spark's own
+  * token occurrence. TF-IDF applies it to a doc's merged text, so its
+  * tf rows are made where the doc sits and never shipped, and its df
+  * aggregate combines one row per (doc, term) map-side, not one per
+  * occurrence. The tokenizer stays outside (TF-IDF passes Spark's own
   * `split(lower(text), ' ', -1)`), so token semantics cannot drift.
   *
   * Keys are compared as UTF-8 bytes. The map keys are `copy()`'d: a

@@ -28,7 +28,12 @@ import graft.Tables
   */
 object Sim2 {
 
-  /** Every 100th vector is a query; the rest are the corpus. */
+  /** Every 100th vector is a query; the rest are the corpus. The gate
+    * lanes score the spread corpus but cut their query rows from the
+    * unspread table, as `Sim.queryVec` does: the filter sits below the
+    * spread, so a query side read through it would shuffle a second scan
+    * only to move the few rows a broadcast or a probe join takes.
+    */
   private val QueryPred = "vec_id % 100 = 0"
 
   /** Per-query brute-force cosine top-3 over the corpus, query set
@@ -37,7 +42,8 @@ object Sim2 {
     * oracle's window formulation reproduces the exact same list.
     */
   def qSimBatchTopK(spark: SparkSession, dir: String): DataFrame =
-    batchTopKOf(Tables.embeddingsSpread(spark, dir), QueryPred, k = 3)
+    batchTopK(Tables.embeddingsSpread(spark, dir), QueryPred, k = 3,
+      Tables.embeddings(spark, dir))
 
   /** Scored (q_id, vec_id, cos) pairs folded to per-query top-k through
     * the bounded Aggregator, exploded back with 1-based ranks.
@@ -61,9 +67,16 @@ object Sim2 {
   /** Batch brute force over any embeddings frame: rows matching
     * `queryPred` form the (broadcast) query set, the rest the corpus.
     */
-  def batchTopKOf(emb: DataFrame, queryPred: String, k: Int): DataFrame = {
+  def batchTopKOf(emb: DataFrame, queryPred: String, k: Int): DataFrame =
+    batchTopK(emb, queryPred, k, emb)
+
+  /** [[batchTopKOf]] with the query rows cut from `querySrc`, a frame
+    * holding the same rows as `emb`.
+    */
+  private def batchTopK(emb: DataFrame, queryPred: String, k: Int,
+    querySrc: DataFrame): DataFrame = {
     graft.functions.GraftFunctions.ensureRegistered(emb.sparkSession)
-    val q = broadcast(emb.filter(expr(queryPred))
+    val q = broadcast(querySrc.filter(expr(queryPred))
       .select(col("vec_id").as("q_id"), col("embedding").as("q_emb")))
     topKPerQuery(
       emb.filter(not(expr(queryPred)))
@@ -97,13 +110,13 @@ object Sim2 {
     * partition. Per-query top-3 again via the bounded Aggregator.
     */
   def qSimBatchIvf(spark: SparkSession, dir: String): DataFrame =
-    batchIvfOf(Tables.embeddingsSpread(spark, dir), QueryPred,
-      nprobe = 2, k = 3)
+    batchIvf(Tables.embeddingsSpread(spark, dir), QueryPred,
+      nprobe = 2, k = 3, Tables.embeddings(spark, dir))
 
   /** Salted twin of [[qSimBatchIvf]] (salt = 8); shares its oracle. */
   def qSimBatchIvfSalted(spark: SparkSession, dir: String): DataFrame =
-    batchIvfSaltedOf(Tables.embeddingsSpread(spark, dir), QueryPred,
-      nprobe = 2, k = 3, salt = 8)
+    batchIvfSalted(Tables.embeddingsSpread(spark, dir), QueryPred,
+      nprobe = 2, k = 3, salt = 8, Tables.embeddings(spark, dir))
 
   /** Batch IVF over any embeddings frame (needs `label` for the
     * deterministic codebook); rows matching `queryPred` are the queries.
@@ -120,8 +133,12 @@ object Sim2 {
     * exactly as the salted-join lane does.
     */
   def batchIvfOf(emb: DataFrame, queryPred: String,
-    nprobe: Int, k: Int): DataFrame = {
-    val (corpus, queries) = ivfSides(emb, queryPred, nprobe)
+    nprobe: Int, k: Int): DataFrame = batchIvf(emb, queryPred, nprobe, k, emb)
+
+  /** [[batchIvfOf]] with the query rows cut from `querySrc`. */
+  private def batchIvf(emb: DataFrame, queryPred: String,
+    nprobe: Int, k: Int, querySrc: DataFrame): DataFrame = {
+    val (corpus, queries) = ivfSides(emb, queryPred, nprobe, querySrc)
     // This operator IS the "query set too big to broadcast" lane (object
     // scaladoc): both sides shuffle on the list id by design, so the
     // strategy is pinned shuffle_hash building the query side per
@@ -150,8 +167,13 @@ object Sim2 {
     * SQL verbatim (the unsalted formulation).
     */
   def batchIvfSaltedOf(emb: DataFrame, queryPred: String,
-    nprobe: Int, k: Int, salt: Int): DataFrame = {
-    val (corpus, queries) = ivfSides(emb, queryPred, nprobe)
+    nprobe: Int, k: Int, salt: Int): DataFrame =
+    batchIvfSalted(emb, queryPred, nprobe, k, salt, emb)
+
+  /** [[batchIvfSaltedOf]] with the query rows cut from `querySrc`. */
+  private def batchIvfSalted(emb: DataFrame, queryPred: String,
+    nprobe: Int, k: Int, salt: Int, querySrc: DataFrame): DataFrame = {
+    val (corpus, queries) = ivfSides(emb, queryPred, nprobe, querySrc)
     val c = corpus.withColumn("shard", pmod(col("vec_id"), lit(salt.toLong)))
     val q = queries.withColumn("shard",
       explode(sequence(lit(0L), lit(salt.toLong - 1))))
@@ -165,10 +187,11 @@ object Sim2 {
   }
 
   /** Shared IVF assignment: (corpus rows with nearest list, query rows
-    * replicated over their nprobe nearest lists).
+    * replicated over their nprobe nearest lists). The codebook and the
+    * corpus come from `emb`, the query rows from `querySrc`.
     */
-  private def ivfSides(emb: DataFrame, queryPred: String, nprobe: Int)
-    : (DataFrame, DataFrame) = {
+  private def ivfSides(emb: DataFrame, queryPred: String, nprobe: Int,
+    querySrc: DataFrame): (DataFrame, DataFrame) = {
     graft.functions.GraftFunctions.ensureRegistered(emb.sparkSession)
     val e = emb
     val centroids = labelCentroids(e)
@@ -190,7 +213,7 @@ object Sim2 {
     val corpus = e.filter(not(expr(queryPred))).crossJoin(cb)
       .withColumn("lst", expr("element_at(ivf_nearest(embedding, cb, 1), 1)"))
       .drop("cb")
-    val queries = e.filter(expr(queryPred)).crossJoin(cb)
+    val queries = querySrc.filter(expr(queryPred)).crossJoin(cb)
       .select(col("vec_id").as("q_id"), col("embedding").as("q_emb"),
         explode(expr(s"ivf_nearest(embedding, cb, $nprobe)")).as("lst"))
     (corpus, queries)

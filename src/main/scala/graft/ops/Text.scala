@@ -240,13 +240,14 @@ object Text {
 
   /** TF-IDF keyword extraction: top-3 terms per document by
     * tf · ln(N/df) — the classic corpus-statistics feature stage (search
-    * indexing, topic labeling, near-dup explanation). Shape: per-row
-    * term counts exploded to one (term, tf) row per distinct term of a
-    * row, one shuffle by term carrying tf and df, N as a 1-row
-    * broadcast, then a per-doc top-k window — see [[tfidfTopOf]]. It
-    * reads the unspread table: the term shuffle is the only exchange
-    * tf needs, so spreading the raw text first would only ship it
-    * twice. The score rounds to 6 decimals after one double multiply of
+    * indexing, topic labeling, near-dup explanation). Shape: the rows of
+    * a doc merged by one shuffle on `doc_id`, per-doc term counts
+    * exploded in place, df and N reduced to a vocabulary-sized table and
+    * broadcast back, then a per-doc top-k window on the same
+    * partitioning — see [[tfidfTopOf]]. It reads the
+    * unspread table: the merge's `doc_id` shuffle is the one row-scale
+    * exchange, so spreading the raw text first would only ship it twice.
+    * The score rounds to 6 decimals after one double multiply of
     * ln(N/df) — division and log on identical rationals, engine-exact in
     * practice.
     */
@@ -256,68 +257,73 @@ object Text {
   /** Same operator over any deterministic (doc_id, text) frame; top `k`
     * terms/doc.
     *
-    * The MapReduce chain of the reference: the map side emits (term,
-    * doc, tf), the data is shuffled once by term, the reducer counts df.
-    *  - tf: `explode(term_counts(split(lower(text), ' ', -1)))` — the
-    *    native [[graft.functions.TermCounts]] counts each row's tokens
-    *    in the row (in-mapper combining), so one (w, tf) row leaves per
-    *    distinct term of a row; `repartition(w)` is the one shuffle;
-    *    `groupBy(w, doc_id)` with `sum(tf)` only merges a doc_id that
-    *    repeats across rows, and `hashpartitioning(w)` already
-    *    satisfies it (no exchange).
-    *  - df(w) = #docs containing w = #tf rows for w: a
-    *    `count(1) over (partition by w)` window, on the same
-    *    partitioning (no exchange).
-    *  - N: docs with at least one non-empty token. A token of
-    *    `split(lower(text), ' ')` is non-empty iff text holds a
-    *    character other than ' ', which is `trim(text) <> ''` (Spark's
-    *    `trim` strips ASCII 32 only; a tab-only text is one token). So
-    *    N is read off `docs` without tokenizing: that predicate's max
-    *    per doc_id (a doc_id may repeat), the true rows counted; its
-    *    partial aggregate ships one (doc_id, flag) row per doc and
-    *    partition.
-    * The score expression, the per-doc `row_number` and its ordering
-    * are those of the former tf⋈df join shape, and so are the rows
-    * (`TextPlanSpec` compares the two).
-    *
-    * The plan does not depend on how `docs` is split: over a one-file
-    * scan and over a many-file scan alike, the tf rows cross two
-    * exchanges, `hashpartitioning(w)` and then `doc_id` for the top-k
-    * window. (A `groupBy(doc_id, w)` before the term window ships them
-    * three times on a many-file scan: by (doc_id, w), by w, by doc_id.)
+    * The reference's MapReduce chain ships one (term, doc, tf) pair per
+    * distinct term of a doc; here no tf row crosses an exchange:
+    *  - one row per doc: `groupBy(doc_id)` with
+    *    `concat_ws(" ", collect_list(text))`. The separator is the split
+    *    delimiter, so joining a repeated doc_id's texts only adds empty
+    *    tokens between them, which `term_counts` drops; null texts are
+    *    skipped by `collect_list`. This `doc_id` shuffle of the raw
+    *    `(doc_id, text)` rows is the one row-scale exchange, and it is
+    *    absent when `docs` is already hash-partitioned on `doc_id`.
+    *  - tf: `explode(term_counts(split(lower(text), ' ', -1)))` on the
+    *    merged rows — the native [[graft.functions.TermCounts]] counts a
+    *    doc's tokens in the row, so one (w, tf) row per distinct term of
+    *    a doc is produced where the doc already sits.
+    *  - df(w) = #docs containing w: a second tokenize pass emits each
+    *    term of a doc once into `groupBy(w).count()`, map-side combined
+    *    to at most one row per term and map task, then broadcast and
+    *    joined on `w`.
+    *  - N = #docs with at least one term, carried in the same table:
+    *    that pass also emits `""` once for each doc with a term, and
+    *    `""` is never a term (`term_counts` drops empty tokens), so its
+    *    count is N. A window over the (vocabulary-sized) aggregate puts
+    *    N on every row before the broadcast. So N costs no third reader
+    *    of the `doc_id` exchange and no second broadcast.
+    * The tf and df branches both read the one `doc_id` exchange, the
+    * second as a `ReusedExchange`; each fetches its whole output. The
+    * score expression, the per-doc `row_number` (already satisfied by
+    * the `doc_id` partitioning) and its ordering are those of the former
+    * tf⋈df join shape, and so are the rows (`TextPlanSpec` compares the
+    * two).
     *
     * Trade-offs:
-    *  - Skew: a hot term's rows are summed and window-sorted in the one
-    *    task that owns the term, one row per (row, term) — the same
-    *    profile as a per-(doc, term) aggregate. A plain token explode
-    *    before `repartition(w)` would ship every occurrence instead,
-    *    about avg-tf times more rows to that task. AQE's skew split does
-    *    not apply (it splits joins only).
-    *  - `docs` is evaluated by two branches (tf and N), so the frame
-    *    must be deterministic. The N branch never tokenizes, but it
-    *    reads `doc_id, text` a second time.
-    * With no row-scale join, r12's hazard (AQE broadcasting the
-    * corpus-scale tf side) cannot arise, and nothing is pinned.
+    *  - The df broadcast grows with the vocabulary, not the corpus — the
+    *    shape of Spark MLlib's `IDFModel`. While the distinct terms fit a
+    *    broadcast it replaces shipping every (term, doc) pair. On a
+    *    generated frame of df-1 terms (`local[4]`), 10⁵ terms broadcast
+    *    20 MB and ran as fast as the former term shuffle, while 10⁶
+    *    terms broadcast 112 MB and ran about 25% slower: the crossover
+    *    is vocabulary size, not corpus size.
+    *  - The corpus is tokenized twice (tf and df), and the merged rows
+    *    are fetched twice, trading CPU and shuffle reads for not
+    *    shipping the tf rows.
+    *  - A doc's texts are merged into one string in one task, so a
+    *    doc_id repeated across very many rows is a hot key.
+    *  - `docs` is evaluated by both branches through one exchange, so
+    *    the frame must be deterministic.
+    * Nothing is pinned and no row-scale side is joined, so r12's hazard
+    * (AQE broadcasting a corpus-scale side) cannot arise.
     */
   def tfidfTopOf(docs: DataFrame, k: Int): DataFrame = {
     import org.apache.spark.sql.expressions.Window
     graft.functions.GraftFunctions.ensureRegistered(docs.sparkSession)
-    val tf = docs
-      .select(col("doc_id"), explode(call_function("term_counts",
-        split(lower(col("text")), " ", -1))).as(Seq("w", "tf")))
-      .repartition(col("w"))
-      .groupBy(col("w"), col("doc_id"))
-      .agg(sum(col("tf")).as("tf"))
-    val n = docs
-      .groupBy(col("doc_id"))
-      .agg(max(trim(col("text")) =!= "").as("has_token"))
-      .filter(col("has_token"))
-      .agg(count(lit(1)).as("n"))
-    val byTerm = Window.partitionBy(col("w"))
+    val one = docs.groupBy(col("doc_id"))
+      .agg(concat_ws(" ", collect_list(col("text"))).as("text"))
+    val terms = one.select(col("doc_id"),
+      call_function("term_counts", split(lower(col("text")), " ", -1)).as("tc"))
+    val tf = terms.select(col("doc_id"), explode(col("tc")).as(Seq("w", "tf")))
+    // "" is no term (term_counts drops empty tokens), so giving it to
+    // every doc that has a term makes its df the N of the score
+    val df = terms
+      .select(explode(when(size(col("tc")) > 0,
+        concat(map_keys(col("tc")), array(lit(""))))).as("w"))
+      .groupBy(col("w")).agg(count(lit(1)).as("df"))
+      .withColumn("n",
+        max(when(col("w") === "", col("df"))).over(Window.partitionBy()))
     val win = Window.partitionBy(col("doc_id"))
       .orderBy(col("score").desc, col("w").asc)
-    tf.withColumn("df", count(lit(1)).over(byTerm))
-      .crossJoin(broadcast(n))
+    tf.join(broadcast(df), "w")
       .withColumn("score", round(col("tf") *
         log(col("n").cast("double") / col("df").cast("double")), 6))
       .withColumn("rk", row_number().over(win).cast("long"))

@@ -4,7 +4,9 @@ import java.nio.file.{Files, Paths}
 
 import scala.jdk.CollectionConverters._
 
-import org.apache.spark.sql.execution.ExplainMode
+import org.apache.spark.sql.execution.{ExplainMode, SparkPlan}
+import org.apache.spark.sql.execution.adaptive.{AdaptiveSparkPlanExec, QueryStageExec}
+import org.apache.spark.sql.execution.exchange.{ReusedExchangeExec, ShuffleExchangeExec}
 
 /** Dumps the plans of gate queries, one set of files per query:
   *
@@ -21,8 +23,9 @@ import org.apache.spark.sql.execution.ExplainMode
   *    `TransformWithStateExec`, ...); a streaming frame has no physical
   *    plan until `IncrementalExecution` plans a micro-batch;
   *  - `exchanges.tsv` — one row per query, counted from its AQE-final
-  *    plan by [[exchangeCounts]]: the gate's exchange tally, one method
-  *    for every before/after comparison.
+  *    plan by [[exchangeCounts]] and [[shuffleBytes]]: the gate's
+  *    exchange tally and the bytes its shuffles wrote, one method for
+  *    every before/after comparison.
   *
   * The session is [[graft.Bench.session]], so the optimizer is the one
   * the gate runs. Usage:
@@ -64,6 +67,37 @@ object PlanDump {
       lines.count(l => l._1 == "Exchange" && l._2.contains("RoundRobinPartitioning")))
   }
 
+  /** Every node of an executed plan's outer tree, the plan
+    * [[exchangeCounts]] reads: through its adaptive wrapper, into its
+    * query stages and through reused exchanges, so a reused stage's
+    * nodes appear once per reader. Nested adaptive plans (scalar
+    * subqueries, the plans behind a cached or checkpointed scan) are not
+    * entered.
+    */
+  def nodes(plan: SparkPlan): Seq[SparkPlan] = {
+    def walk(p: SparkPlan): Seq[SparkPlan] = p +: (p match {
+      case _: AdaptiveSparkPlanExec => Nil
+      case s: QueryStageExec => walk(s.plan)
+      case r: ReusedExchangeExec => walk(r.child)
+      case _ => p.children.flatMap(walk)
+    })
+    plan match {
+      case a: AdaptiveSparkPlanExec => walk(a.executedPlan)
+      case p => walk(p)
+    }
+  }
+
+  /** Bytes written by the shuffles of one executed plan: the
+    * `shuffleBytesWritten` metric summed over the distinct shuffle
+    * exchanges of [[nodes]], a stage read again through a
+    * `ReusedExchange` counted once. Nested adaptive plans are not
+    * included, and neither are the jobs a builder ran before the query.
+    * Read it after the plan has run.
+    */
+  def shuffleBytes(plan: SparkPlan): Long =
+    nodes(plan).collect { case e: ShuffleExchangeExec => e }.distinctBy(_.id)
+      .map(_.metrics.get("shuffleBytesWritten").fold(0L)(_.value)).sum
+
   def main(args: Array[String]): Unit = {
     require(args.length >= 2, "usage: PlanDump <outDir> <sfDir> [query ...]")
     val Array(outDir, sfDir) = args.take(2)
@@ -102,7 +136,8 @@ object PlanDump {
       val finalPlan = df.queryExecution.executedPlan.toString
       write(s"$name.final.txt", finalPlan)
       val (exchanges, reused, roundRobin) = exchangeCounts(finalPlan)
-      tally += s"$name\t$exchanges\t$reused\t$roundRobin"
+      val bytes = shuffleBytes(df.queryExecution.executedPlan)
+      tally += s"$name\t$exchanges\t$reused\t$roundRobin\t$bytes"
       sink.asScala.toSeq.sortBy(_._1).foreach { case (stream, plan) =>
         write(s"$name.stream.$stream.txt", plan)
       }
@@ -111,7 +146,8 @@ object PlanDump {
       println(s"[plan-dump] $name: ${2 + sink.size} plans")
     } finally graft.streaming.Streaming.planSink = null
     Files.write(Paths.get(outDir, "exchanges.tsv"),
-      ("query\texchanges\treused_exchanges\tround_robin" +: tally.result()).asJava)
+      ("query\texchanges\treused_exchanges\tround_robin\tshuffle_bytes" +:
+        tally.result()).asJava)
     println(s"[plan-dump] wrote ${names.size} queries to $outDir")
     spark.stop()
   }

@@ -34,7 +34,7 @@ class JoinPinAuditSpec extends SparkTestBase {
     *           sort/build on the hottest exchange of the lane for a flip
     *           class that cannot trigger (r12 analysis, judge-endorsed).
     *  [domain] deliberate broadcast of a grouped aggregate whose key
-    *           domain is bounded (sources, labels): row count is
+    *           domain is bounded (sources, labels, terms): row count is
     *           |domain|, invisible to maxRows.
     *  [batch]  deliberate broadcast of an operator-contract-bounded
     *           side (anchor set / query batch selected by predicate).
@@ -58,6 +58,8 @@ class JoinPinAuditSpec extends SparkTestBase {
       "[domain] per-source token-budget table broadcast"),
     "q_sim_label_coherence" -> Allowed(1,
       "[domain] per-label centroid table broadcast"),
+    "q_tfidf_top" -> Allowed(1,
+      "[domain] per-term df table broadcast, one row per vocabulary term"),
     "q_negative_sample" -> Allowed(1,
       "[batch] anchor set bounded by the anchorPred operator contract"),
     "q_sim_batch_topk" -> Allowed(1,

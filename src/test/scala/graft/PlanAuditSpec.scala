@@ -54,4 +54,24 @@ class PlanAuditSpec extends SparkTestBase {
     assert(graft.tools.PlanDump.exchangeCounts(
       df.queryExecution.executedPlan.toString) == ((2, 0, 1)))
   }
+
+  test("PlanDump sums the bytes of each shuffle stage once") {
+    import org.apache.spark.sql.functions.col
+    import graft.tools.PlanDump.shuffleBytes
+    val narrow = spark.range(0, 100, 1, 2).filter(col("id") > 3)
+    narrow.collect()
+    assert(shuffleBytes(narrow.queryExecution.executedPlan) == 0L)
+    val once = spark.range(0, 1000, 1, 2).repartition(3, col("id"))
+      .groupBy((col("id") % 5).as("k")).count()
+    once.collect()
+    val bytes = shuffleBytes(once.queryExecution.executedPlan)
+    assert(bytes > 0L)
+    // the second branch reads both stages of the first as a reused
+    // exchange, so the plan writes what `once` wrote
+    val twice = once.union(once)
+    twice.collect()
+    val plan = twice.queryExecution.executedPlan
+    assert(plan.toString.contains("ReusedExchange"), plan)
+    assert(shuffleBytes(plan) == bytes)
+  }
 }

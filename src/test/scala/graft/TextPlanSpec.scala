@@ -2,6 +2,14 @@ package graft
 
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.expressions.Window
+import org.apache.spark.sql.catalyst.expressions.aggregate.{Final, Partial}
+import org.apache.spark.sql.catalyst.plans.physical.{HashPartitioning, RangePartitioning}
+import org.apache.spark.sql.execution.{FilterExec, GenerateExec, InputAdapter, SparkPlan}
+import org.apache.spark.sql.execution.adaptive.QueryStageExec
+import org.apache.spark.sql.execution.aggregate.BaseAggregateExec
+import org.apache.spark.sql.execution.exchange.{Exchange, ReusedExchangeExec, ShuffleExchangeExec}
+import org.apache.spark.sql.execution.joins.BroadcastHashJoinExec
+import org.apache.spark.sql.execution.window.WindowExec
 import org.apache.spark.sql.functions._
 
 /** Pins the shape of the text lanes' vocabulary statistics.
@@ -17,11 +25,13 @@ import org.apache.spark.sql.functions._
   * broadcast-free shape; this spec fails if a hint is dropped or the
   * planner stops honoring it.
   *
-  * `Text.tfidfTopOf` and `Search.bm25Of` join nothing row-scale at all
-  * (single-pass shapes): they are pinned as no-join plans with one
-  * tokenize pass. tfidf's tf rows, counted in-row by `term_counts`,
-  * cross one exchange on the term before the per-doc top-k window,
-  * whether the input is one file or many.
+  * `Text.tfidfTopOf` and `Search.bm25Of` join nothing row-scale at all.
+  * bm25 is pinned as a no-join plan with one tokenize pass. tfidf ships
+  * no tf row: the raw rows cross one `doc_id` exchange that merges each
+  * doc, tf is counted in place above it by `term_counts`, and df is a
+  * vocabulary-sized aggregate broadcast back — pinned whether the input
+  * is one file or many, with its rows checked against the former join
+  * shape and across one-file, many-file and spread inputs.
   */
 class TextPlanSpec extends SparkTestBase {
 
@@ -32,41 +42,99 @@ class TextPlanSpec extends SparkTestBase {
     df.queryExecution.executedPlan.toString
   }
 
-  test("tfidf shuffles its tf rows once, by term") {
-    // tf leaves the map side as one (w, tf) row per distinct term of a
-    // row (term_counts), is shuffled once by w, and both the per-doc
-    // merge groupBy(w, doc_id) and the df window sit on that
-    // partitioning; N is a 1-row broadcast. So the AQE-final plan has one
-    // explode, exactly one exchange on hashpartitioning(w) alone, none
-    // on (doc_id, w), no spread of the raw text, no row-scale join and no
-    // pinned checkpoint scan — over a one-file table and over a
-    // many-file copy of it alike.
-    def check(label: String, docs: DataFrame): Unit = {
-      val p = finalPlan(graft.ops.Text.tfidfTopOf(docs, 3))
-        .split("== Initial Plan ==").head
-      assert(!p.contains("SortMergeJoin") && !p.contains("ShuffledHashJoin") &&
-        !p.contains("BroadcastHashJoin"),
-        s"$label: tfidf must not join row-scale sides at all:\n$p")
-      val tokenizes = "Generate explode".r.findAllIn(p).size
-      assert(tokenizes == 1,
-        s"$label: expected exactly one tokenize pass, got $tokenizes:\n$p")
-      val byTerm = "Exchange hashpartitioning\\(w#\\d+, \\d+\\)".r.findAllIn(p).size
-      assert(byTerm == 1,
-        s"$label: expected one exchange on w alone, got $byTerm:\n$p")
-      assert("hashpartitioning\\((doc_id#\\d+L?, w#|w#\\d+, doc_id#)".r
-        .findFirstIn(p).isEmpty, s"$label: tf shuffled on (doc_id, w):\n$p")
-      assert(!p.contains("REPARTITION_BY_NUM"), s"$label: raw text spread:\n$p")
-      assert(!p.contains("Scan ExistingRDD"), s"$label: nothing may be pinned:\n$p")
-    }
-    check("one file", Tables.documents(spark, dir))
+  /** The nodes of one stage: `p` and its subtree down to, not into, the
+    * next stage boundary.
+    */
+  private def within(p: SparkPlan): Seq[SparkPlan] = p match {
+    case _: QueryStageExec | _: Exchange | _: ReusedExchangeExec => Nil
+    case _ => p +: p.children.flatMap(within)
+  }
+
+  /** `body` over an 8-file parquet copy of the sf0.001 documents. */
+  private def withEightFiles(body: DataFrame => Unit): Unit = {
     val copy = java.nio.file.Files.createTempDirectory("graft-tfidf-split").toString
     try {
       Tables.documents(spark, dir).repartition(8)
         .write.mode("overwrite").parquet(copy)
       val many = spark.read.parquet(copy)
       assert(many.rdd.getNumPartitions > 1)
-      check("8 files", many)
+      body(many)
     } finally org.apache.commons.io.FileUtils.deleteDirectory(new java.io.File(copy))
+  }
+
+  test("tfidf ships no tf row: one doc_id exchange, df broadcast back") {
+    // The raw (doc_id, text) rows cross one hash exchange on doc_id, under
+    // the collect_list merge; tf is tokenized above it and never shipped.
+    // df (with N as the df of "") is the one other hash exchange, on w
+    // over partial_count, and its final aggregate is the build side of
+    // the one BroadcastHashJoin. The sort ships only the top-k rows. One
+    // scan, no spread, no pinned checkpoint scan — over a one-file table
+    // and over a many-file copy of it alike.
+    def check(label: String, docs: DataFrame): Unit = {
+      val df = graft.ops.Text.tfidfTopOf(docs, 3)
+      val p = finalPlan(df).split("== Initial Plan ==").head
+      val plan = graft.tools.PlanDump.nodes(df.queryExecution.executedPlan)
+      val shuffles = plan.collect { case e: ShuffleExchangeExec => e }.distinctBy(_.id)
+      def mapSide(e: SparkPlan) = within(e.children.head)
+      def partialOn(e: SparkPlan, fn: String) = mapSide(e).exists {
+        case a: BaseAggregateExec => a.aggregateExpressions
+          .exists(x => x.mode == Partial && x.aggregateFunction.prettyName == fn)
+        case _ => false
+      }
+      def keyedOn(e: ShuffleExchangeExec, c: String) = e.outputPartitioning match {
+        case h: HashPartitioning => h.expressions.map(_.references.head.name) == Seq(c)
+        case _ => false
+      }
+      val byDoc = shuffles.filter(keyedOn(_, "doc_id"))
+      assert(byDoc.size == 1 && partialOn(byDoc.head, "collect_list"),
+        s"$label: expected one doc_id exchange under the collect_list merge:\n$p")
+      val byTerm = shuffles.filter(keyedOn(_, "w"))
+      assert(byTerm.size == 1 && partialOn(byTerm.head, "count"),
+        s"$label: expected one w exchange over partial_count:\n$p")
+      // no tokens below any other exchange; the final sort ships only
+      // the rows that pass the top-k filter over the per-doc window
+      for (e <- shuffles if !byTerm.contains(e)) e.outputPartitioning match {
+        case _: RangePartitioning => assert(mapSide(e).exists {
+          case f: FilterExec => (f.child match {
+            case a: InputAdapter => a.child
+            case c => c
+          }).isInstanceOf[WindowExec]
+          case _ => false
+        }, s"$label: the sort must sit on the top-k filter:\n$p")
+        case h: HashPartitioning if !byDoc.contains(e) =>
+          fail(s"$label: a third hash exchange, $h:\n$p")
+        case _ => assert(!mapSide(e).exists(_.isInstanceOf[GenerateExec]),
+          s"$label: tokens shipped below ${e.outputPartitioning}:\n$p")
+      }
+      val bhj = plan.collect { case j: BroadcastHashJoinExec => j }
+      assert(bhj.size == 1, s"$label: expected one BroadcastHashJoin:\n$p")
+      val build = bhj.head.buildSide match {
+        case org.apache.spark.sql.catalyst.optimizer.BuildLeft => bhj.head.left
+        case _ => bhj.head.right
+      }
+      assert((graft.tools.PlanDump.nodes(build).collectFirst { case a: BaseAggregateExec => a } match {
+        case Some(a) => a.groupingExpressions.map(_.references.head.name) == Seq("w") &&
+          a.aggregateExpressions.map(x => (x.mode, x.aggregateFunction.prettyName)) ==
+            Seq((Final, "count"))
+        case None => false
+      }), s"$label: the broadcast side must be the df aggregate:\n$p")
+      assert(!p.contains("SortMergeJoin") && !p.contains("ShuffledHashJoin"),
+        s"$label: tfidf must not join row-scale sides:\n$p")
+      assert("FileScan".r.findAllIn(p).size == 1, s"$label: expected one scan:\n$p")
+      assert(!p.contains("REPARTITION_BY_NUM"), s"$label: raw text spread:\n$p")
+      assert(!p.contains("Scan ExistingRDD"), s"$label: nothing may be pinned:\n$p")
+    }
+    check("one file", Tables.documents(spark, dir))
+    withEightFiles(many => check("8 files", many))
+  }
+
+  test("tfidf rows do not depend on how the table is split or spread") {
+    val want = graft.ops.Text.tfidfTopOf(Tables.documents(spark, dir), 3).collect().toSeq
+    assert(want.nonEmpty)
+    assert(graft.ops.Text.tfidfTopOf(Tables.documentsSpread(spark, dir), 3)
+      .collect().toSeq == want, "documentsSpread")
+    withEightFiles(many =>
+      assert(graft.ops.Text.tfidfTopOf(many, 3).collect().toSeq == want, "8 files"))
   }
 
   test("tfidf rows equal the tf-df join shape on blank, null and repeated docs") {
